@@ -297,9 +297,16 @@ object Bench {
     // Full-suite runs own bench/medians_latest.json; a FILTERED ad-hoc
     // run must not overwrite the suite record it would otherwise clobber
     // (r10/r11 operational pitfall — required a manual git checkout).
-    if (args.isEmpty) writeRecordFile(results, iters, sfDir, canaries, cal,
-      cpus = cpus.toInt)
-    else writeRecordFile(results, iters, sfDir, canaries, cal,
+    if (args.isEmpty) {
+      val out = writeRecordFile(results, iters, sfDir, canaries, cal, cpus = cpus.toInt)
+      // per-core-count twin alongside the default record file: a later
+      // run at a DIFFERENT core count overwrites medians_latest.json but
+      // never the 32-core record (bench/medians_c32.json survives). Only
+      // the full suite writes it, so a filtered run can never clobber it.
+      if (out.endsWith("medians_latest.json"))
+        writeRecordFile(results, iters, sfDir, canaries, cal,
+          out = out.replace("medians_latest.json", s"medians_c$cpus.json"), cpus = cpus.toInt)
+    } else writeRecordFile(results, iters, sfDir, canaries, cal,
       out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench_filtered.json"),
       cpus = cpus.toInt)
     println(s"""{"bench_calibration":{"pre":{"codegen_fold":${f(calPre._1)},"jvm_spin":${f(calPre._2)}},"post":{"codegen_fold":${f(calPost._1)},"jvm_spin":${f(calPost._2)}}}}""")
@@ -311,13 +318,14 @@ object Bench {
     * tail capture (~2.2 KB) has truncated the 126-median summary line six
     * rounds running (BENCH_r04–r09 `"parsed": null`); the stdout lines
     * stay as a courtesy, the FILE is the record of record. One line per
-    * query so diffs and partial reads stay meaningful. */
+    * query so diffs and partial reads stay meaningful. Returns the path
+    * written. */
   def writeRecordFile(results: Seq[QueryResult], iters: Int, sfDir: String,
                       canaries: Seq[QueryResult] = Seq.empty,
                       calibration: Option[((Double, Double), (Double, Double))] = None,
                       out: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
                         "/root/repo/bench/medians_latest.json"),
-                      cpus: Int = -1): Unit = {
+                      cpus: Int = -1): String = {
     val rows = results.map { r =>
       val err = r.err.map(e => s""","err":${jstr(e)},"err_count":${r.errCount}""").getOrElse("")
       val samples = r.samples.map(f).mkString("[", ",", "]")
@@ -349,17 +357,10 @@ object Bench {
          |"queries":{
          |${rows.mkString(",\n")}
          |}}""".stripMargin
-    def write(path: String): Unit = {
-      val p = java.nio.file.Paths.get(path)
-      Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.writeString(p, json)
-      println(s"""{"bench_record_file":${jstr(path)}}""")
-    }
-    write(out)
-    // per-core-count twin alongside the default record file: a later
-    // run at a DIFFERENT core count overwrites medians_latest.json but
-    // never the 32-core record (bench/medians_c32.json survives)
-    if (cpus > 0 && out.endsWith("medians_latest.json"))
-      write(out.replace("medians_latest.json", s"medians_c$cpus.json"))
+    val p = java.nio.file.Paths.get(out)
+    Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
+    java.nio.file.Files.writeString(p, json)
+    println(s"""{"bench_record_file":${jstr(out)}}""")
+    out
   }
 }

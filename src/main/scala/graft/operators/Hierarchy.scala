@@ -67,11 +67,15 @@ object Hierarchy {
     // plan recomputed it once per consumer (a 600k-row lineitem
     // aggregate twice on q_hierarchy; a persist barrier was measured
     // WORSE both rounds — the cache fill serializes the two branches).
-    // Instead each value row carries its ancestor SET (≤ maxDepth
-    // entries, collect_set collapses DAG diamonds exactly like the old
-    // reach.distinct) and explodes into one contribution per ancestor
-    // plus itself — the value aggregate sits under exactly one plan
-    // subtree, so it computes once with no barrier.
+    // Instead each value row carries its ancestor SET (the distinct
+    // ancestors within maxDepth hops; collect_set collapses DAG diamonds
+    // exactly like the old reach.distinct) and explodes into one
+    // contribution per ancestor plus itself — the value aggregate sits
+    // under exactly one plan subtree, so it computes once with no
+    // barrier. Per-node buffer bound: with at most p parents per node,
+    // the set holds ≤ min(N − 1, p + p² + … + p^maxDepth) entries for N
+    // nodes — ≤ maxDepth on a tree (p = 1), but not bounded by maxDepth
+    // alone on a wide DAG.
     val anc = cl.groupBy(col("node"))
       .agg(collect_set(col("ancestor")).as("__ups"))
     v.join(anc, Seq("node"), "left")

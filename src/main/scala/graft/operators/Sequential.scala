@@ -15,7 +15,8 @@ import graft.ts.{Tick, TickStream}
   * sortWithinPartitions(key, ts, seq) → mapPartitions` with per-key state
   * reset on key change. Linear work, spill-safe (Spark's sort is
   * external), scales to any number of keys — this is exactly the batch
-  * twin of the `transformWithState` streaming lowering (SURVEY §2.9).
+  * twin of the streaming lowering, one per-key fold on
+  * `transformWithState` (`streaming.TwsOps.FoldProcessor`, SURVEY §2.9).
   */
 object Sequential {
   import Tick._
@@ -362,8 +363,8 @@ object Sequential {
     * prior ticks' outputs, never its own. In batch that is precisely a
     * per-key ordered scan whose state is the previous cycle's output:
     * `prev` is passed to `step`, and `step`'s result becomes the next
-    * `prev`. (Streaming twin: state in flatMapGroupsWithState —
-    * StatefulOps.) This closes csp's only graph-cycle construct with no
+    * `prev`. (Streaming twin: `StatefulOps.Steps.feedback`, its state
+    * carried by the per-key fold.) This closes csp's only graph-cycle construct with no
     * DAG cycle in Spark (SURVEY §7.5 hard-part 1).
     */
   def feedback(x: TickStream, as: String = "fb", init: Double = Double.NaN)(

@@ -1,10 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Live twin of [[graft.operators.Behavior.funnel]]: a per-user funnel
-  * state machine over `flatMapGroupsWithState` — the realtime "has this
+  * state machine over [[TwsOps.foldByKey]] — the realtime "has this
   * user converted yet" readout, emitting one row the moment a user
   * advances a step.
   *
@@ -29,30 +29,28 @@ object BehaviorStream {
     implicit val keyEnc = Encoders.scalaLong
     val stepIdx = steps.zipWithIndex.toMap
     val deadline = windowSec * 1000000L
-    events.groupByKey(_.user)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[FunnelEvent], state: org.apache.spark.sql.streaming.GroupState[FunnelState]) =>
-          var st = state.getOption.getOrElse(FunnelState(-1, 0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer[FunnelAdvance]()
-          it.toSeq
-            .filter(e => stepIdx.contains(e.step))
-            .sortBy(e => (e.tsMicros, stepIdx(e.step)))
-            .foreach { e =>
-              val next = st.stage + 1
-              if (next < steps.length && e.step == steps(next)) {
-                val qualifies =
-                  if (st.stage < 0) true
-                  else e.tsMicros >= st.tPrev && e.tsMicros <= st.t1 + deadline
-                if (qualifies) {
-                  val t1 = if (st.stage < 0) e.tsMicros else st.t1
-                  st = FunnelState(next, t1, e.tsMicros)
-                  out += FunnelAdvance(user, next, e.tsMicros, e.tsMicros - t1)
-                }
+    TwsOps.foldByKey(events, (_: FunnelEvent).user, OutputMode.Append()) {
+      (user: Long, it: Iterator[FunnelEvent], prev: Option[FunnelState]) =>
+        var st = prev.getOrElse(FunnelState(-1, 0L, 0L))
+        val out = scala.collection.mutable.ArrayBuffer[FunnelAdvance]()
+        it.toSeq
+          .filter(e => stepIdx.contains(e.step))
+          .sortBy(e => (e.tsMicros, stepIdx(e.step)))
+          .foreach { e =>
+            val next = st.stage + 1
+            if (next < steps.length && e.step == steps(next)) {
+              val qualifies =
+                if (st.stage < 0) true
+                else e.tsMicros >= st.tPrev && e.tsMicros <= st.t1 + deadline
+              if (qualifies) {
+                val t1 = if (st.stage < 0) e.tsMicros else st.t1
+                st = FunnelState(next, t1, e.tsMicros)
+                out += FunnelAdvance(user, next, e.tsMicros, e.tsMicros - t1)
               }
             }
-          state.update(st)
-          out.iterator
-      }
+          }
+        (Some(st), out.iterator)
+    }
   }
 
   /** Live RFM leaderboard — the streaming boundary refresh for the

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Live twins of [[graft.operators.ChangePoint]]'s online detectors —
   * csp's natural shape for them: CUSUM and Page–Hinkley are
@@ -72,33 +72,29 @@ object ChangePointStream {
       b.setScale(4, BigDecimal.RoundingMode.HALF_UP)
         .bigDecimal.unscaledValue().longValueExact()
     val upQ = q(mu0 + k); val dnQ = q(mu0 - k); val hQ = q(h)
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[CpEvent],
-         state: org.apache.spark.sql.streaming.GroupState[CpState]) =>
-          var st = state.getOption.getOrElse(
-            CpState(0L, 0L, 0L, 0L, 0L, 0L, 0L, None, None, Long.MinValue))
-          it.toSeq.sortBy(_.tsMicros).foreach { e =>
-            checkInOrder("cusumStream", key, e.tsMicros, st.lastTs)
-            val xq = quant4(e.value)
-            val cp = Math.addExact(st.cp, xq - upQ)
-            val cpMin = math.min(st.cpMin, cp) // min over prefix, floored at 0 (cpMin starts 0)
-            val sp = cp - math.min(0L, cpMin)
-            val cn = Math.addExact(st.cn, dnQ - xq)
-            val cnMin = math.min(st.cnMin, cn)
-            val sn = cn - math.min(0L, cnMin)
-            st = CpState(st.n + 1, cp, cpMin, cn, cnMin,
-              math.max(st.spMax, sp), math.max(st.snMax, sn),
-              st.alarmPos.orElse(if (sp > hQ) Some(e.tsMicros) else None),
-              st.alarmNeg.orElse(if (sn > hQ) Some(e.tsMicros) else None),
-              e.tsMicros)
-          }
-          state.update(st)
-          if (st.n == 0L) Iterator.empty
-          else Iterator.single(CpReadout(key, st.n,
-            st.spMax.toDouble / 10000.0, st.snMax.toDouble / 10000.0,
-            st.alarmPos, st.alarmNeg))
-      }
+    TwsOps.foldByKey(events, (_: CpEvent).key, OutputMode.Update()) {
+      (key: String, it: Iterator[CpEvent], prev: Option[CpState]) =>
+        var st = prev.getOrElse(
+          CpState(0L, 0L, 0L, 0L, 0L, 0L, 0L, None, None, Long.MinValue))
+        it.toSeq.sortBy(_.tsMicros).foreach { e =>
+          checkInOrder("cusumStream", key, e.tsMicros, st.lastTs)
+          val xq = quant4(e.value)
+          val cp = Math.addExact(st.cp, xq - upQ)
+          val cpMin = math.min(st.cpMin, cp) // min over prefix, floored at 0 (cpMin starts 0)
+          val sp = cp - math.min(0L, cpMin)
+          val cn = Math.addExact(st.cn, dnQ - xq)
+          val cnMin = math.min(st.cnMin, cn)
+          val sn = cn - math.min(0L, cnMin)
+          st = CpState(st.n + 1, cp, cpMin, cn, cnMin,
+            math.max(st.spMax, sp), math.max(st.snMax, sn),
+            st.alarmPos.orElse(if (sp > hQ) Some(e.tsMicros) else None),
+            st.alarmNeg.orElse(if (sn > hQ) Some(e.tsMicros) else None),
+            e.tsMicros)
+        }
+        (Some(st), Iterator.single(CpReadout(key, st.n,
+          st.spMax.toDouble / 10000.0, st.snMax.toDouble / 10000.0,
+          st.alarmPos, st.alarmNeg)))
+    }
   }
 
   case class BcEvent(key: String, tsMicros: Long, x: Int)
@@ -123,32 +119,28 @@ object ChangePointStream {
     implicit val stEnc = Encoders.product[BcState]
     implicit val outEnc = Encoders.product[BcReadout]
     implicit val keyEnc = Encoders.STRING
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[BcEvent],
-         state: org.apache.spark.sql.streaming.GroupState[BcState]) =>
-          var st = state.getOption.getOrElse(
-            BcState(List(1.0), List(0), Long.MinValue))
-          var probs = st.probs.toArray
-          var succ = st.succ.toArray
-          var lastTs = st.lastTs
-          val out = scala.collection.mutable.ArrayBuffer.empty[BcReadout]
-          it.toSeq.sortBy(_.tsMicros).foreach { e =>
-            checkInOrder("bocpdStream", key, e.tsMicros, lastTs)
-            require(e.x == 0 || e.x == 1,
-              s"bocpdStream: x must be 0/1, got ${e.x}")
-            require(probs.length <= maxPoints,
-              s"bocpdStream: key $key exceeds maxPoints=$maxPoints events - " +
-                "pre-aggregate the stream into block indicators")
-            val (np, ns) = graft.operators.ChangePoint.bocpdStep(
-              probs, succ, e.x, hazard)
-            probs = np; succ = ns; lastTs = e.tsMicros
-            out += BcReadout(key, e.tsMicros,
-              graft.operators.ChangePoint.argmaxFirst(probs).toLong, probs(0))
-          }
-          state.update(BcState(probs.toList, succ.toList, lastTs))
-          out.iterator
-      }
+    TwsOps.foldByKey(events, (_: BcEvent).key, OutputMode.Append()) {
+      (key: String, it: Iterator[BcEvent], prev: Option[BcState]) =>
+        val st = prev.getOrElse(BcState(List(1.0), List(0), Long.MinValue))
+        var probs = st.probs.toArray
+        var succ = st.succ.toArray
+        var lastTs = st.lastTs
+        val out = scala.collection.mutable.ArrayBuffer.empty[BcReadout]
+        it.toSeq.sortBy(_.tsMicros).foreach { e =>
+          checkInOrder("bocpdStream", key, e.tsMicros, lastTs)
+          require(e.x == 0 || e.x == 1,
+            s"bocpdStream: x must be 0/1, got ${e.x}")
+          require(probs.length <= maxPoints,
+            s"bocpdStream: key $key exceeds maxPoints=$maxPoints events - " +
+              "pre-aggregate the stream into block indicators")
+          val (np, ns) = graft.operators.ChangePoint.bocpdStep(
+            probs, succ, e.x, hazard)
+          probs = np; succ = ns; lastTs = e.tsMicros
+          out += BcReadout(key, e.tsMicros,
+            graft.operators.ChangePoint.argmaxFirst(probs).toLong, probs(0))
+        }
+        (Some(BcState(probs.toList, succ.toList, lastTs)), out.iterator)
+    }
   }
 
   case class GaEvent(key: String, tsMicros: Long, x: Double)
@@ -180,36 +172,32 @@ object ChangePointStream {
     implicit val stEnc = Encoders.product[GaState]
     implicit val outEnc = Encoders.product[GaReadout]
     implicit val keyEnc = Encoders.STRING
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[GaEvent],
-         state: org.apache.spark.sql.streaming.GroupState[GaState]) =>
-          val gs = graft.operators.ChangePoint.gammaRatios(
-            prior.nu0 + maxPoints + 1)
-          var st = state.getOption.getOrElse(
-            GaState(List(1.0), List(prior.mu0), List(prior.beta0),
-              Long.MinValue))
-          var probs = st.probs.toArray
-          var mu = st.mu.toArray
-          var beta = st.beta.toArray
-          var lastTs = st.lastTs
-          val out = scala.collection.mutable.ArrayBuffer.empty[GaReadout]
-          it.toSeq.sortBy(_.tsMicros).foreach { e =>
-            checkInOrder("bocpdGaussianStream", key, e.tsMicros, lastTs)
-            require(java.lang.Double.isFinite(e.x),
-              s"bocpdGaussianStream: non-finite metric ${e.x}")
-            require(probs.length <= maxPoints,
-              s"bocpdGaussianStream: key $key exceeds maxPoints=$maxPoints " +
-                "events - pre-aggregate the stream into block means")
-            val (np, nm, nb) = graft.operators.ChangePoint.bocpdGaussianStep(
-              probs, mu, beta, e.x, hazard, prior, gs)
-            probs = np; mu = nm; beta = nb; lastTs = e.tsMicros
-            val m = graft.operators.ChangePoint.argmaxFirst(probs)
-            out += GaReadout(key, e.tsMicros, m.toLong, probs(0), mu(m))
-          }
-          state.update(GaState(probs.toList, mu.toList, beta.toList, lastTs))
-          out.iterator
-      }
+    TwsOps.foldByKey(events, (_: GaEvent).key, OutputMode.Append()) {
+      (key: String, it: Iterator[GaEvent], prev: Option[GaState]) =>
+        val gs = graft.operators.ChangePoint.gammaRatios(
+          prior.nu0 + maxPoints + 1)
+        val st = prev.getOrElse(
+          GaState(List(1.0), List(prior.mu0), List(prior.beta0), Long.MinValue))
+        var probs = st.probs.toArray
+        var mu = st.mu.toArray
+        var beta = st.beta.toArray
+        var lastTs = st.lastTs
+        val out = scala.collection.mutable.ArrayBuffer.empty[GaReadout]
+        it.toSeq.sortBy(_.tsMicros).foreach { e =>
+          checkInOrder("bocpdGaussianStream", key, e.tsMicros, lastTs)
+          require(java.lang.Double.isFinite(e.x),
+            s"bocpdGaussianStream: non-finite metric ${e.x}")
+          require(probs.length <= maxPoints,
+            s"bocpdGaussianStream: key $key exceeds maxPoints=$maxPoints " +
+              "events - pre-aggregate the stream into block means")
+          val (np, nm, nb) = graft.operators.ChangePoint.bocpdGaussianStep(
+            probs, mu, beta, e.x, hazard, prior, gs)
+          probs = np; mu = nm; beta = nb; lastTs = e.tsMicros
+          val m = graft.operators.ChangePoint.argmaxFirst(probs)
+          out += GaReadout(key, e.tsMicros, m.toLong, probs(0), mu(m))
+        }
+        (Some(GaState(probs.toList, mu.toList, beta.toList, lastTs)), out.iterator)
+    }
   }
 
   case class PhState(n: Long, sum: Double, m: Double, mMin: Double, mMax: Double,
@@ -228,36 +216,32 @@ object ChangePointStream {
     implicit val stEnc = Encoders.product[PhState]
     implicit val outEnc = Encoders.product[PhReadout]
     implicit val keyEnc = Encoders.STRING
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[CpEvent],
-         state: org.apache.spark.sql.streaming.GroupState[PhState]) =>
-          var st = state.getOption.getOrElse(
-            PhState(0L, 0.0, 0.0, Double.MaxValue, Double.MinValue,
-              Double.MinValue, Double.MinValue, None, None, Long.MinValue))
-          it.toSeq.sortBy(_.tsMicros).foreach { e =>
-            checkInOrder("pageHinkleyStream", key, e.tsMicros, st.lastTs)
-            // EXACTLY pageHinkleyBy's window chain, in its fold order:
-            // running sum → mean → term = (x − x̄) − δ → running m →
-            // inc/dec against m's running extremes INCLUDING this row
-            val n1 = st.n + 1
-            val sum1 = st.sum + e.value
-            val xbar = sum1 / n1.toDouble
-            val m1 = st.m + ((e.value - xbar) - delta)
-            val mMin1 = math.min(st.mMin, m1)
-            val mMax1 = math.max(st.mMax, m1)
-            val inc = m1 - mMin1
-            val dec = mMax1 - m1
-            st = PhState(n1, sum1, m1, mMin1, mMax1,
-              math.max(st.incMax, inc), math.max(st.decMax, dec),
-              st.alarmInc.orElse(if (inc > lambda) Some(e.tsMicros) else None),
-              st.alarmDec.orElse(if (dec > lambda) Some(e.tsMicros) else None),
-              e.tsMicros)
-          }
-          state.update(st)
-          if (st.n == 0L) Iterator.empty
-          else Iterator.single(PhReadout(key, st.n, st.incMax, st.decMax,
-            st.alarmInc, st.alarmDec))
-      }
+    TwsOps.foldByKey(events, (_: CpEvent).key, OutputMode.Update()) {
+      (key: String, it: Iterator[CpEvent], prev: Option[PhState]) =>
+        var st = prev.getOrElse(
+          PhState(0L, 0.0, 0.0, Double.MaxValue, Double.MinValue,
+            Double.MinValue, Double.MinValue, None, None, Long.MinValue))
+        it.toSeq.sortBy(_.tsMicros).foreach { e =>
+          checkInOrder("pageHinkleyStream", key, e.tsMicros, st.lastTs)
+          // EXACTLY pageHinkleyBy's window chain, in its fold order:
+          // running sum → mean → term = (x − x̄) − δ → running m →
+          // inc/dec against m's running extremes INCLUDING this row
+          val n1 = st.n + 1
+          val sum1 = st.sum + e.value
+          val xbar = sum1 / n1.toDouble
+          val m1 = st.m + ((e.value - xbar) - delta)
+          val mMin1 = math.min(st.mMin, m1)
+          val mMax1 = math.max(st.mMax, m1)
+          val inc = m1 - mMin1
+          val dec = mMax1 - m1
+          st = PhState(n1, sum1, m1, mMin1, mMax1,
+            math.max(st.incMax, inc), math.max(st.decMax, dec),
+            st.alarmInc.orElse(if (inc > lambda) Some(e.tsMicros) else None),
+            st.alarmDec.orElse(if (dec > lambda) Some(e.tsMicros) else None),
+            e.tsMicros)
+        }
+        (Some(st), Iterator.single(PhReadout(key, st.n, st.incMax, st.decMax,
+          st.alarmInc, st.alarmDec)))
+    }
   }
 }

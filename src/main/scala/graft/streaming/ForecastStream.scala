@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Live twin of [[graft.operators.Forecast.holtWinters]] — triple
   * exponential smoothing IS an online recurrence (level/trend/seasonal
@@ -27,41 +27,38 @@ object ForecastStream {
     implicit val stEnc = Encoders.product[HwState]
     implicit val outEnc = Encoders.product[HwReadout]
     implicit val keyEnc = Encoders.scalaLong
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[HwEvent],
-         state: org.apache.spark.sql.streaming.GroupState[HwState]) =>
-          val prev = state.getOption.getOrElse(
-            HwState(0.0, 0.0, List.fill(period)(0.0), 0L, Long.MinValue))
-          require(prev.s.length == period,
-            s"holtWintersStream: restored seasonal state has period " +
-              s"${prev.s.length} but the query was built with $period - " +
-              "a restarted query must keep its period (or start a fresh " +
-              "checkpoint)")
-          var l = prev.l; var b = prev.b; var t = prev.t
-          val s = prev.s.toArray
-          var lastTs = prev.lastTs
-          val out = scala.collection.mutable.ArrayBuffer.empty[HwReadout]
-          it.toSeq.sortBy(_.tsMicros).foreach { e =>
-            ChangePointStream.checkInOrder("holtWintersStream", key.toString,
-              e.tsMicros, lastTs)
-            require(java.lang.Double.isFinite(e.y),
-              s"holtWintersStream: non-finite metric ${e.y}")
-            lastTs = e.tsMicros
-            if (t == 0L) {
-              // flat deterministic init, exactly the batch arm's
-              l = e.y; b = 0.0
-              out += HwReadout(key, 0L, e.y, None, l, b)
-            } else {
-              val (fitted, lNew, bNew) = graft.operators.Forecast.hwStep(
-                l, b, s, (t % period).toInt, e.y, alpha, beta, gamma)
-              l = lNew; b = bNew
-              out += HwReadout(key, t, e.y, Some(fitted), l, b)
-            }
-            t += 1
+    TwsOps.foldByKey(events, (_: HwEvent).key, OutputMode.Append()) {
+      (key: Long, it: Iterator[HwEvent], st: Option[HwState]) =>
+        val prev = st.getOrElse(
+          HwState(0.0, 0.0, List.fill(period)(0.0), 0L, Long.MinValue))
+        require(prev.s.length == period,
+          s"holtWintersStream: restored seasonal state has period " +
+            s"${prev.s.length} but the query was built with $period - " +
+            "a restarted query must keep its period (or start a fresh " +
+            "checkpoint)")
+        var l = prev.l; var b = prev.b; var t = prev.t
+        val s = prev.s.toArray
+        var lastTs = prev.lastTs
+        val out = scala.collection.mutable.ArrayBuffer.empty[HwReadout]
+        it.toSeq.sortBy(_.tsMicros).foreach { e =>
+          ChangePointStream.checkInOrder("holtWintersStream", key.toString,
+            e.tsMicros, lastTs)
+          require(java.lang.Double.isFinite(e.y),
+            s"holtWintersStream: non-finite metric ${e.y}")
+          lastTs = e.tsMicros
+          if (t == 0L) {
+            // flat deterministic init, exactly the batch arm's
+            l = e.y; b = 0.0
+            out += HwReadout(key, 0L, e.y, None, l, b)
+          } else {
+            val (fitted, lNew, bNew) = graft.operators.Forecast.hwStep(
+              l, b, s, (t % period).toInt, e.y, alpha, beta, gamma)
+            l = lNew; b = bNew
+            out += HwReadout(key, t, e.y, Some(fitted), l, b)
           }
-          state.update(HwState(l, b, s.toList, t, lastTs))
-          out.iterator
-      }
+          t += 1
+        }
+        (Some(HwState(l, b, s.toList, t, lastTs)), out.iterator)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.operators.MatrixProfile
 
@@ -42,44 +42,40 @@ object MatrixProfileStream {
       "trivially match themselves (the exclusion-zone contract)")
     implicit val stEnc = Encoders.product[MpStreamState]
     implicit val keyEnc = Encoders.STRING
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[MpEvent],
-         state: org.apache.spark.sql.streaming.GroupState[MpStreamState]) =>
-          val prev = state.getOption.getOrElse(
-            MpStreamState(Nil, Nil, 0L, Long.MinValue))
-          // rebuild the modular rings at their absolute positions, then
-          // recompute the derived sums exactly from them
-          val st = new MatrixProfile.MpState(w, lag, band)
-          st.n = prev.n - prev.pts.length
-          prev.pts.foreach { q => st.put(st.n, q); st.n += 1 }
-          var tsIdx = prev.n - prev.tss.length
-          prev.tss.foreach { t => st.putTs(tsIdx, t); tsIdx += 1 }
-          st.recomputeDerived()
-          var lastTs = prev.lastTs
-          val out = scala.collection.mutable.ArrayBuffer.empty[O]
-          it.toSeq.sortBy(_.tsMicros).foreach { e =>
-            ChangePointStream.checkInOrder(opName, key, e.tsMicros, lastTs)
-            require(java.lang.Double.isFinite(e.x),
-              s"$opName: non-finite metric ${e.x}")
-            lastTs = e.tsMicros
-            val res = MatrixProfile.mpStep(st, ChangePointStream.quant4(e.x),
-              java.lang.Long.valueOf(e.tsMicros), zNorm)
-            if (res != null) {
-              val i = res(0).asInstanceOf[Long]
-              val j = res(2).asInstanceOf[Long]
-              out += emit(key, i, res(1).asInstanceOf[Long], j, res)
-            }
+    TwsOps.foldByKey(events, (_: MpEvent).key, OutputMode.Append()) {
+      (key: String, it: Iterator[MpEvent], st: Option[MpStreamState]) =>
+        val prev = st.getOrElse(MpStreamState(Nil, Nil, 0L, Long.MinValue))
+        // rebuild the modular rings at their absolute positions, then
+        // recompute the derived sums exactly from them
+        val mp = new MatrixProfile.MpState(w, lag, band)
+        mp.n = prev.n - prev.pts.length
+        prev.pts.foreach { q => mp.put(mp.n, q); mp.n += 1 }
+        var tsIdx = prev.n - prev.tss.length
+        prev.tss.foreach { t => mp.putTs(tsIdx, t); tsIdx += 1 }
+        mp.recomputeDerived()
+        var lastTs = prev.lastTs
+        val out = scala.collection.mutable.ArrayBuffer.empty[O]
+        it.toSeq.sortBy(_.tsMicros).foreach { e =>
+          ChangePointStream.checkInOrder(opName, key, e.tsMicros, lastTs)
+          require(java.lang.Double.isFinite(e.x),
+            s"$opName: non-finite metric ${e.x}")
+          lastTs = e.tsMicros
+          val res = MatrixProfile.mpStep(mp, ChangePointStream.quant4(e.x),
+            java.lang.Long.valueOf(e.tsMicros), zNorm)
+          if (res != null) {
+            val i = res(0).asInstanceOf[Long]
+            val j = res(2).asInstanceOf[Long]
+            out += emit(key, i, res(1).asInstanceOf[Long], j, res)
           }
-          // persist the rings in index order (last cap points / w keys)
-          val lo = math.max(0L, st.n - st.cap)
-          val pts = (lo until st.n).map(st.pt).toList
-          val tlo = math.max(0L, st.n - w)
-          val tss = (tlo until st.n)
-            .map(idx => st.ts(idx).asInstanceOf[Long]).toList
-          state.update(MpStreamState(pts, tss, st.n, lastTs))
-          out.iterator
-      }
+        }
+        // persist the rings in index order (last cap points / w keys)
+        val lo = math.max(0L, mp.n - mp.cap)
+        val pts = (lo until mp.n).map(mp.pt).toList
+        val tlo = math.max(0L, mp.n - w)
+        val tss = (tlo until mp.n)
+          .map(idx => mp.ts(idx).asInstanceOf[Long]).toList
+        (Some(MpStreamState(pts, tss, mp.n, lastTs)), out.iterator)
+    }
   }
 
   /** Raw squared-Euclidean live profile — bit-identical to

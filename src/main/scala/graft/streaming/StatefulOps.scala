@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -8,10 +8,12 @@ import graft.ts.{Tick, TickStream}
 
 /** Streaming lowering of the stateful operators (SURVEY §2.9): the same
   * per-key O(1)-state recurrences that [[graft.operators.Sequential]] runs
-  * as a batch sorted scan, carried across micro-batches with
-  * `flatMapGroupsWithState` — csp's realtime mode with identical results
-  * to simulation mode (the reference's core promise,
-  * `docs/wiki/concepts/Execution-Modes.md`).
+  * as a batch sorted scan, carried across micro-batches on
+  * [[TwsOps.FoldProcessor]] (transformWithState, RocksDB state) — csp's
+  * realtime mode with identical results to simulation mode (the
+  * reference's core promise, `docs/wiki/concepts/Execution-Modes.md`).
+  * [[emaStream]] alone keeps the older runtime, as the benchmark's
+  * reference arm.
   *
   * Ordering contract: rows are processed in (ts, seq) order *within* each
   * micro-batch; across batches the source must deliver in order (csp's
@@ -26,19 +28,20 @@ object StatefulOps {
   case class EmaState(num: Double, den: Double)
   case class GateState(open: Boolean, buffer: List[(Long, Long, Double)])
   case class GateOut(key: String, tsMicros: Long, seq: Long, values: Seq[Double])
-  case class AsOfState(last: Double, valid: Boolean)
   case class SampleOut(key: String, tsMicros: Long, seq: Long, value: Double)
 
   /** Streaming adjusted EMA (csp.stats.ema, stats.py:2910): per-key state
     * = (num, den) of the normalized recurrence — identical math to
-    * Sequential.ema, so batch and streaming outputs match exactly. */
-  def emaStream(ticks: Dataset[TickRow], alpha: Double,
-                timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout): Dataset[EmaOut] = {
+    * Sequential.ema, so batch and streaming outputs match exactly.
+    *
+    * The one `flatMapGroupsWithState` operator left: the benchmark runs it
+    * against [[TwsOps.emaTws]] on the same step as its reference arm. */
+  def emaStream(ticks: Dataset[TickRow], alpha: Double): Dataset[EmaOut] = {
     val d = 1.0 - alpha
     implicit val outEnc = Encoders.product[EmaOut]
     implicit val stEnc = Encoders.product[EmaState]
     ticks.groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, timeout) {
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: String, rows: Iterator[TickRow], state: GroupState[EmaState]) =>
           var s = state.getOption.getOrElse(EmaState(0.0, 0.0))
           val out = rows.toSeq.sortBy(r => (r.tsMicros, r.seq)).map { r =>
@@ -56,56 +59,46 @@ object StatefulOps {
   def gateStream(ticks: Dataset[TickRow]): Dataset[GateOut] = {
     implicit val outEnc = Encoders.product[GateOut]
     implicit val stEnc = Encoders.product[GateState]
-    ticks.groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[TickRow], state: GroupState[GateState]) =>
-          var s = state.getOption.getOrElse(GateState(open = false, Nil))
-          val out = scala.collection.mutable.ArrayBuffer[GateOut]()
-          rows.toSeq.sortBy(r => (r.tsMicros, math.abs(r.seq))).foreach { r =>
-            if (r.seq < 0) { // release tick
-              val opening = r.value > 0.5 && !s.open
-              s = s.copy(open = r.value > 0.5)
-              if (opening && s.buffer.nonEmpty) {
-                out += GateOut(key, r.tsMicros, -r.seq, s.buffer.reverse.map(_._3))
-                s = s.copy(buffer = Nil)
-              }
-            } else if (s.open) {
-              out += GateOut(key, r.tsMicros, r.seq, Seq(r.value))
-            } else {
-              s = s.copy(buffer = (r.tsMicros, r.seq, r.value) :: s.buffer)
+    TwsOps.foldByKey(ticks, (_: TickRow).key, OutputMode.Append()) {
+      (key: String, rows: Iterator[TickRow], prev: Option[GateState]) =>
+        var s = prev.getOrElse(GateState(open = false, Nil))
+        val out = scala.collection.mutable.ArrayBuffer[GateOut]()
+        rows.toSeq.sortBy(r => (r.tsMicros, math.abs(r.seq))).foreach { r =>
+          if (r.seq < 0) { // release tick
+            val opening = r.value > 0.5 && !s.open
+            s = s.copy(open = r.value > 0.5)
+            if (opening && s.buffer.nonEmpty) {
+              out += GateOut(key, r.tsMicros, -r.seq, s.buffer.reverse.map(_._3))
+              s = s.copy(buffer = Nil)
             }
+          } else if (s.open) {
+            out += GateOut(key, r.tsMicros, r.seq, Seq(r.value))
+          } else {
+            s = s.copy(buffer = (r.tsMicros, r.seq, r.value) :: s.buffer)
           }
-          state.update(s)
-          out.iterator
-      }
+        }
+        (Some(s), out.iterator)
+    }
   }
 
   /** Streaming as-of sample (csp.sample, baselib.py:290-297): reference
-    * rows carry seq < 0; trigger rows emit the last valid ref value. */
+    * rows carry seq < 0; trigger rows emit the last valid ref value. State
+    * = (last ref value, valid); refs sort before triggers on engine-time
+    * ties (the scans' control-first rule — same-cycle visibility, as in
+    * the batch AsOf kernel). */
   def sampleStream(ticks: Dataset[TickRow]): Dataset[SampleOut] = {
     implicit val outEnc = Encoders.product[SampleOut]
-    implicit val stEnc = Encoders.product[AsOfState]
-    ticks.groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[TickRow], state: GroupState[AsOfState]) =>
-          var s = state.getOption.getOrElse(AsOfState(0.0, valid = false))
-          val out = scala.collection.mutable.ArrayBuffer[SampleOut]()
-          // refs sort before triggers on engine-time ties (same-cycle
-          // visibility, as in the batch AsOf kernel)
-          rows.toSeq.sortBy(r => (r.tsMicros, r.seq >= 0, math.abs(r.seq))).foreach { r =>
-            if (r.seq < 0) s = AsOfState(r.value, valid = true)
-            else if (s.valid) out += SampleOut(key, r.tsMicros, r.seq, s.last)
-          }
-          state.update(s)
-          out.iterator
-      }
+    scan(ticks, (_: TickRow).key, controlFirst, Seq(0.0, 0.0), (s: Seq[Double], r: TickRow) =>
+      if (r.seq < 0) (Seq(r.value, 1.0), None)
+      else (s, if (s(1) > 0.5) Some(s(0)) else None)
+    )((r, v: Double) => SampleOut(r.key, r.tsMicros, r.seq, v))
   }
 
   case class CountOut(key: String, tsMicros: Long, seq: Long, count: Long)
 
   /** Streaming csp.remove_dynamic_key (builtin_functions.py:311): removal
     * rows (seq < 0, the gate/sample marker convention) tear the key's
-    * sub-graph instance DOWN via `GroupState.remove()`; the key's next
+    * sub-graph instance DOWN by clearing its state; the key's next
     * data tick starts a fresh instance — running count restarts at 1,
     * matching the batch (key, epoch) lowering in
     * [[graft.operators.Dynamic.removeKey]] exactly. Removal of an absent
@@ -113,28 +106,23 @@ object StatefulOps {
   def countStreamWithRemoval(ticks: Dataset[TickRow]): Dataset[CountOut] = {
     implicit val outEnc = Encoders.product[CountOut]
     implicit val stEnc = Encoders.scalaLong
-    ticks.groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[TickRow], state: GroupState[Long]) =>
-          // same-cycle rule as the batch lowering: a data tick at the
-          // removal's timestamp still belongs to the old instance, so
-          // data (seq >= 0) sorts BEFORE removal on engine-time ties
-          var cnt: Option[Long] = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer[CountOut]()
-          rows.toSeq.sortBy(r => (r.tsMicros, r.seq < 0, math.abs(r.seq))).foreach { r =>
-            if (r.seq < 0) cnt = None
-            else {
-              val c = cnt.getOrElse(0L) + 1L
-              cnt = Some(c)
-              out += CountOut(key, r.tsMicros, r.seq, c)
-            }
+    TwsOps.foldByKey(ticks, (_: TickRow).key, OutputMode.Append()) {
+      (key: String, rows: Iterator[TickRow], prev: Option[Long]) =>
+        // same-cycle rule as the batch lowering: a data tick at the
+        // removal's timestamp still belongs to the old instance, so
+        // data (seq >= 0) sorts BEFORE removal on engine-time ties
+        var cnt = prev
+        val out = scala.collection.mutable.ArrayBuffer[CountOut]()
+        rows.toSeq.sortBy(r => (r.tsMicros, r.seq < 0, math.abs(r.seq))).foreach { r =>
+          if (r.seq < 0) cnt = None
+          else {
+            val c = cnt.getOrElse(0L) + 1L
+            cnt = Some(c)
+            out += CountOut(key, r.tsMicros, r.seq, c)
           }
-          cnt match {
-            case Some(c) => state.update(c)
-            case None => if (state.exists) state.remove()
-          }
-          out.iterator
-      }
+        }
+        (cnt, out.iterator)
+    }
   }
 
   // ---- generic per-key streaming scan + the §2.3 baselib twins -------------
@@ -146,38 +134,45 @@ object StatefulOps {
     * window / sorted-scan lowerings in [[graft.ts.TickStream]] /
     * [[graft.operators.Sequential]] / [[graft.operators.Stats]]. State is a
     * small numeric vector carried across micro-batches; `step` maps
-    * (state, row) → (state', optional emission at the row's cycle).
-    *
-    * Tie rule: control rows (seq < 0 — the gate/sample/reset marker
-    * convention above) sort BEFORE data rows on engine-time ties, the
-    * reset-first rule of csp's stats `reset` parameter
-    * (reference `csp/stats.py:218-280`). Operators with a different tie
-    * rule (sample's ref-first, remove-key's data-first) keep their
-    * dedicated kernels above. */
-  def scanStream(ticks: Dataset[TickRow], init: Seq[Double])(
-      step: (Seq[Double], TickRow) => (Seq[Double], Option[Double])): Dataset[ValOut] = {
-    implicit val outEnc = Encoders.product[ValOut]
+    * (state, row) → (state', optional emission at the row's cycle), and
+    * `emit` shapes an emission into the output row. Rows apply in `order`
+    * within a micro-batch; across batches the source delivers in order. */
+  private def scan[R, V, O: Encoder](ticks: Dataset[R], key: R => String, order: Ordering[R],
+      init: Seq[Double], step: (Seq[Double], R) => (Seq[Double], Option[V]))(
+      emit: (R, V) => O): Dataset[O] = {
     implicit val stEnc = Encoders.product[ScanState]
-    ticks.groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[TickRow], state: GroupState[ScanState]) =>
-          var s = state.getOption.map(_.s).getOrElse(init)
-          val out = scala.collection.mutable.ArrayBuffer[ValOut]()
-          rows.toSeq.sortBy(r => (r.tsMicros, r.seq >= 0, math.abs(r.seq))).foreach { r =>
-            val (s2, o) = step(s, r)
-            s = s2
-            o.foreach(v => out += ValOut(key, r.tsMicros, r.seq, v))
-          }
-          state.update(ScanState(s))
-          out.iterator
-      }
+    TwsOps.foldByKey(ticks, key, OutputMode.Append()) {
+      (_: String, rows: Iterator[R], prev: Option[ScanState]) =>
+        var s = prev.fold(init)(_.s)
+        val out = rows.toSeq.sorted(order).flatMap { r =>
+          val (s2, o) = step(s, r)
+          s = s2
+          o.map(emit(r, _))
+        }
+        (Some(ScanState(s)), out.iterator)
+    }
   }
 
-  /** One scan operator: initial state vector + step function. The SAME
-    * Step value drives both streaming runtimes — [[scanStream]]
-    * (flatMapGroupsWithState) and [[TwsOps.scanTws]] (transformWithState
-    * + RocksDB) — so the dual-runtime parity specs compare one
-    * definition, not two transcriptions. */
+  /** Tie rule of the single-input scans: control rows (seq < 0 — the
+    * gate/sample/reset marker convention above) sort BEFORE data rows on
+    * engine-time ties, the reset-first rule of csp's stats `reset`
+    * parameter (reference `csp/stats.py:218-280`), and sample's
+    * ref-first rule. Operators with a different tie rule (gate's
+    * seq-ordered releases, remove-key's data-first) keep their dedicated
+    * kernels above. */
+  private val controlFirst: Ordering[TickRow] =
+    Ordering.by((r: TickRow) => (r.tsMicros, r.seq >= 0, math.abs(r.seq)))
+
+  /** Tie rule of the tagged-union scans (see the two-input section). */
+  private val sourceFirst: Ordering[TickRow2] =
+    Ordering.by((r: TickRow2) => (r.tsMicros, r.src, r.seq))
+
+  private implicit val keyEnc: Encoder[String] = Encoders.STRING
+  private implicit val valOutEnc: Encoder[ValOut] = Encoders.product[ValOut]
+  private implicit val vecOutEnc: Encoder[VecOut] = Encoders.product[VecOut]
+
+  /** One scan operator: initial state vector + step function, run by
+    * [[scanStream]]. */
   final case class Step(init: Seq[Double],
                         fn: (Seq[Double], TickRow) => (Seq[Double], Option[Double]))
 
@@ -276,13 +271,15 @@ object StatefulOps {
     })
 
     /** Expanding sample variance (Welford) — twin of
-      * `Stats.expanding(x).varSamp`; ticks from the second observation. */
+      * `Stats.expanding(x).varSamp`; ticks from the second observation.
+      * The update is Spark's `var_samp` chain operation for operation
+      * (m2 += d·(d − d/n)), so the stream is bit-equal to the batch arm. */
     val expandingVar: Step = Step(Seq(0.0, 0.0, 0.0), (s, r) => {
       val n = s(0) + 1
       val d = r.value - s(1)
-      val m = s(1) + d / n
-      val m2 = s(2) + d * (r.value - m)
-      (Seq(n, m, m2), if (n >= 2) Some(m2 / (n - 1)) else None)
+      val dn = d / n
+      val m2 = s(2) + d * (d - dn)
+      (Seq(n, s(1) + dn, m2), if (n >= 2) Some(m2 / (n - 1)) else None)
     })
 
     /** csp.value_at(x, index) tick history (`builtin_functions.py:105`) —
@@ -388,8 +385,7 @@ object StatefulOps {
   case class TickRow2(key: String, tsMicros: Long, seq: Long, value: Double, src: Int)
 
   /** One two-input scan operator: the same (init, step) shape as [[Step]]
-    * over tagged rows, driving both [[scanStream2]] (fMGWS) and
-    * [[TwsOps.scanTws2]] (transformWithState + RocksDB). */
+    * over tagged rows, run by [[scanStream2]]. */
   final case class Step2(init: Seq[Double],
                          fn: (Seq[Double], TickRow2) => (Seq[Double], Option[Double]))
 
@@ -444,9 +440,9 @@ object StatefulOps {
       * snapshot value through `inner` at the trigger's cycle — nothing
       * fires before x first ticks, exactly like `sample`. State =
       * (lastX, valid) ++ inner's state (variable length is fine — the
-      * runtimes persist the whole vector). This is how a multi-operator
+      * runtime persists the whole vector). This is how a multi-operator
       * csp pipeline (e.g. the flagship sample → rolling mean → ema) runs
-      * on the streaming runtimes without materializing the intermediate
+      * on the streaming runtime without materializing the intermediate
       * stream: composition in the state machine, not the query graph. */
     def sampleThen(inner: Step): Step2 =
       Step2(Seq(Double.NaN, 0.0) ++ inner.init, (s, r) =>
@@ -469,38 +465,22 @@ object StatefulOps {
   /** csp.struct_fromts (`baselib.py:684-701`) as an N-input scan — twin of
     * `AsOf.structFromTs`: srcs 0..n−1 are the snapshot inputs, src = n the
     * trigger; a trigger tick emits the last value of every input (NaN for
-    * an input that has not ticked yet — the batch twin's null lanes). The
-    * same step drives [[structStream]] (fMGWS) and [[TwsOps.structTws]].
-    */
+    * an input that has not ticked yet — the batch twin's null lanes),
+    * run by [[structStream]]. */
   def structFromTsStep(n: Int): (Seq[Double], TickRow2) => (Seq[Double], Option[Seq[Double]]) =
     (s, r) =>
       if (r.src < n) (s.updated(r.src, r.value), None)
       else (s, Some(s))
 
-  /** Run [[structFromTsStep]] on the flatMapGroupsWithState runtime. */
-  def structStream(ticks: Dataset[TickRow2], nInputs: Int): Dataset[VecOut] = {
-    val step = structFromTsStep(nInputs)
-    implicit val outEnc = Encoders.product[VecOut]
-    implicit val stEnc = Encoders.product[ScanState]
-    ticks.groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[TickRow2], state: GroupState[ScanState]) =>
-          var s = state.getOption.map(_.s).getOrElse(Seq.fill(nInputs)(Double.NaN))
-          val out = scala.collection.mutable.ArrayBuffer[VecOut]()
-          rows.toSeq.sortBy(r => (r.tsMicros, r.src, r.seq)).foreach { r =>
-            val (s2, o) = step(s, r)
-            s = s2
-            o.foreach(v => out += VecOut(key, r.tsMicros, r.seq, v))
-          }
-          state.update(ScanState(s))
-          out.iterator
-      }
-  }
+  /** Run [[structFromTsStep]] over `nInputs` snapshot inputs. */
+  def structStream(ticks: Dataset[TickRow2], nInputs: Int): Dataset[VecOut] =
+    scan(ticks, (_: TickRow2).key, sourceFirst, Seq.fill(nInputs)(Double.NaN),
+      structFromTsStep(nInputs))((r, v: Seq[Double]) => VecOut(r.key, r.tsMicros, r.seq, v))
 
   /** One vector-output scan operator — the [[Step]] shape with a list
     * emission, for the §2.9 tick-history surfaces (values_at / times_at)
-    * whose result at each tick is the ring buffer itself. Drives both
-    * [[scanVecStream]] (fMGWS) and [[TwsOps.scanVecTws]] (RocksDB). */
+    * whose result at each tick is the ring buffer itself, run by
+    * [[scanVecStream]]. */
   final case class StepV(init: Seq[Double],
                          fn: (Seq[Double], TickRow) => (Seq[Double], Option[Seq[Double]]))
 
@@ -523,50 +503,22 @@ object StatefulOps {
     })
   }
 
-  /** Run a [[StepV]] on the flatMapGroupsWithState runtime. */
-  def scanVecStream(ticks: Dataset[TickRow], step: StepV): Dataset[VecOut] = {
-    implicit val outEnc = Encoders.product[VecOut]
-    implicit val stEnc = Encoders.product[ScanState]
-    ticks.groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[TickRow], state: GroupState[ScanState]) =>
-          var s = state.getOption.map(_.s).getOrElse(step.init)
-          val out = scala.collection.mutable.ArrayBuffer[VecOut]()
-          rows.toSeq.sortBy(r => (r.tsMicros, r.seq >= 0, math.abs(r.seq))).foreach { r =>
-            val (s2, o) = step.fn(s, r)
-            s = s2
-            o.foreach(v => out += VecOut(key, r.tsMicros, r.seq, v))
-          }
-          state.update(ScanState(s))
-          out.iterator
-      }
-  }
+  /** Run a [[StepV]] (control rows first on engine-time ties). */
+  def scanVecStream(ticks: Dataset[TickRow], step: StepV): Dataset[VecOut] =
+    scan(ticks, (_: TickRow).key, controlFirst, step.init, step.fn)(
+      (r, v: Seq[Double]) => VecOut(r.key, r.tsMicros, r.seq, v))
 
-  /** Run a [[Step2]] on the flatMapGroupsWithState runtime. */
-  def scanStream2(ticks: Dataset[TickRow2], step: Step2): Dataset[ValOut] = {
-    implicit val outEnc = Encoders.product[ValOut]
-    implicit val stEnc = Encoders.product[ScanState]
-    ticks.groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[TickRow2], state: GroupState[ScanState]) =>
-          var s = state.getOption.map(_.s).getOrElse(step.init)
-          val out = scala.collection.mutable.ArrayBuffer[ValOut]()
-          rows.toSeq.sortBy(r => (r.tsMicros, r.src, r.seq)).foreach { r =>
-            val (s2, o) = step.fn(s, r)
-            s = s2
-            o.foreach(v => out += ValOut(key, r.tsMicros, r.seq, v))
-          }
-          state.update(ScanState(s))
-          out.iterator
-      }
-  }
+  /** Run a [[Step2]] (reference rows first on engine-time ties). */
+  def scanStream2(ticks: Dataset[TickRow2], step: Step2): Dataset[ValOut] =
+    scan(ticks, (_: TickRow2).key, sourceFirst, step.init, step.fn)(
+      (r, v: Double) => ValOut(r.key, r.tsMicros, r.seq, v))
 
   // ---- bivariate operators (two value lanes on one stream) -----------------
 
   case class PairRow(key: String, tsMicros: Long, seq: Long, x: Double, y: Double)
 
   /** One bivariate scan operator — the [[Step]] shape over (x, y) rows,
-    * driving both [[scanPairStream]] and [[TwsOps.scanPairTws]]. */
+    * run by [[scanPairStream]]. */
   final case class StepP(init: Seq[Double],
                          fn: (Seq[Double], PairRow) => (Seq[Double], Option[Double]))
 
@@ -597,56 +549,15 @@ object StatefulOps {
     }
   }
 
-  /** Run a [[StepP]] on the flatMapGroupsWithState runtime. */
-  def scanPairStream(ticks: Dataset[PairRow], step: StepP): Dataset[ValOut] = {
-    implicit val outEnc = Encoders.product[ValOut]
-    implicit val stEnc = Encoders.product[ScanState]
-    ticks.groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[PairRow], state: GroupState[ScanState]) =>
-          var s = state.getOption.map(_.s).getOrElse(step.init)
-          val out = scala.collection.mutable.ArrayBuffer[ValOut]()
-          rows.toSeq.sortBy(r => (r.tsMicros, r.seq)).foreach { r =>
-            val (s2, o) = step.fn(s, r)
-            s = s2
-            o.foreach(v => out += ValOut(key, r.tsMicros, r.seq, v))
-          }
-          state.update(ScanState(s))
-          out.iterator
-      }
-  }
+  /** Run a [[StepP]] in (ts, seq) order. */
+  def scanPairStream(ticks: Dataset[PairRow], step: StepP): Dataset[ValOut] =
+    scan(ticks, (_: PairRow).key, Ordering.by((r: PairRow) => (r.tsMicros, r.seq)),
+      step.init, step.fn)((r, v: Double) => ValOut(r.key, r.tsMicros, r.seq, v))
 
-  /** Run a [[Step]] on the flatMapGroupsWithState runtime. */
+  /** Run a [[Step]] (control rows first on engine-time ties). */
   def scanStream(ticks: Dataset[TickRow], step: Step): Dataset[ValOut] =
-    scanStream(ticks, step.init)(step.fn)
-
-  def filterStream(t: Dataset[TickRow], p: Double => Boolean): Dataset[ValOut] =
-    scanStream(t, Steps.filter(p))
-  def mapStream(t: Dataset[TickRow], f: Double => Double): Dataset[ValOut] =
-    scanStream(t, Steps.map(f))
-  def dropNansStream(t: Dataset[TickRow]): Dataset[ValOut] = scanStream(t, Steps.dropNans)
-  def timesStream(t: Dataset[TickRow]): Dataset[ValOut] = scanStream(t, Steps.times)
-  def countStream(t: Dataset[TickRow]): Dataset[ValOut] = scanStream(t, Steps.count)
-  def accumStream(t: Dataset[TickRow]): Dataset[ValOut] = scanStream(t, Steps.accum)
-  def diffStream(t: Dataset[TickRow], n: Int = 1): Dataset[ValOut] =
-    scanStream(t, Steps.diff(n))
-  def delayTicksStream(t: Dataset[TickRow], n: Int): Dataset[ValOut] =
-    scanStream(t, Steps.delayTicks(n))
-  def firstNStream(t: Dataset[TickRow], n: Int): Dataset[ValOut] =
-    scanStream(t, Steps.firstN(n))
-  def dropDupsStream(t: Dataset[TickRow]): Dataset[ValOut] = scanStream(t, Steps.dropDups)
-  def dropDupsEpsStream(t: Dataset[TickRow], eps: Double): Dataset[ValOut] =
-    scanStream(t, Steps.dropDupsEps(eps))
-  def kahanStream(t: Dataset[TickRow]): Dataset[ValOut] = scanStream(t, Steps.kahan)
-  def resetSumStream(t: Dataset[TickRow]): Dataset[ValOut] = scanStream(t, Steps.resetSum)
-  def rollingMeanStream(t: Dataset[TickRow], n: Int, minWindow: Int = 1): Dataset[ValOut] =
-    scanStream(t, Steps.rollingMean(n, minWindow))
-  def rollingMinStream(t: Dataset[TickRow], n: Int): Dataset[ValOut] =
-    scanStream(t, Steps.rollingMin(n))
-  def rollingMaxStream(t: Dataset[TickRow], n: Int): Dataset[ValOut] =
-    scanStream(t, Steps.rollingMax(n))
-  def expandingVarStream(t: Dataset[TickRow]): Dataset[ValOut] =
-    scanStream(t, Steps.expandingVar)
+    scan(ticks, (_: TickRow).key, controlFirst, step.init, step.fn)(
+      (r, v: Double) => ValOut(r.key, r.tsMicros, r.seq, v))
 
   /** Batch TickStream → typed rows for the streaming API (test bridge). */
   def toTickRows(x: TickStream): Dataset[TickRow] = {

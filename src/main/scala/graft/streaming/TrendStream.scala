@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Live trend monitor — the streaming twin of the Mann–Kendall frame
   * (VERDICT r16 #3): csp is a streaming engine and "is this metric
@@ -189,36 +189,39 @@ object TrendStream {
   def amocStream(events: Dataset[MkEvent], windowMicros: Long,
                  maxCells: Int = 10000,
                  stateTtlMs: Option[Long] = None): Dataset[AmocReadout] = {
-    require(windowMicros > 0, "windowMicros must be positive")
-    implicit val stEnc = Encoders.product[MkState]
     implicit val outEnc = Encoders.product[AmocReadout]
-    implicit val keyEnc = Encoders.scalaLong
-    events.groupByKey(e => Math.floorDiv(e.tsMicros, windowMicros) * windowMicros)
-      .flatMapGroupsWithState(OutputMode.Update, ttlConf(stateTtlMs)) {
-        (wStart: Long, it: Iterator[MkEvent],
-         state: org.apache.spark.sql.streaming.GroupState[MkState]) =>
-          foldCells(wStart, it, state, maxCells, stateTtlMs, "amocStream")
-            .flatMap(cells => amocFromCells(cells).map(_.copy(wStart = wStart)))
-            .iterator
-      }
+    monitor(events, windowMicros, maxCells, stateTtlMs, "amocStream") { (wStart, cells) =>
+      amocFromCells(cells).map(_.copy(wStart = wStart))
+    }
   }
 
-  /** Fold this batch's events into the window's cell table (capped,
-    * loud) and refresh the per-window state INCLUDING its idle-TTL
-    * timeout when one is configured — unlike the per-key O(1)
-    * detectors whose key space is fixed, these monitors key state by
-    * WINDOW START, so new keys open forever; with `ttlMs` set, a
-    * window idle for that much processing time releases its cell
-    * table on the timeout tick (ADVICE r17 — bounded total state over
-    * the stream's lifetime). Returns None when the group woke up only
-    * to time out (state removed, nothing to emit). */
-  private[graft] def foldCells(
-      wStart: Long, it: Iterator[MkEvent],
-      state: org.apache.spark.sql.streaming.GroupState[MkState],
-      maxCells: Int, ttlMs: Option[Long], op: String): Option[List[MkCell]] = {
-    if (state.hasTimedOut) { state.remove(); return None }
+  /** One tumbling-window monitor: events fold into their window's cell
+    * table ([[foldCells]]) and `readout` refreshes the window's row every
+    * batch the window receives events (Update semantics). These monitors
+    * key state by WINDOW START, so new keys open forever: with
+    * `stateTtlMs` set, a window idle for that much processing time
+    * releases its cell table (ADVICE r17 — bounded total state over the
+    * stream's lifetime); see the TTL note on [[mannKendallStream]]. */
+  private def monitor[O: Encoder](events: Dataset[MkEvent], windowMicros: Long,
+      maxCells: Int, stateTtlMs: Option[Long], op: String)(
+      readout: (Long, List[MkCell]) => Option[O]): Dataset[O] = {
+    require(windowMicros > 0, "windowMicros must be positive")
+    implicit val stEnc = Encoders.product[MkState]
+    implicit val keyEnc = Encoders.scalaLong
+    TwsOps.foldByKey(events, (e: MkEvent) => Math.floorDiv(e.tsMicros, windowMicros) * windowMicros,
+        OutputMode.Update(), stateTtlMs) {
+      (wStart: Long, it: Iterator[MkEvent], prev: Option[MkState]) =>
+        val cells = foldCells(wStart, it, prev, maxCells, op)
+        (Some(MkState(cells)), readout(wStart, cells).iterator)
+    }
+  }
+
+  /** Fold this batch's events into the window's cell table, capped at
+    * `maxCells` distinct (ts, value) cells with a loud failure. */
+  private def foldCells(wStart: Long, it: Iterator[MkEvent], prev: Option[MkState],
+                        maxCells: Int, op: String): List[MkCell] = {
     val m = scala.collection.mutable.HashMap.empty[(Long, Double), Long]
-    state.getOption.foreach(_.cells.foreach(c => m((c.ts, c.v)) = c.c))
+    prev.foreach(_.cells.foreach(c => m((c.ts, c.v)) = c.c))
     it.foreach { e =>
       val k = (e.tsMicros, e.value)
       m(k) = m.getOrElse(k, 0L) + 1L
@@ -227,18 +230,7 @@ object TrendStream {
           "(ts, value) cells - shorten the window, bucket the metric or " +
           "time axis, or widen maxCells")
     }
-    val cells = m.iterator.map { case ((t, v), c) => MkCell(t, v, c) }.toList
-    state.update(MkState(cells))
-    ttlMs.foreach(t => state.setTimeoutDuration(t))
-    Some(cells)
-  }
-
-  /** The timeout configuration matching `stateTtlMs` — see the TTL
-    * note on [[mannKendallStream]]. */
-  private def ttlConf(stateTtlMs: Option[Long]) = {
-    require(stateTtlMs.forall(_ > 0), "stateTtlMs must be positive")
-    if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-    else GroupStateTimeout.NoTimeout
+    m.iterator.map { case ((t, v), c) => MkCell(t, v, c) }.toList
   }
 
   /** Per-tumbling-window Pettitt change-point monitor — the live twin
@@ -252,18 +244,10 @@ object TrendStream {
   def pettittStream(events: Dataset[MkEvent], windowMicros: Long,
                     maxCells: Int = 10000,
                     stateTtlMs: Option[Long] = None): Dataset[PtReadout] = {
-    require(windowMicros > 0, "windowMicros must be positive")
-    implicit val stEnc = Encoders.product[MkState]
     implicit val outEnc = Encoders.product[PtReadout]
-    implicit val keyEnc = Encoders.scalaLong
-    events.groupByKey(e => Math.floorDiv(e.tsMicros, windowMicros) * windowMicros)
-      .flatMapGroupsWithState(OutputMode.Update, ttlConf(stateTtlMs)) {
-        (wStart: Long, it: Iterator[MkEvent],
-         state: org.apache.spark.sql.streaming.GroupState[MkState]) =>
-          foldCells(wStart, it, state, maxCells, stateTtlMs, "pettittStream")
-            .flatMap(cells => pettittFromCells(cells).map(_.copy(wStart = wStart)))
-            .iterator
-      }
+    monitor(events, windowMicros, maxCells, stateTtlMs, "pettittStream") { (wStart, cells) =>
+      pettittFromCells(cells).map(_.copy(wStart = wStart))
+    }
   }
 
   /** Per-tumbling-window Mann–Kendall over a live series. `windowMicros`
@@ -273,11 +257,12 @@ object TrendStream {
     * so without intervention total state grows one cell table per
     * window over the stream's lifetime. Pass
     * `stateTtlMs = Some(idleMs)` in a LIVE deployment: a window idle
-    * for that much processing time releases its cell table on the
-    * timeout tick ([[foldCells]], spec-pinned via TestGroupState). The
-    * default is None (NoTimeout) because a processing-time timeout
-    * changes the engine's trigger semantics: Spark keeps constructing
-    * micro-batches with NO new data just to fire pending timeouts, so
+    * for that much processing time releases its cell table when its
+    * timer fires ([[TwsOps.FoldProcessor]]; spec-pinned by a live query
+    * that reopens an expired window). The default is None (no timer)
+    * because a processing-time timer changes the engine's trigger
+    * semantics: Spark keeps constructing micro-batches with NO new data
+    * just to fire pending timers, so
     * `processAllAvailable()`-style synchronous draining (sim-mode
     * tests, bounded replays) never observes an all-processed state —
     * with a TTL, pair the query with a real trigger interval and
@@ -285,19 +270,10 @@ object TrendStream {
   def mannKendallStream(events: Dataset[MkEvent], windowMicros: Long,
                         maxCells: Int = 10000,
                         stateTtlMs: Option[Long] = None): Dataset[MkReadout] = {
-    require(windowMicros > 0, "windowMicros must be positive")
-    implicit val stEnc = Encoders.product[MkState]
     implicit val outEnc = Encoders.product[MkReadout]
-    implicit val keyEnc = Encoders.scalaLong
-    events.groupByKey(e => Math.floorDiv(e.tsMicros, windowMicros) * windowMicros)
-      .flatMapGroupsWithState(OutputMode.Update, ttlConf(stateTtlMs)) {
-        (wStart: Long, it: Iterator[MkEvent],
-         state: org.apache.spark.sql.streaming.GroupState[MkState]) =>
-          foldCells(wStart, it, state, maxCells, stateTtlMs, "mannKendallStream")
-            .map { cells =>
-              val (n, s, varS, z) = mkFromCells(cells)
-              MkReadout(wStart, n, s, varS, z)
-            }.iterator
-      }
+    monitor(events, windowMicros, maxCells, stateTtlMs, "mannKendallStream") { (wStart, cells) =>
+      val (n, s, varS, z) = mkFromCells(cells)
+      Some(MkReadout(wStart, n, s, varS, z))
+    }
   }
 }

@@ -1,17 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 
-import graft.streaming.StatefulOps.{EmaOut, EmaState, ScanState, TickRow, ValOut}
+import graft.streaming.StatefulOps.{EmaOut, EmaState, TickRow}
 
 /** transformWithState lowering (Spark 4 StatefulProcessor + RocksDB state
   * store) — the arbitrary-stateful-operator API the engine standardizes
   * on for realtime (SURVEY §2.9 "TWS"): typed per-key state handles
   * (value/list/map), timers for csp-alarm semantics
   * (`csp.schedule_alarm`, reference `builtin_functions.py:286-303`), and
-  * state TTL for buffering policies. `flatMapGroupsWithState` versions
-  * live in [[StatefulOps]]; this is the forward API.
+  * idle-state timers for buffering policies. [[FoldProcessor]] carries
+  * every streaming twin's state; [[EmaProcessor]] stays beside it as the
+  * benchmark's transformWithState arm.
   */
 object TwsOps {
 
@@ -42,166 +43,57 @@ object TwsOps {
       .transformWithState(new EmaProcessor(alpha), TimeMode.None(), OutputMode.Append())
   }
 
-  /** Generic per-key scan as a StatefulProcessor — [[StatefulOps.scanStream]]
-    * on the transformWithState runtime (typed ValueState in RocksDB), so
-    * every named baselib/stats twin built on `scanStream`'s step
-    * functions runs unchanged on the forward API. Same ordering contract:
-    * (ts, seq) within a micro-batch, control rows (seq < 0) first on
-    * engine-time ties. */
-  class ScanProcessor(init: Seq[Double],
-                      step: (Seq[Double], TickRow) => (Seq[Double], Option[Double]))
-      extends StatefulProcessor[String, TickRow, ValOut] {
-    @transient private var state: ValueState[ScanState] = _
+  /** The one stateful streaming runtime: a per-key fold on
+    * transformWithState with its state in one typed `ValueState` in the
+    * RocksDB store. `fold(key, rows, state)` sees one micro-batch's rows
+    * for the key and the state the previous batch left (None before the
+    * key's first batch, or after a clear), and returns the next state
+    * with the rows to emit; a None state clears the key. Every streaming
+    * twin except the [[EmaProcessor]] benchmark arm and
+    * [[TimeoutProcessor]]'s alarms runs on it.
+    *
+    * `idleTtlMs` arms a processing-time timer per key, re-armed on every
+    * batch the key receives rows; a key idle for that long has its state
+    * cleared when the timer fires (nothing is emitted). Without it the
+    * query runs in `TimeMode.None` and state lives until the fold clears
+    * it. */
+  class FoldProcessor[K, I, S, O](stateEnc: Encoder[S], idleTtlMs: Option[Long],
+                                  fold: (K, Iterator[I], Option[S]) => (Option[S], Iterator[O]))
+      extends StatefulProcessor[K, I, O] {
+    @transient private var state: ValueState[S] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[ScanState]("scan", Encoders.product[ScanState], TTLConfig.NONE)
+      state = getHandle.getValueState[S]("fold", stateEnc, TTLConfig.NONE)
 
-    override def handleInputRows(key: String, rows: Iterator[TickRow],
-                                 timerValues: TimerValues): Iterator[ValOut] = {
-      var s = if (state.exists()) state.get().s else init
-      val out = scala.collection.mutable.ArrayBuffer[ValOut]()
-      rows.toSeq.sortBy(r => (r.tsMicros, r.seq >= 0, math.abs(r.seq))).foreach { r =>
-        val (s2, o) = step(s, r)
-        s = s2
-        o.foreach(v => out += ValOut(key, r.tsMicros, r.seq, v))
+    override def handleInputRows(key: K, rows: Iterator[I],
+                                 timerValues: TimerValues): Iterator[O] = {
+      val (next, out) = fold(key, rows, if (state.exists()) Some(state.get()) else None)
+      next match {
+        case Some(s) => state.update(s)
+        case None => state.clear()
       }
-      state.update(ScanState(s))
-      out.iterator
+      idleTtlMs.foreach { ttl =>
+        getHandle.listTimers().toList.foreach(getHandle.deleteTimer)
+        if (next.isDefined) getHandle.registerTimer(timerValues.getCurrentProcessingTimeInMs() + ttl)
+      }
+      out
+    }
+
+    override def handleExpiredTimer(key: K, timerValues: TimerValues,
+                                    expiredTimerInfo: ExpiredTimerInfo): Iterator[O] = {
+      state.clear()
+      Iterator.empty
     }
   }
 
-  def scanTws(ticks: Dataset[TickRow], init: Seq[Double])(
-      step: (Seq[Double], TickRow) => (Seq[Double], Option[Double])): Dataset[ValOut] = {
-    implicit val outEnc = Encoders.product[ValOut]
-    ticks.groupByKey(_.key)(Encoders.STRING)
-      .transformWithState(new ScanProcessor(init, step), TimeMode.None(), OutputMode.Append())
-  }
-
-  /** Run a [[StatefulOps.Step]] on the transformWithState runtime. */
-  def scanTws(ticks: Dataset[TickRow], step: StatefulOps.Step): Dataset[ValOut] =
-    scanTws(ticks, step.init)(step.fn)
-
-  import graft.streaming.StatefulOps.{PairRow, Step2, StepP, TickRow2}
-
-  /** Two-input scan as a StatefulProcessor — [[StatefulOps.scanStream2]]
-    * on the transformWithState runtime. Same ordering contract: reference
-    * rows (src=0) before primary rows on engine-time ties. */
-  class Scan2Processor(step: Step2) extends StatefulProcessor[String, TickRow2, ValOut] {
-    @transient private var state: ValueState[ScanState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[ScanState]("scan2", Encoders.product[ScanState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[TickRow2],
-                                 timerValues: TimerValues): Iterator[ValOut] = {
-      var s = if (state.exists()) state.get().s else step.init
-      val out = scala.collection.mutable.ArrayBuffer[ValOut]()
-      rows.toSeq.sortBy(r => (r.tsMicros, r.src, r.seq)).foreach { r =>
-        val (s2, o) = step.fn(s, r)
-        s = s2
-        o.foreach(v => out += ValOut(key, r.tsMicros, r.seq, v))
-      }
-      state.update(ScanState(s))
-      out.iterator
-    }
-  }
-
-  /** Run a [[StatefulOps.Step2]] on the transformWithState runtime. */
-  def scanTws2(ticks: Dataset[TickRow2], step: Step2): Dataset[ValOut] = {
-    implicit val outEnc = Encoders.product[ValOut]
-    ticks.groupByKey(_.key)(Encoders.STRING)
-      .transformWithState(new Scan2Processor(step), TimeMode.None(), OutputMode.Append())
-  }
-
-  /** Bivariate scan as a StatefulProcessor — [[StatefulOps.scanPairStream]]
-    * on the transformWithState runtime. */
-  class ScanPairProcessor(step: StepP) extends StatefulProcessor[String, PairRow, ValOut] {
-    @transient private var state: ValueState[ScanState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[ScanState]("scanp", Encoders.product[ScanState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[PairRow],
-                                 timerValues: TimerValues): Iterator[ValOut] = {
-      var s = if (state.exists()) state.get().s else step.init
-      val out = scala.collection.mutable.ArrayBuffer[ValOut]()
-      rows.toSeq.sortBy(r => (r.tsMicros, r.seq)).foreach { r =>
-        val (s2, o) = step.fn(s, r)
-        s = s2
-        o.foreach(v => out += ValOut(key, r.tsMicros, r.seq, v))
-      }
-      state.update(ScanState(s))
-      out.iterator
-    }
-  }
-
-  /** Run a [[StatefulOps.StepP]] on the transformWithState runtime. */
-  def scanPairTws(ticks: Dataset[PairRow], step: StepP): Dataset[ValOut] = {
-    implicit val outEnc = Encoders.product[ValOut]
-    ticks.groupByKey(_.key)(Encoders.STRING)
-      .transformWithState(new ScanPairProcessor(step), TimeMode.None(), OutputMode.Append())
-  }
-
-  import graft.streaming.StatefulOps.VecOut
-
-  /** [[StatefulOps.structFromTsStep]] on the transformWithState runtime —
-    * the N-input struct_fromts snapshot with RocksDB state. */
-  class StructProcessor(nInputs: Int) extends StatefulProcessor[String, TickRow2, VecOut] {
-    private val step = StatefulOps.structFromTsStep(nInputs)
-    @transient private var state: ValueState[ScanState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[ScanState]("struct", Encoders.product[ScanState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[TickRow2],
-                                 timerValues: TimerValues): Iterator[VecOut] = {
-      var s = if (state.exists()) state.get().s else Seq.fill(nInputs)(Double.NaN)
-      val out = scala.collection.mutable.ArrayBuffer[VecOut]()
-      rows.toSeq.sortBy(r => (r.tsMicros, r.src, r.seq)).foreach { r =>
-        val (s2, o) = step(s, r)
-        s = s2
-        o.foreach(v => out += VecOut(key, r.tsMicros, r.seq, v))
-      }
-      state.update(ScanState(s))
-      out.iterator
-    }
-  }
-
-  def structTws(ticks: Dataset[TickRow2], nInputs: Int): Dataset[VecOut] = {
-    implicit val outEnc = Encoders.product[VecOut]
-    ticks.groupByKey(_.key)(Encoders.STRING)
-      .transformWithState(new StructProcessor(nInputs), TimeMode.None(), OutputMode.Append())
-  }
-
-  /** Vector-output scan as a StatefulProcessor — [[StatefulOps.scanVecStream]]
-    * (the values_at / times_at history surfaces) on the
-    * transformWithState runtime. */
-  class ScanVecProcessor(step: StatefulOps.StepV)
-      extends StatefulProcessor[String, TickRow, VecOut] {
-    @transient private var state: ValueState[ScanState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[ScanState]("scanv", Encoders.product[ScanState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[TickRow],
-                                 timerValues: TimerValues): Iterator[VecOut] = {
-      var s = if (state.exists()) state.get().s else step.init
-      val out = scala.collection.mutable.ArrayBuffer[VecOut]()
-      rows.toSeq.sortBy(r => (r.tsMicros, r.seq >= 0, math.abs(r.seq))).foreach { r =>
-        val (s2, o) = step.fn(s, r)
-        s = s2
-        o.foreach(v => out += VecOut(key, r.tsMicros, r.seq, v))
-      }
-      state.update(ScanState(s))
-      out.iterator
-    }
-  }
-
-  /** Run a [[StatefulOps.StepV]] on the transformWithState runtime. */
-  def scanVecTws(ticks: Dataset[TickRow], step: StatefulOps.StepV): Dataset[VecOut] = {
-    implicit val outEnc = Encoders.product[VecOut]
-    ticks.groupByKey(_.key)(Encoders.STRING)
-      .transformWithState(new ScanVecProcessor(step), TimeMode.None(), OutputMode.Append())
+  /** Group `ds` by `key` and run `fold` per key on [[FoldProcessor]]. */
+  def foldByKey[K: Encoder, I, S: Encoder, O: Encoder](ds: Dataset[I], key: I => K,
+      outputMode: OutputMode, idleTtlMs: Option[Long] = None)(
+      fold: (K, Iterator[I], Option[S]) => (Option[S], Iterator[O])): Dataset[O] = {
+    require(idleTtlMs.forall(_ > 0), s"idle TTL must be positive, got $idleTtlMs")
+    ds.groupByKey(key).transformWithState(
+      new FoldProcessor[K, I, S, O](implicitly[Encoder[S]], idleTtlMs, fold),
+      if (idleTtlMs.isDefined) TimeMode.ProcessingTime() else TimeMode.None(), outputMode)
   }
 
   case class Heartbeat(key: String, deadlineMs: Long)

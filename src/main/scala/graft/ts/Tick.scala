@@ -80,6 +80,10 @@ object GraftSession {
       // suite's classes (~tens of KB each — well under heap pressure;
       // GC measured at 1.6% of bench wall before the change).
       .config("spark.sql.codegen.cache.maxEntries", "8192")
+      // every stateful streaming twin runs on transformWithState, which
+      // requires the RocksDB state store
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()

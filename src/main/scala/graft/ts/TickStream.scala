@@ -227,8 +227,8 @@ final case class TickStream(df: DataFrame) {
     * deeper history requests FAIL — exactly the error a csp node hits
     * when its buffer was sized too small — instead of silently working in
     * batch and then failing on the realtime engine. Streaming twin: the
-    * frame/state sizing in StatefulOps/TwsOps is bounded by the same
-    * request sizes. Carried as column metadata, so it survives the
+    * per-key state vectors of the StatefulOps steps are bounded by the
+    * same request sizes. Carried as column metadata, so it survives the
     * operator chain. */
   def withBufferPolicy(tickCount: Int): TickStream = {
     require(tickCount >= 1, "tick_count must be >= 1")
@@ -644,9 +644,9 @@ final case class TickStream(df: DataFrame) {
     * events already scheduled at that time").
     *
     * `endTime` drops alarms scheduled past the run's end, as the engine
-    * does at shutdown. Streaming twin: event-time timers in
-    * `TwsOps.transformWithState` (TwsOps.scala) — this is the sim-replay
-    * lowering of the same construct. */
+    * does at shutdown. Streaming twin: the event-time timers of
+    * `TwsOps.TimeoutProcessor` — this is the sim-replay lowering of the
+    * same construct. */
   def scheduleAlarm(delaySec: Column, value: Column,
                     endTime: Option[java.sql.Timestamp] = None,
                     handleAs: Option[String] = None): TickStream = {

@@ -89,4 +89,16 @@ class BenchSpec extends AnyFunSuite {
     assert(root.path("queries").path("z_broken").path("err_count").asInt == 2)
     assert(math.abs(root.path("total_sec").asDouble - 0.1244) < 1e-9)
   }
+
+  test("writeRecordFile never writes the per-core twin: a filtered run cannot clobber medians_c*.json") {
+    // a filtered run pointed (by SPARK_GRAFT_BENCH_OUT) at a
+    // medians_latest.json path must leave the per-core records alone;
+    // only the full-suite branch of main writes the twin
+    val dir = java.nio.file.Files.createTempDirectory("benchtwin")
+    val out = dir.resolve("medians_latest.json")
+    val rs = Seq(Bench.QueryResult("q_one", 0.5, 0.4, None, 0, Vector(0.5, 0.4)))
+    Bench.writeRecordFile(rs, iters = 2, sfDir = "/tmp/sf", out = out.toString, cpus = 8)
+    val written = java.nio.file.Files.list(dir).toArray.map(_.toString.split('/').last).toSet
+    assert(written == Set("medians_latest.json"), s"unexpected record files: $written")
+  }
 }

@@ -363,7 +363,6 @@ class ChangePointSpec extends AnyFunSuite {
 
   test("bocpdStream == batch bocpdBernoulliBy across micro-batch boundaries") {
     import spark.implicits._
-    implicit val sq = spark.sqlContext
     val rnd = new scala.util.Random(97)
     val evs = (0 until 150).flatMap { i =>
       Seq(ChangePointStream.BcEvent("a", i.toLong,
@@ -374,19 +373,12 @@ class ChangePointSpec extends AnyFunSuite {
       evs.map(e => (e.key, e.tsMicros, e.x)).toDF("k", "t", "x"),
       "k", "t", "x", hazard = 0.02)
       .collect().map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-    val mem = MemoryStream[ChangePointStream.BcEvent]
-    val q = ChangePointStream.bocpdStream(mem.toDS(), 0.02)
-      .writeStream.format("memory").queryName("bc_out").outputMode("append")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      evs.grouped(80).foreach { c => mem.addData(c.toIndexedSeq: _*); q.processAllAvailable() }
-      val live = spark.table("bc_out").collect()
-      assert(live.length == evs.length)
-      live.foreach { r =>
-        val k = (r.getString(0), r.getLong(1))
-        assert((r.getLong(2), r.getDouble(3)) == batch(k), s"$k")
-      }
-    } finally q.stop()
+    val live = RestartParity.run(evs, seed = 364)(ChangePointStream.bocpdStream(_, 0.02))
+    assert(live.length == evs.length)
+    live.foreach { r =>
+      val k = (r.key, r.tsMicros)
+      assert((r.runMap, r.pChange) == batch(k), s"$k")
+    }
   }
 
   test("peltBy/bocpdBernoulliBy: a null key forms its own group, matching the family") {
@@ -431,7 +423,6 @@ class ChangePointSpec extends AnyFunSuite {
 
   test("cusumStream/pageHinkleyStream replay the batch arms across batch boundaries") {
     import spark.implicits._
-    implicit val sq = spark.sqlContext
     val df = rows.toDF("k", "t", "v")
     val mu0 = BigDecimal(50); val k = BigDecimal(1); val h = BigDecimal(60)
     val batchCp = ChangePoint.cusumBy(df, "k", "t", "v", mu0, k, h)
@@ -440,37 +431,26 @@ class ChangePointSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
 
     val evs = rows.sortBy(_._2).map { case (key, t, v) => CpEvent(key, t, v) }
-    val memC = MemoryStream[CpEvent]
-    val qc = ChangePointStream.cusumStream(memC.toDS(), mu0, k, h)
-      .writeStream.format("memory").queryName("cp_out").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    val memP = MemoryStream[CpEvent]
-    val qp = ChangePointStream.pageHinkleyStream(memP.toDS(), 0.4, 40.0)
-      .writeStream.format("memory").queryName("ph_out").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      evs.grouped(evs.length / 4 + 1).foreach { c =>
-        memC.addData(c.toIndexedSeq: _*); qc.processAllAvailable()
-        memP.addData(c.toIndexedSeq: _*); qp.processAllAvailable()
-      }
-      // latest emission per key = the answer (Update semantics)
-      def latest(tab: String) = spark.table(tab).collect()
-        .zipWithIndex.groupBy(_._1.getString(0))
-        .map { case (key, rs) => key -> rs.maxBy(_._2)._1 }
-      latest("cp_out").foreach { case (key, r) =>
-        assert(Seq(r.getLong(1), r.getDouble(2), r.getDouble(3),
-          r.get(4), r.get(5)) == batchCp(key), s"cusum $key")
-      }
-      latest("ph_out").foreach { case (key, r) =>
-        assert(Seq(r.getLong(1), r.getDouble(2), r.getDouble(3),
-          r.get(4), r.get(5)) == batchPh(key), s"ph $key")
-      }
-    } finally { qc.stop(); qp.stop() }
+    def box(t: Option[Long]): Any = t.map(Long.box).orNull
+    // latest emission per key = the answer (Update semantics)
+    val cp = RestartParity.lastPer(RestartParity.run(evs, seed = 432, outputMode = "update")(
+      ChangePointStream.cusumStream(_, mu0, k, h)))(_.key)
+    assert(cp.keySet == batchCp.keySet)
+    cp.foreach { case (key, r) =>
+      assert(Seq(r.n, r.sPosMax, r.sNegMax, box(r.alarmPosTs), box(r.alarmNegTs)) ==
+        batchCp(key), s"cusum $key")
+    }
+    val ph = RestartParity.lastPer(RestartParity.run(evs, seed = 448, outputMode = "update")(
+      ChangePointStream.pageHinkleyStream(_, 0.4, 40.0)))(_.key)
+    assert(ph.keySet == batchPh.keySet)
+    ph.foreach { case (key, r) =>
+      assert(Seq(r.n, r.phIncMax, r.phDecMax, box(r.alarmIncTs), box(r.alarmDecTs)) ==
+        batchPh(key), s"ph $key")
+    }
   }
 
   test("mannKendallStream: final window rows == batch mannKendall / mannKendallBy") {
     import spark.implicits._
-    implicit val sq = spark.sqlContext
     val rnd = new scala.util.Random(47)
     // 4 tumbling windows of 1000 us, drifting metric, repeated cells
     val evs = (0 until 1200).map(i =>
@@ -482,33 +462,24 @@ class ChangePointSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
     graft.util.Caching.release()
 
-    val mem = MemoryStream[MkEvent]
-    val q = TrendStream.mannKendallStream(mem.toDS(), 1000L)
-      .writeStream.format("memory").queryName("mk_out").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      evs.grouped(300).foreach { c => mem.addData(c.toIndexedSeq: _*); q.processAllAvailable() }
-      val live = spark.table("mk_out").collect()
-        .zipWithIndex.groupBy(_._1.getLong(0))
-        .map { case (w, rs) => w -> rs.maxBy(_._2)._1 }
-      assert(live.keySet == batchBy.keySet)
-      live.foreach { case (w, r) =>
-        assert(Seq(r.getLong(1), r.getDouble(2), r.get(3), r.get(4)) == batchBy(w),
-          s"window $w")
-        // and == the global batch test on that window's rows
-        val slice = df.filter(col("w") === w)
-        val g = graft.operators.RankTests
-          .mannKendall(slice, "tsMicros", "value").head
-        assert(Seq(r.getDouble(2), r.get(3), r.get(4)) ==
-          Seq(g.getDouble(1), g.get(2), g.get(3)), s"window $w vs global")
-        graft.util.Caching.release()
-      }
-    } finally q.stop()
+    val live = RestartParity.lastPer(RestartParity.run(evs, seed = 471, outputMode = "update")(
+      TrendStream.mannKendallStream(_, 1000L)))(_.wStart)
+    assert(live.keySet == batchBy.keySet)
+    live.foreach { case (w, r) =>
+      val varS = r.varS.map(Double.box).orNull
+      val z = r.z.map(Double.box).orNull
+      assert(Seq(r.n, r.s, varS, z) == batchBy(w), s"window $w")
+      // and == the global batch test on that window's rows
+      val slice = df.filter(col("w") === w)
+      val g = graft.operators.RankTests
+        .mannKendall(slice, "tsMicros", "value").head
+      assert(Seq(r.s, varS, z) == Seq(g.getDouble(1), g.get(2), g.get(3)), s"window $w vs global")
+      graft.util.Caching.release()
+    }
   }
 
   test("pettittStream: final window rows == batch pettittBy on the window slices") {
     import spark.implicits._
-    implicit val sq = spark.sqlContext
     val rnd = new scala.util.Random(59)
     // 4 windows; a level shift inside each; ties via integer values
     val evs = (0 until 1200).map(i => MkEvent(i.toLong * 3 + 11,
@@ -519,25 +490,16 @@ class ChangePointSpec extends AnyFunSuite {
       .pettittBy(df, "w", "tsMicros", "value")
       .collect().map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
     graft.util.Caching.release()
-    val mem = MemoryStream[MkEvent]
-    val q = TrendStream.pettittStream(mem.toDS(), 1000L)
-      .writeStream.format("memory").queryName("pt_out").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      evs.grouped(350).foreach { c => mem.addData(c.toIndexedSeq: _*); q.processAllAvailable() }
-      val live = spark.table("pt_out").collect()
-        .zipWithIndex.groupBy(_._1.getLong(0))
-        .map { case (w, rs) => w -> rs.maxBy(_._2)._1 }
-      assert(live.keySet == batch.keySet)
-      live.foreach { case (w, r) =>
-        assert(r.toSeq.drop(1) == batch(w), s"window $w: ${r.toSeq} vs ${batch(w)}")
-      }
-    } finally q.stop()
+    val live = RestartParity.lastPer(RestartParity.run(evs, seed = 523, outputMode = "update")(
+      TrendStream.pettittStream(_, 1000L)))(_.wStart)
+    assert(live.keySet == batch.keySet)
+    live.foreach { case (w, r) =>
+      assert(r.productIterator.drop(1).toSeq == batch(w), s"window $w: $r vs ${batch(w)}")
+    }
   }
 
   test("amocStream: final window rows == batch amocSplitBy on the window slices") {
     import spark.implicits._
-    implicit val sq = spark.sqlContext
     val rnd = new scala.util.Random(67)
     // 4 windows; a level shift inside each
     val evs = (0 until 1200).map(i => MkEvent(i.toLong * 3 + 7,
@@ -548,20 +510,12 @@ class ChangePointSpec extends AnyFunSuite {
       .amocSplitBy(df, "w", "tsMicros", "value")
       .collect().map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
     graft.util.Caching.release()
-    val mem = MemoryStream[MkEvent]
-    val q = TrendStream.amocStream(mem.toDS(), 1000L)
-      .writeStream.format("memory").queryName("amoc_out").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      evs.grouped(350).foreach { c => mem.addData(c.toIndexedSeq: _*); q.processAllAvailable() }
-      val live = spark.table("amoc_out").collect()
-        .zipWithIndex.groupBy(_._1.getLong(0))
-        .map { case (w, rs) => w -> rs.maxBy(_._2)._1 }
-      assert(live.keySet == batch.keySet)
-      live.foreach { case (w, r) =>
-        assert(r.toSeq.drop(1) == batch(w), s"window $w: ${r.toSeq} vs ${batch(w)}")
-      }
-    } finally q.stop()
+    val live = RestartParity.lastPer(RestartParity.run(evs, seed = 552, outputMode = "update")(
+      TrendStream.amocStream(_, 1000L)))(_.wStart)
+    assert(live.keySet == batch.keySet)
+    live.foreach { case (w, r) =>
+      assert(r.productIterator.drop(1).toSeq == batch(w), s"window $w: $r vs ${batch(w)}")
+    }
   }
 
   test("mannKendallStream: cell cap trips loudly") {
@@ -715,7 +669,6 @@ class ChangePointSpec extends AnyFunSuite {
 
   test("bocpdGaussianStream == batch bocpdGaussianBy across micro-batch boundaries") {
     import spark.implicits._
-    implicit val sq = spark.sqlContext
     val rnd = new scala.util.Random(31)
     val prior = ChangePoint.GaussianPrior(10.0, 1.0, 1.5, 20.0) // nu0 = 3: odd-dof arm
     val evs = (0 until 150).flatMap { i =>
@@ -728,19 +681,13 @@ class ChangePointSpec extends AnyFunSuite {
       "k", "t", "x", hazard = 0.02, prior)
       .collect().map(r => (r.getString(0), r.getLong(1)) ->
         (r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
-    val mem = MemoryStream[ChangePointStream.GaEvent]
-    val q = ChangePointStream.bocpdGaussianStream(mem.toDS(), 0.02, prior)
-      .writeStream.format("memory").queryName("ga_out").outputMode("append")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      evs.grouped(80).foreach { c => mem.addData(c.toIndexedSeq: _*); q.processAllAvailable() }
-      val live = spark.table("ga_out").collect()
-      assert(live.length == evs.length)
-      live.foreach { r =>
-        val k = (r.getString(0), r.getLong(1))
-        assert((r.getLong(2), r.getDouble(3), r.getDouble(4)) == batch(k), s"$k")
-      }
-    } finally q.stop()
+    val live = RestartParity.run(evs, seed = 716)(
+      ChangePointStream.bocpdGaussianStream(_, 0.02, prior))
+    assert(live.length == evs.length)
+    live.foreach { r =>
+      val k = (r.key, r.tsMicros)
+      assert((r.runMap, r.pChange, r.muMap) == batch(k), s"$k")
+    }
   }
 
   test("sequential DPs: duplicate order keys are loud in-scan (VERDICT r18 #2)") {
@@ -888,27 +835,41 @@ class ChangePointSpec extends AnyFunSuite {
   }
 
   test("trend-stream window state: idle windows release their cell tables on TTL") {
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    import graft.streaming.TrendStream.{MkCell, MkState}
-    // timed-out wake-up: state removed, nothing emitted
-    val timedOut = TestGroupState.create[MkState](
-      Optional.of(MkState(List(MkCell(1L, 2.0, 1L)))),
-      GroupStateTimeout.ProcessingTimeTimeout, 1000L,
-      Optional.empty[Long](), hasTimedOut = true)
-    val out = TrendStream.foldCells(0L, Iterator.empty, timedOut,
-      maxCells = 10, ttlMs = Some(60000L), op = "mannKendallStream")
-    assert(out.isEmpty && timedOut.isRemoved, "timeout must remove state, emit nothing")
-    // live path: cells fold and the idle timeout is (re)armed
-    val live = TestGroupState.create[MkState](
-      Optional.empty[MkState](), GroupStateTimeout.ProcessingTimeTimeout, 1000L,
-      Optional.empty[Long](), hasTimedOut = false)
-    val cells = TrendStream.foldCells(0L,
-      Iterator(MkEvent(1L, 2.0), MkEvent(2L, 3.0)), live,
-      maxCells = 10, ttlMs = Some(60000L), op = "mannKendallStream")
-    assert(cells.exists(_.length == 2) && live.isUpdated)
-    assert(live.getTimeoutTimestampMs.isPresent &&
-      live.getTimeoutTimestampMs.get() == 61000L,
-      "idle TTL must be armed from the batch processing time")
+    // a live query with a 3 s idle TTL: window 0 folds one event per
+    // batch (the second re-arms the timer), sits idle past its timer, and
+    // a late event into the same window then opens a FRESH cell table
+    // (n = 1) — while without a TTL the same late event extends the kept
+    // table (n = 3)
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    def lateN(ttl: Option[Long], name: String): Long = {
+      val mem = MemoryStream[MkEvent]
+      val q = TrendStream.mannKendallStream(mem.toDS(), 1000000L, stateTtlMs = ttl)
+        .writeStream.format("memory").queryName(name).outputMode("update")
+        .trigger(Trigger.ProcessingTime(100)).start()
+      def rows = spark.table(name).as[TrendStream.MkReadout].collect()
+      def waitFor(p: => Boolean): Unit = {
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (!p) {
+          assert(System.nanoTime() < deadline, s"$name: timed out")
+          Thread.sleep(50)
+        }
+      }
+      def stateRows = Option(q.lastProgress).flatMap(_.stateOperators.headOption)
+        .map(_.numRowsTotal)
+      try {
+        mem.addData(MkEvent(1L, 2.0))
+        waitFor(rows.exists(_.n == 1L))
+        mem.addData(MkEvent(2L, 3.0))
+        waitFor(rows.exists(_.n == 2L))
+        if (ttl.isDefined) waitFor(stateRows.contains(0L)) // the timer cleared the window
+        else Thread.sleep(3500)
+        mem.addData(MkEvent(3L, 4.0))
+        waitFor(rows.length == 3)
+        rows.last.n
+      } finally q.stop()
+    }
+    assert(lateN(Some(3000L), "mk_ttl") == 1L, "an expired window must restart empty")
+    assert(lateN(None, "mk_no_ttl") == 3L, "without a TTL the window keeps its cells")
   }
 }

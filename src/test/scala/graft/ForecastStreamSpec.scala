@@ -20,7 +20,6 @@ class ForecastStreamSpec extends AnyFunSuite {
   test("holtWintersStream == batch holtWinters bit-for-bit across " +
     "micro-batch boundaries") {
     import spark.implicits._
-    implicit val sq = spark.sqlContext
     val rnd = new scala.util.Random(77)
     val evs = Seq(1L, 2L).flatMap { k =>
       (0 until 40).map(i =>
@@ -35,20 +34,10 @@ class ForecastStreamSpec extends AnyFunSuite {
         r.getDouble(4), r.getDouble(5)))
       .sortBy(t => (t._1, t._2)).toSeq
 
-    val mem = MemoryStream[HwEvent]
-    val out = ForecastStream.holtWintersStream(mem.toDS(), 7, 0.4, 0.2, 0.3)
-    val q = out.writeStream.format("memory").queryName("hw_live")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      evs.grouped(17).foreach { c =>
-        mem.addData(c.toIndexedSeq: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val live = spark.table("hw_live").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-        if (r.isNullAt(3)) None else Some(r.getDouble(3)),
-        r.getDouble(4), r.getDouble(5)))
-      .sortBy(t => (t._1, t._2)).toSeq
+    val live = RestartParity.run(evs.sortBy(_.tsMicros), seed = 20)(
+        ForecastStream.holtWintersStream(_, 7, 0.4, 0.2, 0.3))
+      .map(r => (r.key, r.t, r.y, r.fitted, r.level, r.trend))
+      .sortBy(t => (t._1, t._2))
     assert(live == batch,
       "stream rows must be bit-identical to the batch Holt-Winters fold")
   }

@@ -173,8 +173,8 @@ class LawsSpec extends AnyFunSuite {
     assert(ev.count(e => e._1 == "a" && e._2 == "added") == 2)
     assert(ev.toSet.contains(("a", "removed", day(3).take(10))))
     assert(ev.count(e => e._1 == "b" && e._2 == "added") == 1)
-    // streaming parity: removal rows (seq < 0) call state.remove() —
-    // the count restarts exactly like the batch epochs
+    // streaming parity: removal rows (seq < 0) clear the key's state —
+    // the count restarts exactly like the batch epochs, across restarts
     def us(i: Int) = java.sql.Timestamp.valueOf(day(i)).getTime * 1000L
     import graft.streaming.StatefulOps
     val spark2 = spark; import spark2.implicits._
@@ -182,8 +182,9 @@ class LawsSpec extends AnyFunSuite {
       StatefulOps.TickRow("a", us(1), 0, 1.0), StatefulOps.TickRow("a", us(2), 1, 2.0),
       StatefulOps.TickRow("a", us(3), -1, 0.0), // removal marker
       StatefulOps.TickRow("a", us(4), 2, 3.0), StatefulOps.TickRow("a", us(5), 3, 4.0),
-      StatefulOps.TickRow("b", us(2), 0, 5.0), StatefulOps.TickRow("b", us(4), 1, 6.0)).toDS()
-    val sc = StatefulOps.countStreamWithRemoval(ticks).collect()
+      StatefulOps.TickRow("b", us(2), 0, 5.0), StatefulOps.TickRow("b", us(4), 1, 6.0))
+      .sortBy(r => (r.tsMicros, r.seq < 0, math.abs(r.seq)))
+    val sc = RestartParity.run(ticks, seed = 176)(StatefulOps.countStreamWithRemoval)
       .sortBy(r => (r.key, r.tsMicros)).map(r => (r.key, r.count))
     assert(sc.toSeq == Seq(("a", 1L), ("a", 2L), ("a", 1L), ("a", 2L), ("b", 1L), ("b", 2L)))
   }

@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.MatrixProfile
@@ -94,7 +92,6 @@ class MatrixProfileSpec extends AnyFunSuite {
   test("stream twin replays batch bit-for-bit across micro-batch " +
     "boundaries (shared exact-integer core)") {
     import spark.implicits._
-    implicit val sq = spark.sqlContext
     val rnd = new scala.util.Random(99)
     val w = 4; val band = 6
     val evs = Seq("s1", "s2").flatMap { k =>
@@ -103,19 +100,10 @@ class MatrixProfileSpec extends AnyFunSuite {
     val batch = runBatch(
       evs.map(e => MpRow(e.key, e.tsMicros, e.x)), w, band)
 
-    val mem = MemoryStream[MpEvent]
-    val out = MatrixProfileStream.leftProfileStream(mem.toDS(), w, band)
-    val q = out.writeStream.format("memory").queryName("mp_live")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      evs.grouped(evs.length / 3 + 1).foreach { c =>
-        mem.addData(c.toIndexedSeq: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val live = spark.table("mp_live").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(3), r.getLong(5),
-        r.getLong(4), r.getDouble(6)))
-      .sortBy(t => (t._1, t._2)).toSeq
+    val live = RestartParity.run(evs.sortBy(_.tsMicros), seed = 94)(
+        MatrixProfileStream.leftProfileStream(_, w, band))
+      .map(r => (r.key, r.ord, r.nnOrd, r.dist2, r.nnLag, r.dist))
+      .sortBy(t => (t._1, t._2))
     assert(live == batch,
       "stream rows must be bit-identical to the batch profile")
   }
@@ -195,7 +183,6 @@ class MatrixProfileSpec extends AnyFunSuite {
   test("z stream twin replays batch bit-for-bit across micro-batch " +
     "boundaries") {
     import spark.implicits._
-    implicit val sq = spark.sqlContext
     val rnd = new scala.util.Random(321)
     val w = 4; val band = 6
     val evs = (0 until 60).map(i =>
@@ -205,18 +192,10 @@ class MatrixProfileSpec extends AnyFunSuite {
         "key", "ord", "x", w, band)
       .collect().map(r => (r.getLong(1), r.getLong(3), r.getDouble(5)))
       .sortBy(_._1).toSeq
-    val mem = MemoryStream[MpEvent]
-    val out = MatrixProfileStream.leftProfileZStream(mem.toDS(), w, band)
-    val q = out.writeStream.format("memory").queryName("mpz_live")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      evs.grouped(13).foreach { c =>
-        mem.addData(c.toIndexedSeq: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val live = spark.table("mpz_live").collect()
-      .map(r => (r.getLong(1), r.getLong(3), r.getDouble(5)))
-      .sortBy(_._1).toSeq
+    val live = RestartParity.run(evs, seed = 195)(
+        MatrixProfileStream.leftProfileZStream(_, w, band))
+      .map(r => (r.ord, r.nnOrd, r.dist))
+      .sortBy(_._1)
     assert(live == batch,
       "z stream rows must be bit-identical to the batch profile")
   }

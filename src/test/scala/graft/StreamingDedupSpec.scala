@@ -18,12 +18,7 @@ case class SdDoc(docId: Long, text: String)
   * mid-stream kill + checkpoint recovery.
   */
 class StreamingDedupSpec extends AnyFunSuite {
-  lazy val spark = {
-    val s = TestSpark.spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+  lazy val spark = TestSpark.spark
 
   
 

@@ -17,12 +17,7 @@ case class SpDoc(doc_id: Long, text: String)
   * open at a micro-batch boundary) is the point under test: the chop
   * size is coprime to the stream count so bins straddle batches. */
 class StreamingPackingSpec extends AnyFunSuite {
-  lazy val spark = {
-    val s = TestSpark.spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+  lazy val spark = TestSpark.spark
 
   lazy val corpus: Seq[SpDoc] = {
     val rnd = new scala.util.Random(101L)

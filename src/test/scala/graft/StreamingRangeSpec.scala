@@ -69,7 +69,6 @@ class StreamingRangeSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.streaming.BehaviorStream
     import graft.streaming.BehaviorStream.FunnelEvent
-    implicit val sq = spark.sqlContext
 
     val steps = Seq("view", "click", "purchase")
     val W = 7L * 86400
@@ -82,22 +81,13 @@ class StreamingRangeSpec extends AnyFunSuite {
     val rows = evd.select(col("user_id"), unix_micros(col("ts")), col("event_type"))
       .as[(Long, Long, String)].collect()
       .map(r => FunnelEvent(r._1, r._2, r._3)).sortBy(_.tsMicros)
-    val mem = MemoryStream[FunnelEvent]
-    val q = BehaviorStream.funnelStream(mem.toDS(), steps, W)
-      .writeStream.outputMode("append").format("memory").queryName("fn_par")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      rows.grouped(rows.length / 4 + 1).foreach { c =>
-        mem.addData(c.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      val adv = spark.table("fn_par").as[(Long, Int, Long, Long)].collect()
-      val byStage = adv.groupBy(_._2).map { case (stage, rs) =>
-        stage -> ((rs.length.toLong, rs.map(_._4).sum))
-      }
-      steps.indices.foreach { i =>
-        assert(byStage.getOrElse(i, (0L, 0L)) == batch(i), s"stage $i")
-      }
-    } finally q.stop()
+    val adv = RestartParity.run(rows.toSeq, seed = 68)(BehaviorStream.funnelStream(_, steps, W))
+    val byStage = adv.groupBy(_.stage).map { case (stage, rs) =>
+      stage -> ((rs.length.toLong, rs.map(_.lagUs).sum))
+    }
+    steps.indices.foreach { i =>
+      assert(byStage.getOrElse(i, (0L, 0L)) == batch(i), s"stage $i")
+    }
   }
 
   test("RfmLive boundary refresh: streamed snapshot == batch Behavior.rfm, bit-identical") {

@@ -14,12 +14,7 @@ case class StVec(vec_id: Long, embedding: Seq[Float])
   * (≡ the batch greedy kept-chain rule on replay) and frozen-ratio DSIR
   * scoring (stateless ⇒ stream equals batch exactly). */
 class StreamingSelectionSpec extends AnyFunSuite {
-  lazy val spark = {
-    val s = TestSpark.spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+  lazy val spark = TestSpark.spark
 
   lazy val fixtureEmb = spark.read.parquet(s"${TestSpark.sf}/embeddings.parquet")
   lazy val fixtureDocs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")

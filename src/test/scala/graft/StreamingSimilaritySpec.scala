@@ -17,12 +17,7 @@ case class SsSig(media_id: Long, dhash: Long)
   * [[Ivf.topK]] over the same prebuilt index — including the centroid
   * probe tie-breaks, which the streaming side evaluates JVM-side. */
 class StreamingSimilaritySpec extends AnyFunSuite {
-  lazy val spark = {
-    val s = TestSpark.spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+  lazy val spark = TestSpark.spark
 
   test("streaming ivfTopK == batch Ivf.topK, bit-equal cosines") {
     import org.apache.spark.sql.Encoders

@@ -9,57 +9,45 @@ import graft.streaming.StatefulOps.TickRow
 import graft.ts.Sources
 
 /** Batch/streaming parity: the same operator run in simulation mode
-  * (batch sorted scan) and realtime mode (flatMapGroupsWithState over
-  * micro-batches) must produce identical results — the reference's
-  * dual-execution guarantee (Execution-Modes.md).
+  * (batch sorted scan) and realtime mode (the per-key fold on
+  * transformWithState over micro-batches, killed and restarted from its
+  * checkpoint by [[RestartParity]]) must produce identical results — the
+  * reference's dual-execution guarantee (Execution-Modes.md). Test names
+  * that say "both runtimes" predate the single streaming runtime: they
+  * mean batch and streaming.
   */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  import org.apache.spark.sql.{Encoder, Encoders}
+  import graft.ts.TickStream
+  import graft.operators.{Sequential, Stats}
+  import graft.streaming.StatefulOps.{PairRow, TickRow2, ValOut}
+  import RestartParity.same
+
+  implicit val tickEnc: Encoder[TickRow] = Encoders.product[TickRow]
+  implicit val tick2Enc: Encoder[TickRow2] = Encoders.product[TickRow2]
+
+  private def rowsOf(x: TickStream): Seq[TickRow] =
+    StatefulOps.toTickRows(x).collect().toSeq.sortBy(r => (r.tsMicros, r.seq))
+
   test("streaming EMA across micro-batches == batch Sequential.ema") {
-    import org.apache.spark.sql.Encoders
-    implicit val tickEnc = Encoders.product[TickRow]
-    implicit val outEnc = Encoders.product[StatefulOps.EmaOut]
-
+    // the benchmark's flatMapGroupsWithState reference arm
     val ev = Sources.events(spark, TestSpark.sf)
-    val batch = graft.operators.Sequential.ema(ev, 0.2).df
-      .select("key", "seq", "ema").collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
-
-    val ticks = StatefulOps.toTickRows(ev).collect().toSeq.sortBy(r => (r.tsMicros, r.seq))
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[TickRow]
-    val q = StatefulOps.emaStream(mem.toDS(), 0.2).writeStream.outputMode("append")
-      .format("memory").queryName("ema_par").trigger(Trigger.ProcessingTime(0)).start()
-    // 5 in-order micro-batches: state must carry across batch boundaries
-    ticks.grouped(ticks.size / 5 + 1).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-    val stream = spark.table("ema_par").collect()
-      .map(r => (r.getString(0), r.getLong(2)) -> r.getDouble(4)).toMap
-    q.stop()
-
-    assert(stream.size == batch.size)
-    stream.foreach { case (k, v) =>
-      assert(math.abs(v - batch(k)) < 1e-12, s"$k: stream $v vs batch ${batch(k)}")
-    }
+    val batch = batchMap(Sequential.ema(ev, 0.2), "ema")
+    val stream = RestartParity.run(rowsOf(ev), seed = 19)(StatefulOps.emaStream(_, 0.2))
+      .map(o => (o.key, o.seq) -> o.ema).toMap
+    assertParity("ema_par", batch, stream)
   }
 
   test("streaming gate buffers across micro-batches") {
-    import org.apache.spark.sql.Encoders
-    implicit val tickEnc = Encoders.product[TickRow]
-    implicit val sq = spark.sqlContext
     // key k: data at t1,t2 while closed; open at t3 → flush [1,2]; data t4 open → [4]
     val rows = Seq(
       TickRow("k", 1000L, 0, 1.0), TickRow("k", 2000L, 1, 2.0),
       TickRow("k", 3000L, -2, 1.0), // release open (seq<0 encoding)
       TickRow("k", 4000L, 3, 4.0))
-    val mem = MemoryStream[TickRow]
-    val q = StatefulOps.gateStream(mem.toDS()).writeStream.outputMode("append")
-      .format("memory").queryName("gate_par").trigger(Trigger.ProcessingTime(0)).start()
-    mem.addData(rows.take(2): _*); q.processAllAvailable()
-    mem.addData(rows.drop(2): _*); q.processAllAvailable()
-    val out = spark.table("gate_par").collect()
-      .map(r => (r.getLong(1), r.getSeq[Double](3).toList)).sortBy(_._1)
-    q.stop()
+    val out = RestartParity.run(rows, seed = 46)(StatefulOps.gateStream)
+      .map(o => (o.tsMicros, o.values.toList)).sortBy(_._1)
     assert(out.toList == List((3000L, List(1.0, 2.0)), (4000L, List(4.0))))
   }
 
@@ -68,12 +56,8 @@ class StreamingSpec extends AnyFunSuite {
   // (streaming) runs of the same operator produce identical results
   // (Execution-Modes.md). Each row runs one §2.3/§2.6 operator through
   // BOTH lowerings on the events fixture — the batch window/sorted-scan
-  // and the flatMapGroupsWithState twin fed in 5 micro-batches — and
-  // asserts per-(key, seq) equality.
-
-  import org.apache.spark.sql.{Dataset, Encoders}
-  import graft.ts.TickStream
-  import graft.operators.{Sequential, Stats}
+  // and the streaming twin fed in seeded micro-batches with two
+  // kill/restart cycles — and asserts per-(key, seq) bit-equality.
 
   private def batchMap(ts: TickStream, valueCol: String): Map[(String, Long), Double] = {
     val df = ts.df.select(
@@ -84,29 +68,25 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
   }
 
-  private def runStream(name: String, rows: Seq[TickRow],
-      build: Dataset[TickRow] => Dataset[StatefulOps.ValOut]): Map[(String, Long), Double] = {
-    implicit val tickEnc = Encoders.product[TickRow]
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[TickRow]
-    val q = build(mem.toDS()).writeStream.outputMode("append")
-      .format("memory").queryName(name).trigger(Trigger.ProcessingTime(0)).start()
-    // 5 in-order micro-batches: state must carry across batch boundaries
-    rows.grouped(rows.size / 5 + 1).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-    val out = spark.table(name).collect()
-      .map(r => (r.getString(0), r.getLong(2)) -> r.getDouble(3)).toMap
-    q.stop()
-    out
-  }
+  private def bySeq(out: Seq[ValOut]): Map[(String, Long), Double] =
+    out.map(o => (o.key, o.seq) -> o.value).toMap
 
-  private def assertParity(name: String, batch: Map[(String, Long), Double],
-      stream: Map[(String, Long), Double]): Unit = {
+  private def assertParity[K](name: String, batch: Map[K, Double], stream: Map[K, Double]): Unit = {
     assert(stream.size == batch.size,
       s"$name: stream ${stream.size} rows vs batch ${batch.size}")
     batch.foreach { case (k, b) =>
-      val s = stream.getOrElse(k, Double.NaN)
-      val ok = (b.isNaN && s.isNaN) || math.abs(s - b) <= 1e-9 * math.max(1.0, math.max(math.abs(s), math.abs(b)))
-      assert(ok, s"$name @ $k: stream $s vs batch $b")
+      val s = stream.getOrElse(k, fail(s"$name: no stream row for $k"))
+      assert(same(s, b), s"$name @ $k: stream $s vs batch $b")
+    }
+  }
+
+  private def assertVecParity[K](name: String, batch: Map[K, Seq[Double]],
+                                 stream: Map[K, Seq[Double]]): Unit = {
+    assert(stream.size == batch.size, s"$name: ${stream.size} vs ${batch.size}")
+    batch.foreach { case (k, b) =>
+      val s = stream.getOrElse(k, fail(s"$name: no stream row for $k"))
+      assert(s.length == b.length && s.zip(b).forall { case (x, y) => same(x, y) },
+        s"$name @ $k: $s vs $b")
     }
   }
 
@@ -116,69 +96,55 @@ class StreamingSpec extends AnyFunSuite {
     val evQ = ev.mapValue(v => org.apache.spark.sql.functions.floor(v * 5.0))
     val evN = ev.mapValue(v => org.apache.spark.sql.functions
       .when(v < 0.1, org.apache.spark.sql.functions.lit(Double.NaN)).otherwise(v))
-    def rowsOf(x: TickStream): Seq[TickRow] =
-      StatefulOps.toTickRows(x).collect().toSeq.sortBy(r => (r.tsMicros, r.seq))
     val rows = rowsOf(ev)
     val rowsQ = rowsOf(evQ)
     val rowsN = rowsOf(evN)
+    import StatefulOps.Steps
 
-    val matrix: Seq[(String, Map[(String, Long), Double], Seq[TickRow],
-        Dataset[TickRow] => Dataset[StatefulOps.ValOut])] = Seq(
+    val matrix: Seq[(String, Map[(String, Long), Double], Seq[TickRow], StatefulOps.Step)] = Seq(
       ("par_filter", batchMap(ev.where(org.apache.spark.sql.functions.col("value") > 0.5), "value"),
-        rows, StatefulOps.filterStream(_, _ > 0.5)),
+        rows, Steps.filter(_ > 0.5)),
       ("par_split", batchMap(ev.split(org.apache.spark.sql.functions.col("value") > 0.5)._2, "value"),
-        rows, StatefulOps.filterStream(_, v => !(v > 0.5))),
+        rows, Steps.filter(v => !(v > 0.5))),
       ("par_apply", batchMap(ev.mapValue(v => v * 2.0 + 1.0), "value"),
-        rows, StatefulOps.mapStream(_, v => v * 2.0 + 1.0)),
-      ("par_dropnans", batchMap(evN.dropNans, "value"),
-        rowsN, StatefulOps.dropNansStream),
-      ("par_times", batchMap(ev.times("t"), "t"),
-        rows, StatefulOps.timesStream),
-      ("par_count", batchMap(ev.runningCount(), "count"),
-        rows, StatefulOps.countStream),
-      ("par_accum", batchMap(ev.accum(), "accum"),
-        rows, StatefulOps.accumStream),
-      ("par_diff", batchMap(ev.diff(1), "diff"),
-        rows, StatefulOps.diffStream(_, 1)),
-      ("par_delay", batchMap(ev.delayTicks(3), "value"),
-        rows, StatefulOps.delayTicksStream(_, 3)),
-      ("par_firstn", batchMap(ev.firstN(5), "value"),
-        rows, StatefulOps.firstNStream(_, 5)),
-      ("par_dropdups", batchMap(evQ.dropDups(None), "value"),
-        rowsQ, StatefulOps.dropDupsStream),
-      ("par_dropdups_eps", batchMap(ev.dropDups(Some(0.3)), "value"),
-        rows, StatefulOps.dropDupsEpsStream(_, 0.3)),
-      ("par_kahan", batchMap(Sequential.kahanCumsum(ev), "ksum"),
-        rows, StatefulOps.kahanStream),
+        rows, Steps.map(v => v * 2.0 + 1.0)),
+      ("par_dropnans", batchMap(evN.dropNans, "value"), rowsN, Steps.dropNans),
+      ("par_times", batchMap(ev.times("t"), "t"), rows, Steps.times),
+      ("par_count", batchMap(ev.runningCount(), "count"), rows, Steps.count),
+      ("par_accum", batchMap(ev.accum(), "accum"), rows, Steps.accum),
+      ("par_diff", batchMap(ev.diff(1), "diff"), rows, Steps.diff(1)),
+      ("par_delay", batchMap(ev.delayTicks(3), "value"), rows, Steps.delayTicks(3)),
+      ("par_firstn", batchMap(ev.firstN(5), "value"), rows, Steps.firstN(5)),
+      ("par_dropdups", batchMap(evQ.dropDups(None), "value"), rowsQ, Steps.dropDups),
+      ("par_dropdups_eps", batchMap(ev.dropDups(Some(0.3)), "value"), rows, Steps.dropDupsEps(0.3)),
+      ("par_kahan", batchMap(Sequential.kahanCumsum(ev), "ksum"), rows, Steps.kahan),
       ("par_rolling_mean", batchMap(Stats.ticks(ev, 20, minWindow = 5).mean("m").done, "m"),
-        rows, StatefulOps.rollingMeanStream(_, 20, 5)),
+        rows, Steps.rollingMean(20, 5)),
       ("par_rolling_min", batchMap(Stats.ticks(ev, 10).min("mn").done, "mn"),
-        rows, StatefulOps.rollingMinStream(_, 10)),
+        rows, Steps.rollingMin(10)),
       ("par_rolling_max", batchMap(Stats.ticks(ev, 10).max("mx").done, "mx"),
-        rows, StatefulOps.rollingMaxStream(_, 10)),
+        rows, Steps.rollingMax(10)),
       ("par_expanding_var", batchMap(Stats.expanding(ev).varSamp("v").done, "v"),
-        rows, StatefulOps.expandingVarStream),
-      ("par_value_at", batchMap(ev.valueAt(3, "va"), "va"),
-        rows, StatefulOps.scanStream(_, StatefulOps.Steps.valueAt(3))),
-      ("par_ema_var", batchMap(Sequential.emaVar(ev, 0.1), "ema_var"),
-        rows, StatefulOps.scanStream(_, StatefulOps.Steps.emaVar(0.1))),
+        rows, Steps.expandingVar),
+      ("par_value_at", batchMap(ev.valueAt(3, "va"), "va"), rows, Steps.valueAt(3)),
+      ("par_ema_var", batchMap(Sequential.emaVar(ev, 0.1), "ema_var"), rows, Steps.emaVar(0.1)),
       ("par_ema_halflife", batchMap(Sequential.emaHalflife(ev, 3600.0), "ema"),
-        rows, StatefulOps.scanStream(_, StatefulOps.Steps.emaHalflife(3600.0))),
-      ("par_ema", batchMap(Sequential.ema(ev, 0.3), "ema"),
-        rows, StatefulOps.scanStream(_, StatefulOps.Steps.ema(0.3))),
+        rows, Steps.emaHalflife(3600.0)),
+      ("par_ema", batchMap(Sequential.ema(ev, 0.3), "ema"), rows, Steps.ema(0.3)),
       // csp.feedback: the decayed accumulator q_feedback runs in batch
       ("par_feedback", batchMap(Sequential.feedback(ev, "fb", 0.0) { (prev, row) =>
           prev * 0.9 + row.getDouble(row.fieldIndex(graft.ts.Tick.VALUE)) }, "fb"),
-        rows, StatefulOps.scanStream(_, StatefulOps.Steps.feedback(0.0)((p, v) => p * 0.9 + v))),
+        rows, Steps.feedback(0.0)((p, v) => p * 0.9 + v)),
       // running-peak drawdown: batch arm = expanding max + one division
       ("par_drawdown", batchMap(TickStream(
           Stats.expanding(ev).max("mx").done.df.withColumn("dd",
             org.apache.spark.sql.functions.col(graft.ts.Tick.VALUE).cast("double") /
               org.apache.spark.sql.functions.col("mx").cast("double") - 1)), "dd"),
-        rows, StatefulOps.scanStream(_, StatefulOps.Steps.drawdown)))
+        rows, Steps.drawdown))
 
-    matrix.foreach { case (name, batch, data, build) =>
-      assertParity(name, batch, runStream(name, data, build))
+    matrix.zipWithIndex.foreach { case ((name, batch, data, step), i) =>
+      assertParity(name, batch,
+        bySeq(RestartParity.run(data, seed = 100 + i)(StatefulOps.scanStream(_, step))))
     }
   }
 
@@ -195,22 +161,19 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => r.copy(seq = -(r.seq + 1), value = 0.0))
     val rows = (StatefulOps.toTickRows(data).collect() ++ markers).toSeq
       .sortBy(r => (r.tsMicros, r.seq >= 0, math.abs(r.seq)))
-    assertParity("par_reset_sum", batch, runStream("par_reset_sum", rows, StatefulOps.resetSumStream))
+    assertParity("par_reset_sum", batch, bySeq(RestartParity.run(rows, seed = 185)(
+      StatefulOps.scanStream(_, StatefulOps.Steps.resetSum))))
   }
 
   test("batch≡stream parity: two-input as-of family + bivariate ema_cov on BOTH runtimes") {
     // The stateful tail the r7 matrix left out: cross-stream operators
-    // (sample / filter-by / binop — genuinely TWO-input, lowered as a
-    // tagged union) and bivariate state (ema_cov), each run through the
-    // fMGWS runtime AND the transformWithState/RocksDB runtime from ONE
-    // Step2/StepP definition, asserted against the batch kernel.
+    // (sample / filter-by / binop / merge — genuinely TWO-input, lowered
+    // as a tagged union), bivariate state (ema_cov) and the 3-input
+    // struct_fromts, each from ONE Step2/StepP definition, asserted
+    // against the batch kernel across two kill/restart cycles.
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, row_number, unix_micros}
     import graft.operators.AsOf
-    import graft.streaming.StatefulOps.{PairRow, TickRow2, ValOut}
-    import graft.streaming.TwsOps
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
     val ev = Sources.events(spark, TestSpark.sf)
     // unique (key, ts): duplicate-timestamp CYCLE alignment is the batch
@@ -222,25 +185,9 @@ class StreamingSpec extends AnyFunSuite {
     val refS = TickStream(evU.df.filter(col("seq") % 2 === 0))
     val priS = TickStream(evU.df.filter(col("seq") % 2 === 1))
 
-    def rows2(ref: TickStream, pri: TickStream): Seq[TickRow2] = {
-      def tag(x: TickStream, src: Int) = StatefulOps.toTickRows(x).collect()
-        .map(r => TickRow2(r.key, r.tsMicros, r.seq, r.value, src))
-      (tag(ref, 0) ++ tag(pri, 1)).toSeq.sortBy(r => (r.tsMicros, r.src, r.seq))
-    }
-
-    def runTagged(name: String, data: Seq[TickRow2],
-        build: Dataset[TickRow2] => Dataset[ValOut], byTs: Boolean): Map[(String, Long), Double] = {
-      implicit val enc = Encoders.product[TickRow2]
-      implicit val sq = spark.sqlContext
-      val mem = MemoryStream[TickRow2]
-      val q = build(mem.toDS()).writeStream.outputMode("append")
-        .format("memory").queryName(name).trigger(Trigger.ProcessingTime(0)).start()
-      data.grouped(data.size / 5 + 1).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-      val out = spark.table(name).collect()
-        .map(r => (r.getString(0), r.getLong(if (byTs) 1 else 2)) -> r.getDouble(3)).toMap
-      q.stop()
-      out
-    }
+    def tagged(inputs: TickStream*): Seq[TickRow2] = inputs.zipWithIndex.flatMap { case (x, src) =>
+      StatefulOps.toTickRows(x).collect().map(r => TickRow2(r.key, r.tsMicros, r.seq, r.value, src))
+    }.sortBy(r => (r.tsMicros, r.src, r.seq))
 
     // csp.sample(trigger, x): batch keyed by the trigger's (key, seq)
     val batchSample = batchMap(AsOf.sample(priS, refS), "value")
@@ -252,16 +199,19 @@ class StreamingSpec extends AnyFunSuite {
     val batchBinop = AsOf.binop(refS, priS, (a, b) => a - b).df
       .select(col("key"), unix_micros(col("ts")), col("value").cast("double")).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    // merge on the disjoint-ts event split — per-cycle tie resolution
+    // gets its own dup-ts fixture in the next test
+    val batchMerge = batchMap(refS.merge(priS), "value")
 
     val twoInput = Seq(
-      ("par2_sample", rows2(refS, priS), StatefulOps.Steps2.sample, batchSample, false),
-      ("par2_filterby", rows2(flagS, priS), StatefulOps.Steps2.filterBy, batchFilterBy, false),
-      ("par2_binop", rows2(refS, priS), StatefulOps.Steps2.binop(_ - _), batchBinop, true))
-    twoInput.foreach { case (name, data, step, batch, byTs) =>
-      assertParity(s"${name}_fmgws", batch,
-        runTagged(s"${name}_fmgws", data, StatefulOps.scanStream2(_, step), byTs))
-      assertParity(s"${name}_tws", batch,
-        runTagged(s"${name}_tws", data, TwsOps.scanTws2(_, step), byTs))
+      ("par2_sample", tagged(refS, priS), StatefulOps.Steps2.sample, batchSample, false),
+      ("par2_filterby", tagged(flagS, priS), StatefulOps.Steps2.filterBy, batchFilterBy, false),
+      ("par2_binop", tagged(refS, priS), StatefulOps.Steps2.binop(_ - _), batchBinop, true),
+      ("par2_merge", tagged(refS, priS), StatefulOps.Steps2.merge, batchMerge, false))
+    twoInput.zipWithIndex.foreach { case ((name, data, step, batch, byTs), i) =>
+      val out = RestartParity.run(data, seed = 200 + i)(StatefulOps.scanStream2(_, step))
+      assertParity(name, batch,
+        out.map(o => (o.key, if (byTs) o.tsMicros else o.seq) -> o.value).toMap)
     }
 
     // bivariate ema_cov: one stream, two value lanes (x = value, y derived)
@@ -272,23 +222,9 @@ class StreamingSpec extends AnyFunSuite {
         col("seq"), col("value").cast("double").as("x"), col("y")).collect()
       .map(r => PairRow(r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
       .toSeq.sortBy(r => (r.tsMicros, r.seq))
-    def runPair(name: String, build: Dataset[PairRow] => Dataset[ValOut]): Map[(String, Long), Double] = {
-      implicit val enc = Encoders.product[PairRow]
-      implicit val sq = spark.sqlContext
-      val mem = MemoryStream[PairRow]
-      val q = build(mem.toDS()).writeStream.outputMode("append")
-        .format("memory").queryName(name).trigger(Trigger.ProcessingTime(0)).start()
-      pairRows.grouped(pairRows.size / 5 + 1).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-      val out = spark.table(name).collect()
-        .map(r => (r.getString(0), r.getLong(2)) -> r.getDouble(3)).toMap
-      q.stop()
-      out
-    }
-    val covStep = StatefulOps.StepsP.emaCov(0.2)
-    assertParity("parp_ema_cov_fmgws", batchEmaCov,
-      runPair("parp_ema_cov_fmgws", StatefulOps.scanPairStream(_, covStep)))
-    assertParity("parp_ema_cov_tws", batchEmaCov,
-      runPair("parp_ema_cov_tws", TwsOps.scanPairTws(_, covStep)))
+    implicit val pairEnc: Encoder[PairRow] = Encoders.product[PairRow]
+    assertParity("parp_ema_cov", batchEmaCov, bySeq(RestartParity.run(pairRows, seed = 288)(
+      StatefulOps.scanPairStream(_, StatefulOps.StepsP.emaCov(0.2)))))
 
     // struct_fromts: a THREE-input operator (two snapshot inputs + the
     // trigger) — the N-input generalization of the tagged-union lowering
@@ -300,97 +236,33 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1)) -> Seq(
         if (r.isNullAt(2)) Double.NaN else r.getDouble(2),
         if (r.isNullAt(3)) Double.NaN else r.getDouble(3))).toMap
-    val structRows = (StatefulOps.toTickRows(refA).collect().map(r => TickRow2(r.key, r.tsMicros, r.seq, r.value, 0)) ++
-      StatefulOps.toTickRows(refB).collect().map(r => TickRow2(r.key, r.tsMicros, r.seq, r.value, 1)) ++
-      StatefulOps.toTickRows(trig).collect().map(r => TickRow2(r.key, r.tsMicros, r.seq, r.value, 2)))
-      .toSeq.sortBy(r => (r.tsMicros, r.src, r.seq))
-    def runStruct(name: String,
-        build: Dataset[TickRow2] => Dataset[StatefulOps.VecOut]): Map[(String, Long), Seq[Double]] = {
-      implicit val enc = Encoders.product[TickRow2]
-      implicit val sq = spark.sqlContext
-      val mem = MemoryStream[TickRow2]
-      val q = build(mem.toDS()).writeStream.outputMode("append")
-        .format("memory").queryName(name).trigger(Trigger.ProcessingTime(0)).start()
-      structRows.grouped(structRows.size / 5 + 1).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-      val out = spark.table(name).collect()
-        .map(r => (r.getString(0), r.getLong(2)) -> r.getSeq[Double](3).toSeq).toMap
-      q.stop()
-      out
-    }
-    def assertStructParity(name: String, stream: Map[(String, Long), Seq[Double]]): Unit = {
-      assert(stream.size == batchStruct.size, s"$name: ${stream.size} vs ${batchStruct.size}")
-      batchStruct.foreach { case (k, b) =>
-        val s = stream(k)
-        b.zip(s).foreach { case (bv, sv) =>
-          assert((bv.isNaN && sv.isNaN) || bv == sv, s"$name @ $k: $s vs $b") }
-      }
-    }
-    assertStructParity("par3_struct_fmgws", runStruct("par3_struct_fmgws", StatefulOps.structStream(_, 2)))
-    assertStructParity("par3_struct_tws", runStruct("par3_struct_tws", TwsOps.structTws(_, 2)))
-
-    // merge on the disjoint-ts event split (both runtimes) — per-cycle
-    // tie resolution gets its own dup-ts fixture in the next test
-    val batchMerge = batchMap(refS.merge(priS), "value")
-    val mergeRows = rows2(refS, priS)
-    assertParity("par2_merge_fmgws", batchMerge,
-      runTagged("par2_merge_fmgws", mergeRows, StatefulOps.scanStream2(_, StatefulOps.Steps2.merge), false))
-    assertParity("par2_merge_tws", batchMerge,
-      runTagged("par2_merge_tws", mergeRows, TwsOps.scanTws2(_, StatefulOps.Steps2.merge), false))
+    val struct = RestartParity.run(tagged(refA, refB, trig), seed = 328)(
+      StatefulOps.structStream(_, 2))
+    assertVecParity("par3_struct", batchStruct, struct.map(o => (o.key, o.seq) -> o.values).toMap)
   }
 
   test("batch≡stream parity: values_at/times_at history buffers on BOTH runtimes") {
     // The r8 matrix's last named gap (r7 verdict task 3): the tick-history
-    // surfaces whose per-tick result is the ring buffer itself. One StepV
-    // definition drives fMGWS and transformWithState/RocksDB; batch truth
-    // is the collect_list ROWS-frame lowering.
+    // surfaces whose per-tick result is the ring buffer itself. Batch
+    // truth is the collect_list ROWS-frame lowering.
     import org.apache.spark.sql.functions.col
-    import graft.streaming.TwsOps
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
     val ev = Sources.events(spark, TestSpark.sf)
-    val rows = StatefulOps.toTickRows(ev).collect().toSeq.sortBy(r => (r.tsMicros, r.seq))
+    val rows = rowsOf(ev)
 
     def batchVec(ts: TickStream, vecCol: String): Map[(String, Long), Seq[Double]] =
       ts.df.select(col("key"), col("seq"), col(vecCol).cast("array<double>"))
         .collect()
         .map(r => (r.getString(0), r.getLong(1)) -> r.getSeq[Double](2).toSeq).toMap
 
-    def runVec(name: String, build: Dataset[StatefulOps.TickRow] => Dataset[StatefulOps.VecOut])
-        : Map[(String, Long), Seq[Double]] = {
-      implicit val enc = Encoders.product[StatefulOps.TickRow]
-      implicit val sq = spark.sqlContext
-      val mem = MemoryStream[StatefulOps.TickRow]
-      val q = build(mem.toDS()).writeStream.outputMode("append")
-        .format("memory").queryName(name).trigger(Trigger.ProcessingTime(0)).start()
-      rows.grouped(rows.size / 5 + 1).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-      val out = spark.table(name).collect()
-        .map(r => (r.getString(0), r.getLong(2)) -> r.getSeq[Double](3).toSeq).toMap
-      q.stop()
-      out
-    }
+    def runVec(step: StatefulOps.StepV, seed: Long): Map[(String, Long), Seq[Double]] =
+      RestartParity.run(rows, seed)(StatefulOps.scanVecStream(_, step))
+        .map(o => (o.key, o.seq) -> o.values).toMap
 
-    def assertVecParity(name: String, batch: Map[(String, Long), Seq[Double]],
-        stream: Map[(String, Long), Seq[Double]]): Unit = {
-      assert(stream.size == batch.size, s"$name: ${stream.size} vs ${batch.size}")
-      batch.foreach { case (k, b) =>
-        assert(stream(k) == b, s"$name @ $k: ${stream(k)} vs $b")
-      }
-    }
-
-    val vAt = StatefulOps.StepsV.valuesAt(5)
-    val batchValues = batchVec(ev.valuesAt(5, "vs"), "vs")
-    assertVecParity("parv_values_at_fmgws", batchValues,
-      runVec("parv_values_at_fmgws", StatefulOps.scanVecStream(_, vAt)))
-    assertVecParity("parv_values_at_tws", batchValues,
-      runVec("parv_values_at_tws", TwsOps.scanVecTws(_, vAt)))
-
-    val tAt = StatefulOps.StepsV.timesAt(5)
-    val batchTimes = batchVec(ev.timesAt(5, "ts5"), "ts5")
-    assertVecParity("parv_times_at_fmgws", batchTimes,
-      runVec("parv_times_at_fmgws", StatefulOps.scanVecStream(_, tAt)))
-    assertVecParity("parv_times_at_tws", batchTimes,
-      runVec("parv_times_at_tws", TwsOps.scanVecTws(_, tAt)))
+    assertVecParity("parv_values_at", batchVec(ev.valuesAt(5, "vs"), "vs"),
+      runVec(StatefulOps.StepsV.valuesAt(5), seed = 381))
+    assertVecParity("parv_times_at", batchVec(ev.timesAt(5, "ts5"), "ts5"),
+      runVec(StatefulOps.StepsV.timesAt(5), seed = 388))
   }
 
   test("batch≡stream parity: merge resolves duplicate-ts ties per CYCLE on both runtimes") {
@@ -398,8 +270,6 @@ class StreamingSpec extends AnyFunSuite {
     // occupies — right's surplus same-ts cycles still emit. Fixture:
     //   ts=2000 has TWO left cycles (v2, v3) and THREE right cycles
     //   (v20, v30, v50): cycles 0/1 go left, cycle 2 emits right v50.
-    import org.apache.spark.sql.functions.col
-    import graft.streaming.StatefulOps.TickRow2
     def ts(ms: Long) = new java.sql.Timestamp(ms)
     import spark.implicits._
     val left = TickStream(Seq(
@@ -417,43 +287,20 @@ class StreamingSpec extends AnyFunSuite {
     val rows = (StatefulOps.toTickRows(left).collect().map(r => TickRow2(r.key, r.tsMicros, r.seq, r.value, 0)) ++
       StatefulOps.toTickRows(right).collect().map(r => TickRow2(r.key, r.tsMicros, r.seq, r.value, 1)))
       .toSeq.sortBy(r => (r.tsMicros, r.src, r.seq))
-    def run(name: String, build: Dataset[TickRow2] => Dataset[StatefulOps.ValOut]): Map[Long, Double] = {
-      implicit val enc = Encoders.product[TickRow2]
-      implicit val sq = spark.sqlContext
-      val mem = MemoryStream[TickRow2]
-      val q = build(mem.toDS()).writeStream.outputMode("append")
-        .format("memory").queryName(name).trigger(Trigger.ProcessingTime(0)).start()
-      // split mid-2000: the 2000-cycle rows stay within one batch (the
-      // in-order same-cycle delivery contract), batches split elsewhere
-      mem.addData(rows.filter(_.tsMicros < 2000000): _*); q.processAllAvailable()
-      mem.addData(rows.filter(r => r.tsMicros >= 2000000 && r.tsMicros < 3000000): _*); q.processAllAvailable()
-      mem.addData(rows.filter(_.tsMicros >= 3000000): _*); q.processAllAvailable()
-      val out = spark.table(name).collect().map(r => r.getLong(2) -> r.getDouble(3)).toMap
-      q.stop()
-      out
-    }
-    assert(run("par_merge_dup_fmgws",
-      StatefulOps.scanStream2(_, StatefulOps.Steps2.merge)) == expected)
-    assert(run("par_merge_dup_tws",
-      graft.streaming.TwsOps.scanTws2(_, StatefulOps.Steps2.merge)) == expected)
+    // the cycle counts at a timestamp live in the state, so a cut (or a
+    // restart) between two same-ts cycles resolves them the same way
+    val out = RestartParity.run(rows, seed = 396)(
+      StatefulOps.scanStream2(_, StatefulOps.Steps2.merge))
+    assert(out.map(o => o.seq -> o.value).toMap == expected)
   }
 
   test("streaming as-of sample across micro-batches") {
-    import org.apache.spark.sql.Encoders
-    implicit val tickEnc = Encoders.product[TickRow]
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[TickRow]
-    val q = StatefulOps.sampleStream(mem.toDS()).writeStream.outputMode("append")
-      .format("memory").queryName("sample_par").trigger(Trigger.ProcessingTime(0)).start()
-    // batch 1: trigger before ref → nothing; ref arrives
-    mem.addData(TickRow("k", 1000L, 1, 0.0), TickRow("k", 2000L, -1, 42.0))
-    q.processAllAvailable()
-    // batch 2: trigger → samples 42.0 from state; new ref; same-ts trigger sees it
-    mem.addData(TickRow("k", 3000L, 2, 0.0), TickRow("k", 4000L, -3, 7.0),
-      TickRow("k", 4000L, 4, 0.0))
-    q.processAllAvailable()
-    val out = spark.table("sample_par").collect().map(r => (r.getLong(1), r.getDouble(3))).sortBy(_._1)
-    q.stop()
+    // trigger before ref → nothing; ref arrives; trigger samples 42.0
+    // from state; new ref; the same-ts trigger sees it
+    val rows = Seq(TickRow("k", 1000L, 1, 0.0), TickRow("k", 2000L, -1, 42.0),
+      TickRow("k", 3000L, 2, 0.0), TickRow("k", 4000L, -3, 7.0), TickRow("k", 4000L, 4, 0.0))
+    val out = RestartParity.run(rows, seed = 441)(StatefulOps.sampleStream)
+      .map(o => (o.tsMicros, o.value)).sortBy(_._1)
     assert(out.toList == List((3000L, 42.0), (4000L, 7.0)))
   }
 
@@ -461,18 +308,11 @@ class StreamingSpec extends AnyFunSuite {
     // The capstone composition: the README/SparkEntry flagship graph —
     // purchase values as-of-sampled onto clicks, 5-tick rolling mean,
     // ema(0.3) — as ONE composed state machine per output
-    // (Steps2.sampleThen), run on flatMapGroupsWithState AND
-    // transformWithState/RocksDB, asserted equal to the batch pipeline
+    // (Steps2.sampleThen), asserted equal to the batch pipeline
     // (AsOf.sample → Stats.ticks.mean → Sequential.ema) per (key, seq).
-    import org.apache.spark.sql.{Dataset, Encoders}
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, row_number}
-    import graft.operators.{AsOf, Sequential, Stats}
-    import graft.streaming.StatefulOps.{TickRow2, ValOut}
-    import graft.streaming.TwsOps
-    import graft.ts.TickStream
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    import graft.operators.AsOf
 
     val ev = Sources.events(spark, TestSpark.sf)
     val evU = TickStream(ev.df.withColumn("__rn",
@@ -492,29 +332,12 @@ class StreamingSpec extends AnyFunSuite {
         TickRow2(r.key, r.tsMicros, r.seq, r.value, 1))).toSeq
       .sortBy(r => (r.tsMicros, r.src, r.seq))
 
-    def run(name: String, build: Dataset[TickRow2] => Dataset[ValOut]): Map[(String, Long), Double] = {
-      implicit val enc = Encoders.product[TickRow2]
-      implicit val sq = spark.sqlContext
-      val mem = MemoryStream[TickRow2]
-      val q = build(mem.toDS()).writeStream.outputMode("append")
-        .format("memory").queryName(name).trigger(Trigger.ProcessingTime(0)).start()
-      data.grouped(data.size / 5 + 1).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-      val out = spark.table(name).collect()
-        .map(r => (r.getString(0), r.getLong(2)) -> r.getDouble(3)).toMap
-      q.stop()
-      out
-    }
-
     val meanStep = StatefulOps.Steps2.sampleThen(StatefulOps.Steps.rollingMean(5))
     val emaStep = StatefulOps.Steps2.sampleThen(StatefulOps.Steps.ema(0.3))
-    assertParity("flagship_mean_fmgws", batchMean,
-      run("flagship_mean_fmgws", StatefulOps.scanStream2(_, meanStep)))
-    assertParity("flagship_mean_tws", batchMean,
-      run("flagship_mean_tws", TwsOps.scanTws2(_, meanStep)))
-    assertParity("flagship_ema_fmgws", batchEma,
-      run("flagship_ema_fmgws", StatefulOps.scanStream2(_, emaStep)))
-    assertParity("flagship_ema_tws", batchEma,
-      run("flagship_ema_tws", TwsOps.scanTws2(_, emaStep)))
+    assertParity("flagship_mean", batchMean,
+      bySeq(RestartParity.run(data, seed = 508)(StatefulOps.scanStream2(_, meanStep))))
+    assertParity("flagship_ema", batchEma,
+      bySeq(RestartParity.run(data, seed = 509)(StatefulOps.scanStream2(_, emaStep))))
   }
 
   test("batch≡stream parity: OHLC bar builder (barsFrame) across micro-batches") {

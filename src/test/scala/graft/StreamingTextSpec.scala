@@ -19,12 +19,7 @@ case class StPage(page_id: Long, host: String, path: String)
   * flags — each checked against its oracle-green batch form's guarantees
   * after a full replay. */
 class StreamingTextSpec extends AnyFunSuite {
-  lazy val spark = {
-    val s = TestSpark.spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+  lazy val spark = TestSpark.spark
 
   test("online Misra–Gries: final snapshots are a superset of heavy terms and recover the exact top-k") {
     import org.apache.spark.sql.Encoders

@@ -8,15 +8,11 @@ import graft.streaming.StatefulOps.TickRow
 import graft.streaming.TwsOps
 import graft.ts.Sources
 
-/** transformWithState (StatefulProcessor + RocksDB state store) parity:
-  * same batch==streaming guarantee as the flatMapGroupsWithState path. */
+/** transformWithState (StatefulProcessor + RocksDB state store): the
+  * benchmark's EMA arm, restart parity at fixture and soak volume, and
+  * event-time timers as csp alarms. */
 class TwsSpec extends AnyFunSuite {
-  lazy val spark = {
-    val s = TestSpark.spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+  lazy val spark = TestSpark.spark
 
   test("transformWithState EMA across micro-batches == batch Sequential.ema") {
     import org.apache.spark.sql.Encoders
@@ -46,45 +42,21 @@ class TwsSpec extends AnyFunSuite {
 
   test("kill + restart from checkpoint mid-stream bit-matches batch Sequential.ema") {
     // the reference's core sim==realtime promise: a restarted engine must
-    // produce exactly what an uninterrupted run produces. Here: run half
-    // the stream, stop the query (crash), start a NEW query from the same
-    // checkpoint (RocksDB state + committed offsets), feed the rest.
+    // produce exactly what an uninterrupted run produces — the query is
+    // stopped (the crash) at seeded micro-batch boundaries and a NEW
+    // query resumes from the same checkpoint (RocksDB state + committed
+    // offsets)
     import org.apache.spark.sql.Encoders
     implicit val tickEnc = Encoders.product[TickRow]
-    implicit val sq = spark.sqlContext
 
     val ev = Sources.events(spark, TestSpark.sf)
     val batch = graft.operators.Sequential.ema(ev, 0.4).df
       .select("key", "seq", "ema").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
-
     val ticks = graft.streaming.StatefulOps.toTickRows(ev)
       .collect().toSeq.sortBy(r => (r.tsMicros, r.seq))
-    val (firstHalf, secondHalf) = ticks.splitAt(ticks.size / 2)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tws-ckpt").toString
-
-    val mem = MemoryStream[TickRow]
-    // memory sink refuses checkpoint recovery; foreachBatch supports it
-    val sink = scala.collection.mutable.ArrayBuffer.empty[((String, Long), Double)]
-    def start() =
-      TwsOps.emaTws(mem.toDS(), 0.4).writeStream.outputMode("append")
-        .foreachBatch { (batchDf: org.apache.spark.sql.Dataset[graft.streaming.StatefulOps.EmaOut], _: Long) =>
-          val rows = batchDf.collect().map(o => (o.key, o.seq) -> o.ema)
-          sink.synchronized { sink ++= rows }; ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.ProcessingTime(0)).start()
-
-    val q1 = start()
-    mem.addData(firstHalf: _*)
-    q1.processAllAvailable()
-    q1.stop() // the crash
-
-    mem.addData(secondHalf: _*)
-    val q2 = start() // recovery: offsets + RocksDB state from ckpt
-    q2.processAllAvailable()
-    val recovered = sink.synchronized(sink.toMap)
-    q2.stop()
+    val recovered = RestartParity.run(ticks, seed = 47)(TwsOps.emaTws(_, 0.4))
+      .map(o => (o.key, o.seq) -> o.ema).toMap
 
     assert(recovered.size == batch.size)
     // BIT-exact, not tolerance: state round-trips through RocksDB as the
@@ -94,64 +66,18 @@ class TwsSpec extends AnyFunSuite {
     }
   }
 
-  test("Step library runs identically on both streaming runtimes (TWS/RocksDB vs fMGWS)") {
-    // the SAME Step value (one definition: init + fn) through
-    // transformWithState with RocksDB state AND flatMapGroupsWithState,
-    // micro-batched differently (4 vs 5 chunks) — per-(key, seq) equal.
-    // The fMGWS side is itself batch-asserted in StreamingSpec, so this
-    // closes batch ≡ fMGWS ≡ TWS for the whole scan library.
-    import org.apache.spark.sql.Encoders
-    import graft.streaming.StatefulOps
-    import graft.streaming.StatefulOps.Steps
-    implicit val tickEnc = Encoders.product[TickRow]
-    implicit val sq = spark.sqlContext
-
-    val ticks = graft.streaming.StatefulOps.toTickRows(Sources.events(spark, TestSpark.sf))
-      .collect().toSeq.sortBy(r => (r.tsMicros, r.seq))
-
-    def run(name: String, chunks: Int,
-            build: org.apache.spark.sql.Dataset[TickRow] => org.apache.spark.sql.Dataset[StatefulOps.ValOut])
-        : Map[(String, Long), Double] = {
-      val mem = MemoryStream[TickRow]
-      val q = build(mem.toDS()).writeStream.outputMode("append")
-        .format("memory").queryName(name).trigger(Trigger.ProcessingTime(0)).start()
-      ticks.grouped(ticks.size / chunks + 1).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-      val out = spark.table(name).collect()
-        .map(r => (r.getString(0), r.getLong(2)) -> r.getDouble(3)).toMap
-      q.stop()
-      out
-    }
-
-    val steps = Seq(
-      "accum" -> Steps.accum, "diff2" -> Steps.diff(2), "kahan" -> Steps.kahan,
-      "rmean" -> Steps.rollingMean(20, 5), "evar" -> Steps.expandingVar,
-      "ddups" -> Steps.dropDupsEps(0.3), "ema" -> Steps.ema(0.3),
-      "feedback" -> Steps.feedback(0.0)((p, v) => p * 0.9 + v))
-    steps.foreach { case (nm, st) =>
-      val tws = run(s"tws_$nm", 4, ds => TwsOps.scanTws(ds, st))
-      val fm = run(s"fm_$nm", 5, ds => StatefulOps.scanStream(ds, st))
-      assert(tws.size == fm.size, s"$nm: ${tws.size} vs ${fm.size}")
-      // bit-exact: identical fold, identical order; state round-trips
-      // through RocksDB as the same doubles
-      tws.foreach { case (k, v) =>
-        assert(v == fm(k) || (v.isNaN && fm(k).isNaN), s"$nm @ $k: tws $v vs fMGWS ${fm(k)}")
-      }
-    }
-  }
-
   test("soak: 100k-row RocksDB session, 20 micro-batches, two kill/recover cycles") {
     // The multi-batch endurance case the short parity fixtures don't
-    // cover: sf0.1 volume (100k ticks, 20 keys) through transformWithState
-    // with RocksDB state, fed as 20 micro-batches with TWO mid-stream
-    // query kills + checkpoint recoveries. The state (Kahan compensated
-    // sum — the most drift-sensitive recurrence in the Step library) must
-    // round-trip RocksDB snapshots and the checkpoint restore path
-    // BIT-exactly: the batch twin is the truth.
+    // cover: sf0.1 volume (100k ticks, 20 keys) through the streaming
+    // scan with RocksDB state, fed as 20 micro-batches with TWO
+    // mid-stream query kills + checkpoint recoveries. The state (Kahan
+    // compensated sum — the most drift-sensitive recurrence in the Step
+    // library) must round-trip RocksDB snapshots and the checkpoint
+    // restore path BIT-exactly: the batch twin is the truth.
     import org.apache.spark.sql.Encoders
     import graft.streaming.StatefulOps
     import graft.streaming.StatefulOps.Steps
     implicit val tickEnc = Encoders.product[TickRow]
-    implicit val sq = spark.sqlContext
 
     val ev = Sources.events(spark, "/root/testdata/sf0.1")
     val batch = graft.operators.Sequential.kahanCumsum(ev).df
@@ -160,31 +86,8 @@ class TwsSpec extends AnyFunSuite {
 
     val ticks = StatefulOps.toTickRows(ev).collect().toSeq.sortBy(r => (r.tsMicros, r.seq))
     assert(ticks.size == 100000)
-    val chunks = ticks.grouped(ticks.size / 20 + 1).toSeq
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tws-soak").toString
-
-    val mem = MemoryStream[TickRow]
-    val sink = scala.collection.mutable.ArrayBuffer.empty[((String, Long), Double)]
-    def start() = TwsOps.scanTws(mem.toDS(), Steps.kahan).writeStream.outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[StatefulOps.ValOut], _: Long) =>
-        val rows = df.collect().map(o => (o.key, o.seq) -> o.value)
-        sink.synchronized { sink ++= rows }; ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.ProcessingTime(0)).start()
-
-    var q = start()
-    chunks.zipWithIndex.foreach { case (c, i) =>
-      mem.addData(c: _*)
-      q.processAllAvailable()
-      if (i == 6 || i == 13) { // two crashes at 35% and 70% of the stream
-        q.stop()
-        q = start() // recovery: offsets + RocksDB state from ckpt
-      }
-    }
-    q.processAllAvailable()
-    val out = sink.synchronized(sink.toMap)
-    q.stop()
+    val out = RestartParity.run(ticks, seed = 142, batches = 20)(
+      StatefulOps.scanStream(_, Steps.kahan)).map(o => (o.key, o.seq) -> o.value).toMap
 
     assert(out.size == batch.size, s"soak: stream ${out.size} rows vs batch ${batch.size}")
     out.foreach { case (k, v) =>

@@ -60,7 +60,7 @@ object Bench {
       try { fn(spark, sfDir).queryExecution.toRdd.count(); () }
       catch {
         case e: Throwable =>
-          errors(name) = errors(name) :+ s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}"
+          errors(name) = errors(name) :+ describe(e)
       }
       val dt = (System.nanoTime() - t0) / 1e9
       // Release the operators' registered persist-barriers so caches
@@ -76,12 +76,16 @@ object Bench {
     }
   }
 
+  /** A failed query's `err` text: exception class and message. */
+  private[graft] def describe(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}"
+
   // 4 decimals (0.1 ms): keeps the summary line short — the driver's
   // record capture truncates the HEAD of long lines (BENCH_r04–r07).
-  private def f(d: Double): String =
+  private[graft] def f(d: Double): String =
     BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
 
-  private def jstr(s: String): String =
+  private[graft] def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"

@@ -2,37 +2,26 @@ package graft
 
 import graft.ts.GraftSession
 
-/** Prints physical-plan summaries for representative queries — the
-  * scale-readiness audit: pushed filters, pruned schemas, broadcast vs
-  * shuffle joins, whole-stage codegen coverage.
+/** The plan-shape tools: `census` is the plan-budget gate and `explain`
+  * writes the formatted-plan evidence dumps. Per-query timing lives in
+  * [[ProfileQuery]].
+  *
+  * Usage:
+  *   runMain graft.PlanAudit census [sfDir] [out.json] [query…]
+  *   runMain graft.PlanAudit explain [sfDir] [outDir] [suffix] query…
   */
 object PlanAudit {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = GraftSession.builder(master = "local[8]", shufflePartitions = 8).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    if (args.headOption.contains("windows")) {
-      windowCensus(spark, args.lift(1).getOrElse("/root/testdata/sf0.001"),
-        args.lift(2).map(_.toInt).getOrElse(3))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("exchanges")) {
-      exchangeCensus(spark, args.lift(1).getOrElse("/root/testdata/sf0.001"),
-        args.lift(2).map(_.toInt).getOrElse(4))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("census")) {
+  def main(args: Array[String]): Unit = args.headOption match {
+    case Some("census") =>
+      val spark = GraftSession.builder(master = "local[8]", shufflePartitions = 8).getOrCreate()
+      spark.sparkContext.setLogLevel("ERROR")
       census(spark, args.lift(1).getOrElse("/root/testdata/sf0.001"),
         args.lift(2).getOrElse("/tmp/plan_census.json"), args.drop(3).toSet)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("explain")) {
-      // formatted-plan dumps for the optimization-round evidence files:
-      //   runMain graft.PlanAudit explain <sfDir> <outDir> <suffix> q1 q2 …
+      spark.stop()
+    case Some("explain") =>
       // writes <outDir>/<query>_<suffix>.txt with .explain("formatted")
       // output on the BENCH basis (local[32], bench-rechunked fixtures
       // give the same plan shape; sfDir picks the data).
-      spark.stop()
       val s32 = GraftSession.builder(master = "local[32]").getOrCreate()
       s32.sparkContext.setLogLevel("ERROR")
       val dir = args.lift(1).getOrElse("/root/testdata/sf0.01")
@@ -48,66 +37,12 @@ object PlanAudit {
         graft.util.Caching.release()
         println(s"wrote $outDir/${name}_$suffix.txt")
       }
-      s32.stop(); return
-    }
-    if (args.headOption.contains("stages")) {
-      // stage-time read wants the bench's execution basis, not local[8]
-      spark.stop()
-      val s32 = GraftSession.builder(master = "local[32]").getOrCreate()
-      s32.sparkContext.setLogLevel("ERROR")
-      stageProfile(s32, args.lift(1).getOrElse("/root/testdata/sf0.01"),
-        args.drop(2).toSeq)
-      s32.stop(); return
-    }
-    val interesting = args.drop(1) match {
-      case Array() => Seq("q1_lineitem_agg", "q2_revenue_by_nation", "q_filter",
-        "q_stats_basic", "q_sample_asof", "q_knn", "q_dedup_exact")
-      case qs => qs.toSeq
-    }
-    interesting.foreach { name =>
-      println(s"\n========== $name ==========")
-      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
-      // summarize: keep operator lines, drop column spam
-      plan.linesIterator.map(_.take(200)).foreach(println)
-    }
-    spark.stop()
+      s32.stop()
+    case _ =>
+      sys.error("usage: PlanAudit census [sfDir] [out.json] [query...] | " +
+        "PlanAudit explain [sfDir] [outDir] [suffix] query...")
   }
 
-  /** Suite-wide plan census: flags queries whose optimized plan holds
-    * ≥ `threshold` Window nodes — the shape that found the r7 Rolling
-    * memo-chain defect (six same-spec Windows split by extracted-argument
-    * Projects). Remaining multi-Window plans are structurally multi-spec
-    * (per-branch cycle ordinals in as-of/merge, gate's dependent layers).
-    * Usage: runMain graft.PlanAudit windows <sfDir> [threshold] */
-  def windowCensus(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-                   threshold: Int): Unit = {
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val plan = fn(spark, sfDir).queryExecution.optimizedPlan.toString
-        val w = "Window \\[".r.findAllIn(plan).length
-        if (w >= threshold) println(s"$name windows=$w")
-      } catch { case t: Throwable => println(s"$name ERROR ${t.getClass.getSimpleName}") }
-      graft.util.Caching.release()
-    }
-  }
-
-  /** Suite-wide plan-shape census → JSON, the mechanical regression gate
-    * (tools/plan_check.py compares it against tools/plan_budget.json —
-    * verify_gate fails on growth). Two numbers per query:
-    *
-    *  - `exchanges`: distinct Exchange operators in the executed plan —
-    *    each is a full materialize-and-repartition, THE compounding unit
-    *    of cost at 100 TB (the [[exchangeCensus]] plan_id dedupe rule);
-    *  - `global_windows`: logical Window nodes with an EMPTY
-    *    partitionSpec — each funnels its whole input through one task.
-    *    The r13 verdict's scale-killer pattern: a budget of N pins the
-    *    query's bare ordered windows to its known bounded-domain tables
-    *    (≤bins histograms, ≤P partition summaries); any NEW one fails
-    *    the gate instead of shipping silently.
-    *
-    * Counts are plan-shape properties, independent of data scale — the
-    * census runs at sf0.001 because some operators execute bounded
-    * fit/sizing jobs (counts, sketch bounds) while BUILDING the frame. */
   /** Count the shuffle exchanges that would actually EXECUTE, by plan
     * tree walk: (hash, single, range). A persist-barriered subtree's
     * plan string is embedded TWICE per InMemoryRelation (the compiled
@@ -118,7 +53,7 @@ object PlanAudit {
     * the unit Spark itself dedups materialization by). Subquery plans
     * are included; BroadcastExchange is excluded as before (a
     * broadcast moves one small side, not a corpus). */
-  private def shuffleCounts(root: org.apache.spark.sql.execution.SparkPlan): (Int, Int, Int) = {
+  private[graft] def shuffleCounts(root: org.apache.spark.sql.execution.SparkPlan): (Int, Int, Int) = {
     import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -153,6 +88,23 @@ object PlanAudit {
     (hash, single, range)
   }
 
+  /** Suite-wide plan-shape census → JSON, the mechanical regression gate
+    * (tools/plan_check.py compares it against tools/plan_budget.json —
+    * verify_gate fails on growth). Two numbers per query:
+    *
+    *  - `exchanges`: distinct Exchange operators in the executed plan —
+    *    each is a full materialize-and-repartition, THE compounding unit
+    *    of cost at 100 TB (deduped as [[shuffleCounts]] says);
+    *  - `global_windows`: logical Window nodes with an EMPTY
+    *    partitionSpec — each funnels its whole input through one task.
+    *    The r13 verdict's scale-killer pattern: a budget of N pins the
+    *    query's bare ordered windows to its known bounded-domain tables
+    *    (≤bins histograms, ≤P partition summaries); any NEW one fails
+    *    the gate instead of shipping silently.
+    *
+    * Counts are plan-shape properties, independent of data scale — the
+    * census runs at sf0.001 because some operators execute bounded
+    * fit/sizing jobs (counts, sketch bounds) while BUILDING the frame. */
   def census(spark: org.apache.spark.sql.SparkSession, sfDir: String,
              outPath: String, only: Set[String] = Set.empty): Unit = {
     val entries = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -175,84 +127,5 @@ object PlanAudit {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
       entries.mkString("{\n", ",\n", "\n}\n"))
     println(s"plan census: ${entries.size} queries -> $outPath")
-  }
-
-  /** Per-stage wall/CPU/shuffle profile for named queries — the
-    * "stage-time read" that attributes a scale exponent to its bound
-    * (VERDICT r18 #5): for each stage, wall time (completion −
-    * submission), summed executor RUN time, task count and shuffle/input
-    * bytes. The cpu/wall ratio is the effective parallelism — a keyed
-    * window whose partition key has 5 distinct values reads ~≤5× on 32
-    * cores (key-cardinality-bound), a scan reads ~20–30×, a
-    * single-task sort reads ~1×. Run twice (warm-up discarded
-    * implicitly by reading the SECOND run's stages).
-    * Usage: runMain graft.PlanAudit stages <sfDir> <query...> */
-  def stageProfile(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-                   queries: Seq[String]): Unit = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    final case class St(id: Int, name: String, wallMs: Long, runMs: Long,
-                        tasks: Int, inputMB: Long, shufReadMB: Long,
-                        shufWriteMB: Long)
-    queries.foreach { name =>
-      val stages = scala.collection.mutable.ArrayBuffer.empty[St]
-      val listener = new SparkListener {
-        override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-          val si = ev.stageInfo
-          val m = si.taskMetrics
-          stages.synchronized {
-            stages += St(si.stageId, si.name.takeWhile(_ != '\n').take(120),
-              (for {c <- si.completionTime; s <- si.submissionTime} yield c - s)
-                .getOrElse(-1L),
-              m.executorRunTime, si.numTasks,
-              m.inputMetrics.bytesRead >> 20,
-              m.shuffleReadMetrics.totalBytesRead >> 20,
-              m.shuffleWriteMetrics.bytesWritten >> 20)
-          }
-        }
-      }
-      // warm-up pass (page cache + codegen), then the measured pass
-      SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-      graft.util.Caching.release()
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      graft.util.Caching.release()
-      // listener bus is async: wait for the stage events to drain
-      var last = -1
-      var spins = 0
-      while (spins < 40 && stages.synchronized(stages.size) != last) {
-        last = stages.synchronized(stages.size); Thread.sleep(100); spins += 1
-      }
-      spark.sparkContext.removeSparkListener(listener)
-      println(f"\n== $name @ $sfDir: wall ${wall}%.2f s, ${stages.size} stages ==")
-      stages.sortBy(-_.runMs).foreach { s =>
-        val par = if (s.wallMs > 0) s.runMs.toDouble / s.wallMs else 0.0
-        println(f"  stage ${s.id}%3d wall ${s.wallMs / 1000.0}%7.2fs cpu ${s.runMs / 1000.0}%8.2fs " +
-          f"par ${par}%5.1fx tasks ${s.tasks}%3d in ${s.inputMB}%5dMB " +
-          f"sr ${s.shufReadMB}%5dMB sw ${s.shufWriteMB}%5dMB  ${s.name}")
-      }
-    }
-  }
-
-  /** Suite-wide shuffle census: per-query count of Exchange operators in
-    * the executed plan (AQE-final where available) — every Exchange is a
-    * full materialize-and-repartition of its input, THE unit of cost that
-    * compounds at 100 TB. Queries at-or-over `threshold` print with their
-    * exchange kinds so a new query that accidentally stacks shuffles
-    * (e.g. a groupBy that doesn't ride an existing partitioning) shows up
-    * in one run. Usage: runMain graft.PlanAudit exchanges <sfDir> [threshold] */
-  def exchangeCensus(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-                     threshold: Int): Unit = {
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val (hash, single, range) =
-          shuffleCounts(fn(spark, sfDir).queryExecution.executedPlan)
-        val total = hash + single + range
-        if (total >= threshold)
-          println(s"$name exchanges=$total (hash=$hash single=$single range=$range)")
-      } catch { case t: Throwable => println(s"$name ERROR ${t.getClass.getSimpleName}") }
-      graft.util.Caching.release()
-    }
   }
 }

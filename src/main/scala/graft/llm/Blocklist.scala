@@ -86,8 +86,7 @@ object Blocklist {
     * gram strings ([[gramHashesFor]]) — the at-scale default once the
     * oracle doesn't need to replay the gram text (a cross-length hash
     * collision mis-flagging a doc is a ~n·|phrases|/2^64 event;
-    * spec-proven verdict-identical on the fixture corpus, A/B'd in
-    * `ProfileBlocklist`). */
+    * spec-proven verdict-identical on the fixture corpus). */
   def phraseHits(df: DataFrame, idCol: String, textCol: String,
                  phrases: DataFrame, phraseCol: String = "phrase",
                  hashed: Boolean = false): DataFrame = {

@@ -314,8 +314,8 @@ object Dedup {
     * `hashed = true` swaps string grams for the rolling 64-bit
     * [[Shingles.hashedShingles]] (8 bytes/gram instead of the string —
     * the at-scale arm; collision odds ≈ n_grams²/2⁶⁵); the spec asserts
-    * both arms agree on the fixture, and `graft.ProfileNgram` measured
-    * the arms at 50k docs: string 1.76 s vs hashed 1.01 s median
+    * both arms agree on the fixture; measured at 50k docs, local[32]:
+    * string 1.76 s vs hashed 1.01 s median
     * (identical verdicts on all 45k candidates). */
   def ngramOverlap(docs: DataFrame, reference: DataFrame, textCol: String,
                    idCol: String, n: Int, hashed: Boolean = false): DataFrame = {

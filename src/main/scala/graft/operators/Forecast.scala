@@ -211,7 +211,7 @@ object Forecast {
     * key). The exact [[theilSen]] stays the small-key verifier —
     * the q_mutual_nn / q_mutual_nn_lsh pairing.
     *
-    * Crossover (measured, [[graft.ProfileTheilSen]]): below n_k ≈ 2m
+    * Crossover (measured, local[32], warm): below n_k ≈ 2m
     * the sampled machinery (two ranking windows + the partner join)
     * costs more than the n_k²/2 pairs it avoids — the driver fixture's
     * constant n_k = 67 reads exact 4.10 s vs sampled 4.95 s at sf1 —

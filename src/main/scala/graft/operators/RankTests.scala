@@ -319,7 +319,7 @@ object RankTests {
     * (the routing count runs a job at call time).
     *
     * Default `maxCells` sits at the MEASURED arm crossover
-    * (ProfileKendall, local[32], warm: quadratic 4.4 s vs continuous
+    * (local[32], warm: quadratic 4.4 s vs continuous
     * 3.7 s at 30k fully-distinct cells; the continuous arm then takes
     * 100× the cells for 2× the wall — 3M cells in 7.6 s where the
     * join would be 9·10¹² comparisons). */

@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   * rows they happened to collect, so a null could silently shift every
   * rank under the local rank arm (ADVICE r16).
   *
-  * Where each arm wins (measured, `ProfileSelection` 20M rows,
+  * Where each arm wins (measured, 20M rows,
   * local[32], identical checksums): under the `sampleTarget` fast path
   * (≤200k rows — every driver fixture and most per-entity tables) one
   * collect beats everything; in the multi-round regime ON ONE BOX the
@@ -126,7 +126,7 @@ object Selection {
     * table outgrows the one-collect fast path, the boundaries come
     * from [[Ranking.withGlobalOrder]] instead of the multi-round
     * refinement — a local "shuffle" is memcpy, and the measured
-    * crossover (ProfileSelection, 20M rows) has the range-shuffle rank
+    * crossover (20M rows, local[32]) has the range-shuffle rank
     * ~3× ahead there. On a cluster the trade reverses with size
     * (O(corpus) network vs O(kB·rounds)), so non-local sessions keep
     * the aggregate-only engine. Both arms resolve the same exact tuple

@@ -23,4 +23,10 @@ object Bridge {
       case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
       case _ => None
     }
+
+  /** Block until the listener bus has delivered every event posted so
+    * far (`listenerBus` is `private[spark]`): a listener's roll-up of the
+    * query just run is complete once this returns. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

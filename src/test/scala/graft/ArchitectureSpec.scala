@@ -55,4 +55,19 @@ class ArchitectureSpec extends AnyFunSuite {
     assert(found == Set("TwsOps.scala:FoldProcessor", "TwsOps.scala:EmaProcessor",
       "TwsOps.scala:TimeoutProcessor"), s"StatefulProcessor subclasses: $found")
   }
+
+  test("entry points: exactly seven objects in src/main define a main") {
+    // ProfileQuery is the one per-query profiler: an arm A/B belongs in a
+    // spec (equality) plus a ProfileQuery run (timing), not a new main
+    val obj = "\\bobject (\\w+)".r
+    val mains = mainSources.flatMap { file =>
+      var current = ""
+      lines(file).flatMap { line =>
+        obj.findFirstMatchIn(line).foreach(m => current = m.group(1))
+        if (line.contains("def main(") || line.contains("extends App")) Some(current) else None
+      }
+    }.toSet
+    assert(mains == Set("Bench", "Demo", "GenScaleData", "PlanAudit", "ProfileQuery",
+      "Verify", "WatchProfile"), s"objects with a main: $mains")
+  }
 }

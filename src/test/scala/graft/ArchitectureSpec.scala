@@ -56,6 +56,29 @@ class ArchitectureSpec extends AnyFunSuite {
       "TwsOps.scala:TimeoutProcessor"), s"StatefulProcessor subclasses: $found")
   }
 
+  test("streaming checkpoint settings live only in GraftSession.builder") {
+    // the fork-free checkpoint manager and changelog commits are constants
+    // of the session, not per-query options that a twin could drop
+    val keys = Seq("spark.sql.streaming.checkpointFileManagerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    val session = Paths.get("src/main/scala/graft/ts/Tick.scala")
+    val sessionLines = lines(session)
+    val from = sessionLines.indexWhere(_.contains("def builder("))
+    val to = sessionLines.indexWhere(_.contains("def get()"), from)
+    assert(from > 0 && to > from, "GraftSession.builder not found")
+    keys.foreach { key =>
+      val hits = for {
+        file <- mainSources
+        (line, i) <- lines(file).zipWithIndex
+        if line.contains(key)
+      } yield (file, i)
+      assert(hits.nonEmpty, s"$key is not set")
+      val outside = hits.filterNot { case (f, i) => Files.isSameFile(f, session) && i > from && i < to }
+      assert(outside.isEmpty, outside.map { case (f, i) => s"$f:${i + 1}" }
+        .mkString(s"$key outside GraftSession.builder:\n", "\n", ""))
+    }
+  }
+
   test("entry points: exactly seven objects in src/main define a main") {
     // ProfileQuery is the one per-query profiler: an arm A/B belongs in a
     // spec (equality) plus a ProfileQuery run (timing), not a new main

@@ -21,16 +21,22 @@ object RestartParity {
     * next batch is added while it is down, and a new query resumes from
     * the same checkpoint. Returns every emitted row, batch by batch in
     * emission order; a batch that a restart replays replaces its first
-    * delivery, as an idempotent sink keyed by batch id would. */
+    * delivery, as an idempotent sink keyed by batch id would.
+    * `killAt` names the kill points (batch indices) instead of drawing
+    * them; `onRestart` runs on the checkpoint directory while the query is
+    * down, before it resumes. */
   def run[I: Encoder, O](rows: Seq[I], seed: Long, outputMode: String = "append",
-                         batches: Int = 6, kills: Int = 2)(
+                         batches: Int = 6, kills: Int = 2, killAt: Set[Int] = Set.empty,
+                         onRestart: java.io.File => Unit = _ => ())(
       twin: Dataset[I] => Dataset[O]): Seq[O] = {
     implicit val sq = TestSpark.spark.sqlContext
     val rnd = new scala.util.Random(seed)
     val n = math.min(batches, rows.size)
     require(kills < n, s"$kills kill points need more than $n batches")
     val cuts = 0 +: rnd.shuffle((1 until rows.size).toList).take(n - 1).sorted :+ rows.size
-    val killAfter = rnd.shuffle((0 until n - 1).toList).take(kills).toSet
+    val killAfter =
+      if (killAt.nonEmpty) killAt else rnd.shuffle((0 until n - 1).toList).take(kills).toSet
+    require(killAfter.forall(i => i >= 0 && i < n - 1), s"kill points $killAfter outside 0 until ${n - 1}")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-restart").toFile
     val emitted = mutable.TreeMap.empty[Long, Seq[O]]
     val mem = MemoryStream[I]
@@ -47,7 +53,7 @@ object RestartParity {
         mem.addData(rows.slice(lo, hi): _*)
         if (q == null) q = start() // resume from the checkpoint
         q.processAllAvailable()
-        if (killAfter(i)) { q.stop(); q = null }
+        if (killAfter(i)) { q.stop(); q = null; onRestart(ckpt) }
       }
     } finally {
       if (q != null) q.stop()

@@ -66,6 +66,44 @@ class TwsSpec extends AnyFunSuite {
     }
   }
 
+  test("restart past the snapshot interval: recovery loads a RocksDB snapshot, then replays changelogs") {
+    // with changelog checkpointing RocksDB snapshots every 10 versions
+    // (minDeltasForSnapshot) and background maintenance (every 60 s by
+    // default) uploads the snapshot. The kill comes after 13 committed
+    // batches and the restart waits for the version-11 upload, so recovery
+    // loads that snapshot and replays the changelogs after it through the
+    // checkpoint manager, rather than replaying from the first version
+    import org.apache.spark.sql.Encoders
+    import scala.jdk.CollectionConverters._
+    implicit val tickEnc = Encoders.product[TickRow]
+
+    val ev = Sources.events(spark, TestSpark.sf)
+    val batch = graft.operators.Sequential.ema(ev, 0.4).df
+      .select("key", "seq", "ema").collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val ticks = graft.streaming.StatefulOps.toTickRows(ev)
+      .collect().toSeq.sortBy(r => (r.tsMicros, r.seq))
+    def versions(files: Seq[String], suffix: String) =
+      files.filter(_.endsWith(suffix)).map(_.stripSuffix(suffix).toLong)
+    var stateFiles = Seq.empty[String]
+    val recovered = RestartParity.run(ticks, seed = 53, batches = 16, killAt = Set(12),
+      onRestart = { ckpt =>
+        def list() = org.apache.commons.io.FileUtils.listFiles(new java.io.File(ckpt, "state"), null, true)
+          .asScala.map(_.getName).toSeq
+        val deadline = System.nanoTime + 150L * 1000 * 1000 * 1000
+        while (!versions(list(), ".zip").exists(_ >= 11) && System.nanoTime < deadline) Thread.sleep(200)
+        stateFiles = list()
+      })(TwsOps.emaTws(_, 0.4)).map(o => (o.key, o.seq) -> o.ema).toMap
+
+    val snapshots = versions(stateFiles, ".zip")
+    assert(snapshots.exists(_ >= 11), s"no snapshot past the interval: ${stateFiles.sorted.mkString(", ")}")
+    assert(versions(stateFiles, ".changelog").exists(_ > snapshots.max), "no changelog after the last snapshot")
+    assert(recovered.size == batch.size)
+    recovered.foreach { case (k, v) =>
+      assert(v == batch(k), s"$k: recovered $v vs batch ${batch(k)}")
+    }
+  }
+
   test("soak: 100k-row RocksDB session, 20 micro-batches, two kill/recover cycles") {
     // The multi-batch endurance case the short parity fixtures don't
     // cover: sf0.1 volume (100k ticks, 20 keys) through the streaming

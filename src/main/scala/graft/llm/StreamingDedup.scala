@@ -1,16 +1,21 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.streaming.OutputMode
+
+import scala.collection.mutable
+
+import graft.streaming.TwsOps
 
 /** Online (streaming) twins of the batch [[Dedup]] family — dedup a LIVE
   * ingest feed instead of a resting corpus. The reference runs its dedup
   * offline; a training-data pipeline consuming a firehose needs the same
   * decision ("is this document new?") at arrival time, with state that
-  * survives restarts. Both operators here are `transformWithState`
-  * StatefulProcessors (RocksDB state, checkpoint-recoverable — the same
-  * runtime as the §2.9 stateful nodes, `TwsOps`), and both derive their
+  * survives restarts. Both stateful operators here are plain folds on the
+  * one streaming runtime of the §2.9 stateful nodes (`TwsOps`:
+  * transformWithState, RocksDB state, checkpoint-recoverable), and both
+  * derive their
   * features with the SAME Catalyst expressions as the batch operators
   * ([[TextAnalysis.fingerprint]], [[Shingles.hashedShingles]],
   * [[graft.functions.VectorExprs.minhashSig]]), so stream==batch parity
@@ -48,28 +53,59 @@ object StreamingDedup {
                                   sig: Array[Long], set: Array[Long])
   private[llm] case class Member(docId: Long, sig: Array[Long], set: Array[Long])
 
+  // ---- LSH banding (shared by every banded twin in graft.llm) ----
+
+  /** Bucket key of band `b` of `sig` (`rows` values per band): the band
+    * index, ':', then each value followed by ','. */
+  private[llm] def bandKey(sig: Array[Long], b: Int, rows: Int): String = {
+    val k = new StringBuilder().append(b).append(':')
+    var i = b * rows
+    while (i < (b + 1) * rows) { k.append(sig(i)).append(','); i += 1 }
+    k.toString
+  }
+
+  private def sliceEqual(a: Array[Long], b: Array[Long], band: Int, rows: Int): Boolean = {
+    var i = band * rows
+    val end = i + rows
+    while (i < end) { if (a(i) != b(i)) return false; i += 1 }
+    true
+  }
+
+  /** The first band in which two signatures agree on every row (-1 if
+    * none): a pair colliding in several buckets is emitted only by the
+    * bucket of this band. */
+  private[llm] def firstMatchingBand(a: Array[Long], b: Array[Long], rows: Int, bands: Int): Int = {
+    var band = 0
+    while (band < bands) { if (sliceEqual(a, b, band, rows)) return band; band += 1 }
+    -1
+  }
+
+  /** Exact Jaccard of two hashed-shingle sets (already distinct). */
+  private[llm] def jaccard(a: Array[Long], b: Array[Long]): Double = {
+    val sa = a.sorted; val sb = b.sorted
+    var i = 0; var j = 0; var inter = 0
+    while (i < sa.length && j < sb.length) {
+      if (sa(i) == sb(j)) { inter += 1; i += 1; j += 1 }
+      else if (sa(i) < sb(j)) i += 1 else j += 1
+    }
+    val union = sa.length + sb.length - inter
+    if (union == 0) 0.0 else inter.toDouble / union
+  }
+
   // ---- exact (fingerprint → first-seen representative) ----
 
-  /** Keyed by content fingerprint; ValueState holds the first-seen id.
-    * csp analogue: a `csp.node` with per-key state deciding NEW/DUP per
-    * tick (reference runs this offline, `csp/impl/pandas_ext` has no
-    * online form — this is the Spark-native extension). */
-  class ExactProcessor extends StatefulProcessor[String, FpDoc, ExactFlag] {
-    @transient private var canonical: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      canonical = getHandle.getValueState[Long]("canonical", Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[FpDoc],
-                                 timerValues: TimerValues): Iterator[ExactFlag] = {
-      // min-id-first within a micro-batch: arrival order inside one batch
-      // is not observable, so resolve ties the way the batch twin does
-      val sorted = rows.toSeq.sortBy(_.docId)
-      sorted.iterator.map { d =>
-        if (!canonical.exists()) canonical.update(d.docId)
-        ExactFlag(d.docId, canonical.get())
-      }
-    }
+  /** Per-fingerprint fold; the state is the first-seen id. csp analogue:
+    * a `csp.node` with per-key state deciding NEW/DUP per tick (reference
+    * runs this offline, `csp/impl/pandas_ext` has no online form — this
+    * is the Spark-native extension). A known fingerprint hands its state
+    * back untouched, so only a new fingerprint costs a state write. */
+  private def firstSeen(fp: String, docs: Iterator[FpDoc],
+                        first: Option[Long]): (Option[Long], Iterator[ExactFlag]) = {
+    // min-id-first within a micro-batch: arrival order inside one batch
+    // is not observable, so resolve ties the way the batch twin does
+    val sorted = docs.toSeq.sortBy(_.docId)
+    val canonical = first.getOrElse(sorted.head.docId)
+    (first.orElse(Some(canonical)), sorted.iterator.map(d => ExactFlag(d.docId, canonical)))
   }
 
   /** Streaming exact dedup over a feed with `idCol` (long) and `textCol`.
@@ -78,92 +114,55 @@ object StreamingDedup {
   def exactFlags(docs: DataFrame, textCol: String, idCol: String): Dataset[ExactFlag] = {
     implicit val inEnc = Encoders.product[FpDoc]
     implicit val outEnc = Encoders.product[ExactFlag]
-    docs.select(TextAnalysis.fingerprint(col(textCol)).as("fp"),
-        col(idCol).cast("long").as("docId"))
-      .as[FpDoc]
-      .groupByKey(_.fp)(Encoders.STRING)
-      .transformWithState(new ExactProcessor, TimeMode.None(), OutputMode.Append())
+    implicit val keyEnc = Encoders.STRING
+    implicit val stEnc = Encoders.scalaLong
+    val fps = docs.select(TextAnalysis.fingerprint(col(textCol)).as("fp"),
+        col(idCol).cast("long").as("docId")).as[FpDoc]
+    TwsOps.foldByKey(fps, (_: FpDoc).fp, OutputMode.Append())(firstSeen)
   }
 
   // ---- MinHash + LSH near-dup (banded buckets → verified pairs) ----
 
-  /** Keyed by (band, band-slice) bucket; ListState holds the bucket's
-    * members (id, signature, hashed shingle set). An arriving doc is
-    * compared against stored members: signature-agreement estimate first
-    * (same 0.2 margin as the batch prefilter), then exact Jaccard on the
-    * hashed sets. A pair colliding in several bands would be emitted by
-    * several bucket processors; each processor re-derives BOTH docs' band
-    * keys from the signatures it already holds and emits only from the
-    * pair's FIRST matching band — exactly-once pair output with zero
-    * extra state or shuffle (the batch twin pays a `.distinct()` for the
-    * same guarantee).
+  /** Per-bucket fold, keyed by (band, band-slice) bucket; the bucket's
+    * members (id, signature, hashed shingle set) are append-only state.
+    * An arriving doc is compared against stored members: signature-
+    * agreement estimate first (same 0.2 margin as the batch prefilter),
+    * then exact Jaccard on the hashed sets. A pair colliding in several
+    * bands would be emitted by several buckets; each bucket re-derives
+    * BOTH docs' band keys from the signatures it already holds and emits
+    * only from the pair's FIRST matching band — exactly-once pair output
+    * with zero extra state or shuffle (the batch twin pays a
+    * `.distinct()` for the same guarantee).
     */
-  class BucketProcessor(threshold: Double, numHashes: Int, bands: Int,
-                        maxBucketSize: Int)
-      extends StatefulProcessor[String, BandDoc, NearDupPair] {
-    @transient private var members: ListState[Member] = _
-    private val rows = numHashes / bands
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[Member]("members", Encoders.product[Member], TTLConfig.NONE)
-
-    private def sliceEqual(a: Array[Long], b: Array[Long], band: Int): Boolean = {
-      var i = band * rows
-      val end = i + rows
-      while (i < end) { if (a(i) != b(i)) return false; i += 1 }
-      true
-    }
-
-    private def firstMatchingBand(a: Array[Long], b: Array[Long]): Int = {
-      var band = 0
-      while (band < bands) { if (sliceEqual(a, b, band)) return band; band += 1 }
-      -1 // unreachable for two docs sharing this bucket
-    }
-
-    private def agreement(a: Array[Long], b: Array[Long]): Double = {
+  private def minhashBucket(threshold: Double, numHashes: Int, bands: Int, maxBucketSize: Int)(
+      key: String, docs: Iterator[BandDoc],
+      stored: Iterator[Member]): (Iterable[Member], Iterator[NearDupPair]) = {
+    val rows = numHashes / bands
+    def agreement(a: Array[Long], b: Array[Long]): Double = {
       var eq = 0; var i = 0
       while (i < numHashes) { if (a(i) == b(i)) eq += 1; i += 1 }
       eq.toDouble / numHashes
     }
-
-    /** Exact Jaccard of two hashed-shingle sets (already distinct). */
-    private def jaccard(a: Array[Long], b: Array[Long]): Double = {
-      val sa = a.sorted; val sb = b.sorted
-      var i = 0; var j = 0; var inter = 0
-      while (i < sa.length && j < sb.length) {
-        if (sa(i) == sb(j)) { inter += 1; i += 1; j += 1 }
-        else if (sa(i) < sb(j)) i += 1 else j += 1
-      }
-      val union = sa.length + sb.length - inter
-      if (union == 0) 0.0 else inter.toDouble / union
-    }
-
-    override def handleInputRows(key: String, rows0: Iterator[BandDoc],
-                                 timerValues: TimerValues): Iterator[NearDupPair] = {
-      val arriving = rows0.toSeq.sortBy(_.docId) // batch-twin tie order
-      if (arriving.isEmpty) return Iterator.empty
-      val thisBand = arriving.head.band
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Member]
-      members.get().foreach(buf += _)
-      val out = scala.collection.mutable.ArrayBuffer.empty[NearDupPair]
-      arriving.foreach { d =>
-        if (buf.length < maxBucketSize) { // at cap: bucket closed (online capBuckets)
-          buf.foreach { m =>
-            if (m.docId != d.docId &&
-                agreement(m.sig, d.sig) >= threshold - 0.2 &&
-                firstMatchingBand(m.sig, d.sig) == thisBand) {
-              val j = jaccard(m.set, d.set)
-              if (j >= threshold)
-                out += NearDupPair(math.min(m.docId, d.docId), math.max(m.docId, d.docId), j)
-            }
+    val arriving = docs.toSeq.sortBy(_.docId) // batch-twin tie order
+    val thisBand = arriving.head.band
+    val buf = mutable.ArrayBuffer.from(stored)
+    val kept = buf.length
+    val out = mutable.ArrayBuffer.empty[NearDupPair]
+    arriving.foreach { d =>
+      if (buf.length < maxBucketSize) { // at cap: bucket closed (online capBuckets)
+        buf.foreach { m =>
+          if (m.docId != d.docId &&
+              agreement(m.sig, d.sig) >= threshold - 0.2 &&
+              firstMatchingBand(m.sig, d.sig, rows, bands) == thisBand) {
+            val j = jaccard(m.set, d.set)
+            if (j >= threshold)
+              out += NearDupPair(math.min(m.docId, d.docId), math.max(m.docId, d.docId), j)
           }
-          val mem = Member(d.docId, d.sig, d.set)
-          buf += mem
-          members.appendValue(mem)
         }
+        buf += Member(d.docId, d.sig, d.set)
       }
-      out.iterator
     }
+    (buf.view.drop(kept), out.iterator)
   }
 
   /** Streaming MinHash+LSH near-dup pairs over a live feed — same
@@ -179,6 +178,7 @@ object StreamingDedup {
     val spark = docs.sparkSession
     import spark.implicits._
     implicit val bdEnc = Encoders.product[BandDoc]
+    implicit val memberEnc = Encoders.product[Member]
     implicit val outEnc = Encoders.product[NearDupPair]
     // One signature per doc via the SAME native expressions as batch; the
     // per-band fan-out happens JVM-side in a flatMap. The typed boundary
@@ -193,16 +193,10 @@ object StreamingDedup {
         array_distinct(col("base")).as("set"))
       .as[(Long, Array[Long], Array[Long])]
     val banded = sigs.flatMap { case (id, sig, set) =>
-      (0 until bands).map { b =>
-        val k = new StringBuilder().append(b).append(':')
-        var i = b * rows
-        while (i < (b + 1) * rows) { k.append(sig(i)).append(','); i += 1 }
-        BandDoc(k.toString, b, id, sig, set)
-      }
+      (0 until bands).map(b => BandDoc(bandKey(sig, b, rows), b, id, sig, set))
     }
-    banded.groupByKey(_.bandKey)(Encoders.STRING)
-      .transformWithState(new BucketProcessor(threshold, numHashes, bands, maxBucketSize),
-        TimeMode.None(), OutputMode.Append())
+    TwsOps.appendByKey(banded, (_: BandDoc).bandKey)(
+      minhashBucket(threshold, numHashes, bands, maxBucketSize))
   }
 
   // ---- streaming decontamination (stateless broadcast-index probe) ----
@@ -234,15 +228,11 @@ object StreamingDedup {
         array_distinct(col("base")).as("set"))
       .as[(Long, Array[Long], Array[Long])]
       .collect()
-    val buckets = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[Member]]
+    val buckets = mutable.HashMap.empty[String, mutable.ArrayBuffer[Member]]
     enriched.foreach { case (id, sig, set) =>
       var b = 0
       while (b < bands) {
-        val k = new StringBuilder().append(b).append(':')
-        var i = b * rows
-        while (i < (b + 1) * rows) { k.append(sig(i)).append(','); i += 1 }
-        buckets.getOrElseUpdate(k.toString, scala.collection.mutable.ArrayBuffer.empty) +=
+        buckets.getOrElseUpdate(bandKey(sig, b, rows), mutable.ArrayBuffer.empty) +=
           Member(id, sig, set)
         b += 1
       }
@@ -253,33 +243,19 @@ object StreamingDedup {
       .toMap
   }
 
-  private def jaccardSets(a: Array[Long], b: Array[Long]): Double = {
-    val sa = a.sorted; val sb = b.sorted
-    var i = 0; var j = 0; var inter = 0
-    while (i < sa.length && j < sb.length) {
-      if (sa(i) == sb(j)) { inter += 1; i += 1; j += 1 }
-      else if (sa(i) < sb(j)) i += 1 else j += 1
-    }
-    val union = sa.length + sb.length - inter
-    if (union == 0) 0.0 else inter.toDouble / union
-  }
-
   /** Per-doc verified reference matches: probe each of the doc's band
     * keys against the broadcast index, verify once per distinct refId. */
   private def probeMatches(idx: Map[String, Array[Member]], id: Long,
                            sig: Array[Long], set: Array[Long], threshold: Double,
                            numHashes: Int, bands: Int): Seq[ContamMatch] = {
     val rows = numHashes / bands
-    val seen = scala.collection.mutable.HashSet.empty[Long]
-    val out = scala.collection.mutable.ArrayBuffer.empty[ContamMatch]
+    val seen = mutable.HashSet.empty[Long]
+    val out = mutable.ArrayBuffer.empty[ContamMatch]
     var b = 0
     while (b < bands) {
-      val k = new StringBuilder().append(b).append(':')
-      var i = b * rows
-      while (i < (b + 1) * rows) { k.append(sig(i)).append(','); i += 1 }
-      idx.get(k.toString).foreach(_.foreach { m =>
+      idx.get(bandKey(sig, b, rows)).foreach(_.foreach { m =>
         if (seen.add(m.docId)) {
-          val j = jaccardSets(set, m.set)
+          val j = jaccard(set, m.set)
           if (j >= threshold) out += ContamMatch(id, m.docId, j)
         }
       })

@@ -2,8 +2,10 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{IntegerType, LongType}
+
+import graft.streaming.TwsOps
 
 /** Online sequence packing: the streaming twin of
   * [[Packing.packSequences]] — documents ARRIVE (ingest feed) and are
@@ -12,7 +14,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * running instead of waiting for an offline pass.
   *
   * Same NEXT-FIT recurrence, same O(1) per-stream state (open bin
-  * ordinal + fill), carried in a TWS ValueState keyed by the packing
+  * ordinal + fill), carried in a `TwsOps` fold's state keyed by the packing
   * stream (doc_id mod streams — the parallelism axis, exactly the batch
   * partition key). Within a micro-batch the group's rows are packed in
   * doc_id order (the batch scan order); ACROSS batches the order is
@@ -31,28 +33,19 @@ object StreamingPacking {
   private[llm] case class DocTok(doc_id: Long, n_tok: Int, stream: Int)
   private[llm] case class BinFill(bin: Long, used: Int)
 
-  /** Next-fit per key; ValueState = (open bin, tokens used). Mirrors the
-    * batch fold in Packing.packSequences line for line. */
-  class NextFitProcessor(maxTokens: Int)
-      extends StatefulProcessor[Int, DocTok, Packing.Packed] {
-    @transient private var fill: ValueState[BinFill] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      fill = getHandle.getValueState[BinFill]("packfill", Encoders.product[BinFill], TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[DocTok],
-                                 timerValues: TimerValues): Iterator[Packing.Packed] = {
-      var st = if (fill.exists()) fill.get() else BinFill(0L, 0)
-      val out = rows.toSeq.sortBy(_.doc_id).map { d =>
-        val fits = st.used > 0 && st.used + d.n_tok <= maxTokens
-        st =
-          if (fits) BinFill(st.bin, st.used + d.n_tok)
-          else BinFill(if (st.used > 0) st.bin + 1 else st.bin, d.n_tok)
-        Packing.Packed(d.doc_id, d.n_tok, key, st.bin, d.n_tok > maxTokens)
-      }
-      fill.update(st)
-      out.iterator
+  /** Next-fit fold per stream; the state is (open bin, tokens used).
+    * Mirrors the batch fold in Packing.packSequences line for line. */
+  private def nextFit(maxTokens: Int)(stream: Int, docs: Iterator[DocTok],
+      prev: Option[BinFill]): (Option[BinFill], Iterator[Packing.Packed]) = {
+    var st = prev.getOrElse(BinFill(0L, 0))
+    val out = docs.toSeq.sortBy(_.doc_id).map { d =>
+      val fits = st.used > 0 && st.used + d.n_tok <= maxTokens
+      st =
+        if (fits) BinFill(st.bin, st.used + d.n_tok)
+        else BinFill(if (st.used > 0) st.bin + 1 else st.bin, d.n_tok)
+      Packing.Packed(d.doc_id, d.n_tok, stream, st.bin, d.n_tok > maxTokens)
     }
+    (Some(st), out.iterator)
   }
 
   /** Pack a streaming frame of documents. Column contract and defaults
@@ -66,12 +59,12 @@ object StreamingPacking {
     val spark = docs.sparkSession
     import spark.implicits._
     implicit val outEnc = Encoders.product[Packing.Packed]
-    docs.select(
+    implicit val stEnc = Encoders.product[BinFill]
+    val toks = docs.select(
         col(idCol).cast(LongType).as("doc_id"),
         TextAnalysis.tokenCount(col(textCol)).as("n_tok"),
         (col(idCol) % streams).cast(IntegerType).as("stream"))
       .as[DocTok]
-      .groupByKey(_.stream)(Encoders.scalaInt)
-      .transformWithState(new NextFitProcessor(maxTokens), TimeMode.None(), OutputMode.Append())
+    TwsOps.foldByKey(toks, (_: DocTok).stream, OutputMode.Append())(nextFit(maxTokens))
   }
 }

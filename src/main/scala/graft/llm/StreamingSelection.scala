@@ -1,10 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
 
 import scala.collection.mutable
+
+import graft.streaming.TwsOps
 
 /** Online twins of the data-selection operators:
   *
@@ -37,29 +38,21 @@ object StreamingSelection {
   /** Output: arrival-time keep/drop flag per vector. */
   case class SemFlag(vecId: Long, cell: Int, kept: Boolean)
 
-  class SemProcessor(tau: Double) extends StatefulProcessor[Int, CellVec, SemFlag] {
-    @transient private var reps: ListState[CellVec] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      reps = getHandle.getListState[CellVec]("reps",
-        Encoders.product[CellVec], TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[CellVec],
-                                 timerValues: TimerValues): Iterator[SemFlag] = {
-      val kept = mutable.ArrayBuffer.empty[Array[Double]]
-      reps.get().foreach(r => kept += r.v.toArray)
-      val fresh = mutable.ArrayBuffer.empty[CellVec]
-      // within-batch determinism: process in id order (same order the
-      // batch greedy recurrence scans)
-      val out = rows.toSeq.sortBy(_.vecId).map { r =>
-        val va = r.v.toArray
-        val dup = kept.exists(u => SemDedup.cosLocal(u, va) >= tau)
-        if (!dup) { kept += va; fresh += r }
-        SemFlag(r.vecId, r.cell, !dup)
-      }
-      if (fresh.nonEmpty) reps.appendList(fresh.toArray)
-      out.iterator
+  /** Per-cell fold; the cell's kept representatives are append-only
+    * state. */
+  private def keptChain(tau: Double)(cell: Int, rows: Iterator[CellVec],
+      reps: Iterator[CellVec]): (Iterable[CellVec], Iterator[SemFlag]) = {
+    val kept = mutable.ArrayBuffer.from(reps.map(_.v.toArray))
+    val fresh = mutable.ArrayBuffer.empty[CellVec]
+    // within-batch determinism: process in id order (same order the
+    // batch greedy recurrence scans)
+    val out = rows.toSeq.sortBy(_.vecId).map { r =>
+      val va = r.v.toArray
+      val dup = kept.exists(u => SemDedup.cosLocal(u, va) >= tau)
+      if (!dup) { kept += va; fresh += r }
+      SemFlag(r.vecId, r.cell, !dup)
     }
+    (fresh, out.iterator)
   }
 
   /** Arrival-time SemDeDup over a vector stream: assigns each arriving
@@ -70,12 +63,12 @@ object StreamingSelection {
                      id: String = "vec_id", vec: String = "embedding"): Dataset[SemFlag] = {
     implicit val inEnc = Encoders.product[CellVec]
     implicit val outEnc = Encoders.product[SemFlag]
-    vecs.select(Ivf.cellColumn(centroids, col(vec)).as("cell"),
+    implicit val keyEnc = Encoders.scalaInt
+    val cells = vecs.select(Ivf.cellColumn(centroids, col(vec)).as("cell"),
         col(id).cast("long").as("vecId"),
         col(vec).cast("array<double>").as("v"))
       .as[CellVec]
-      .groupByKey(_.cell)(Encoders.scalaInt)
-      .transformWithState(new SemProcessor(tau), TimeMode.None(), OutputMode.Append())
+    TwsOps.appendByKey(cells, (_: CellVec).cell)(keptChain(tau))
   }
 
   // ---- online edit-distance near-dup (twin of EditDedup.verifiedPairs) ----
@@ -87,76 +80,52 @@ object StreamingSelection {
   /** Emitted edit-near pair, schema-matching [[EditDedup.verifiedPairs]]. */
   case class EditPair(id1: Long, id2: Long, dist: Int, sim: Double)
 
-  /** Per-bucket processor: stored members carry text + codepoint
-    * histogram; an arriving doc is pruned by the L1 bound (lev ≥ L1/2)
-    * before the banded-DP verify — the same two-stage verification as
-    * batch. Cross-band duplicate pairs suppressed by the first-matching-
-    * band rule (the batch twin's `.distinct()`). */
-  class EditBucketProcessor(maxDist: Int, numHashes: Int, bands: Int,
-                            maxBucketSize: Int)
-      extends StatefulProcessor[String, EditBandDoc, EditPair] {
-    @transient private var members: ListState[EditMember] = _
-    private val rows = numHashes / bands
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[EditMember]("members",
-        Encoders.product[EditMember], TTLConfig.NONE)
-
-    private def sliceEqual(a: Array[Long], b: Array[Long], band: Int): Boolean = {
-      var i = band * rows
-      val end = i + rows
-      while (i < end) { if (a(i) != b(i)) return false; i += 1 }
-      true
-    }
-
-    private def firstMatchingBand(a: Array[Long], b: Array[Long]): Int = {
-      var band = 0
-      while (band < bands) { if (sliceEqual(a, b, band)) return band; band += 1 }
-      -1
-    }
-
-    override def handleInputRows(key: String, rows0: Iterator[EditBandDoc],
-                                 timerValues: TimerValues): Iterator[EditPair] = {
-      val arriving = rows0.toSeq.sortBy(_.docId)
-      if (arriving.isEmpty) return Iterator.empty
-      val thisBand = arriving.head.band
-      val buf = scala.collection.mutable.ArrayBuffer.empty[EditMember]
-      members.get().foreach(buf += _)
-      val out = scala.collection.mutable.ArrayBuffer.empty[EditPair]
-      arriving.foreach { d =>
-        // at cap: bucket closed without storing OR comparing — the online
-        // capBuckets rule, same as the batch twin's capped candidate set
-        // and StreamingDedup's bucket processor
-        if (buf.length < maxBucketSize) {
-          val hist = graft.functions.TextKernels.charHist(d.text)
-          val dLen = d.text.codePointCount(0, d.text.length)
-          buf.foreach { m =>
-            val mLen = m.text.codePointCount(0, m.text.length)
-            if (m.docId != d.docId &&
-                math.abs(mLen - dLen) <= maxDist &&
-                graft.functions.TextKernels.histL1(m.hist, hist) <= 2 * maxDist &&
-                firstMatchingBand(m.sig, d.sig) == thisBand) {
-              // codepoint DP + codepoint lengths — the same units as the
-              // batch twin's Spark levenshtein/length, so replay equality
-              // holds beyond ASCII (BMP and supplementary alike)
-              val dist = StreamingSelection.levenshteinBounded(m.text, d.text, maxDist)
-              if (dist >= 0) {
-                val lmax = math.max(mLen, dLen)
-                val sim = if (lmax == 0) 1.0
-                  else BigDecimal(1.0 - dist.toDouble / lmax)
-                    .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-                out += EditPair(math.min(m.docId, d.docId),
-                  math.max(m.docId, d.docId), dist, sim)
-              }
+  /** Per-bucket fold; the bucket's members are append-only state and
+    * carry text + codepoint histogram. An arriving doc is pruned by the
+    * L1 bound (lev ≥ L1/2) before the banded-DP verify — the same
+    * two-stage verification as batch. Cross-band duplicate pairs are
+    * suppressed by the first-matching-band rule (the batch twin's
+    * `.distinct()`). */
+  private def editBucket(maxDist: Int, numHashes: Int, bands: Int, maxBucketSize: Int)(
+      key: String, docs: Iterator[EditBandDoc],
+      stored: Iterator[EditMember]): (Iterable[EditMember], Iterator[EditPair]) = {
+    val rows = numHashes / bands
+    val arriving = docs.toSeq.sortBy(_.docId)
+    val thisBand = arriving.head.band
+    val buf = mutable.ArrayBuffer.from(stored)
+    val kept = buf.length
+    val out = mutable.ArrayBuffer.empty[EditPair]
+    arriving.foreach { d =>
+      // at cap: bucket closed without storing OR comparing — the online
+      // capBuckets rule, same as the batch twin's capped candidate set
+      // and StreamingDedup's bucket fold
+      if (buf.length < maxBucketSize) {
+        val hist = graft.functions.TextKernels.charHist(d.text)
+        val dLen = d.text.codePointCount(0, d.text.length)
+        buf.foreach { m =>
+          val mLen = m.text.codePointCount(0, m.text.length)
+          if (m.docId != d.docId &&
+              math.abs(mLen - dLen) <= maxDist &&
+              graft.functions.TextKernels.histL1(m.hist, hist) <= 2 * maxDist &&
+              StreamingDedup.firstMatchingBand(m.sig, d.sig, rows, bands) == thisBand) {
+            // codepoint DP + codepoint lengths — the same units as the
+            // batch twin's Spark levenshtein/length, so replay equality
+            // holds beyond ASCII (BMP and supplementary alike)
+            val dist = levenshteinBounded(m.text, d.text, maxDist)
+            if (dist >= 0) {
+              val lmax = math.max(mLen, dLen)
+              val sim = if (lmax == 0) 1.0
+                else BigDecimal(1.0 - dist.toDouble / lmax)
+                  .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+              out += EditPair(math.min(m.docId, d.docId),
+                math.max(m.docId, d.docId), dist, sim)
             }
           }
-          val mem = EditMember(d.docId, d.sig, d.text, hist)
-          buf += mem
-          members.appendValue(mem)
         }
+        buf += EditMember(d.docId, d.sig, d.text, hist)
       }
-      out.iterator
     }
+    (buf.view.drop(kept), out.iterator)
   }
 
   /** Online edit-distance near-dup pairs over a live feed — the
@@ -171,6 +140,7 @@ object StreamingSelection {
     val spark = docs.sparkSession
     import spark.implicits._
     implicit val bdEnc = Encoders.product[EditBandDoc]
+    implicit val memberEnc = Encoders.product[EditMember]
     implicit val outEnc = Encoders.product[EditPair]
     val sigs = docs.select(col(idCol).cast("long").as("docId"),
         graft.functions.VectorExprs.minhashSig(
@@ -178,16 +148,10 @@ object StreamingSelection {
         col(textCol).as("text"))
       .as[(Long, Array[Long], String)]
     val banded = sigs.flatMap { case (id, sig, text) =>
-      (0 until bands).map { b =>
-        val k = new StringBuilder().append(b).append(':')
-        var i = b * rows
-        while (i < (b + 1) * rows) { k.append(sig(i)).append(','); i += 1 }
-        EditBandDoc(k.toString, b, id, sig, text)
-      }
+      (0 until bands).map(b => EditBandDoc(StreamingDedup.bandKey(sig, b, rows), b, id, sig, text))
     }
-    banded.groupByKey(_.bandKey)(Encoders.STRING)
-      .transformWithState(new EditBucketProcessor(maxDist, numHashes, bands, maxBucketSize),
-        TimeMode.None(), OutputMode.Append())
+    TwsOps.appendByKey(banded, (_: EditBandDoc).bandKey)(
+      editBucket(maxDist, numHashes, bands, maxBucketSize))
   }
 
   /** Levenshtein with early-out threshold: −1 when distance > d (the

@@ -1,9 +1,13 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
+
+import scala.collection.mutable
+
+import graft.streaming.TwsOps
 
 /** Online ANN serving: top-k nearest neighbors for a LIVE stream of query
   * embeddings against a STATIC IVF-indexed corpus — the retrieval shape
@@ -22,10 +26,11 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   *   corpus never broadcasts and never re-shuffles per batch (the cell
   *   assignment is the partition key, exactly the IVF contract: nprobe
   *   cells bound the scan);
-  * - per-query top-k: a STATELESS StatefulProcessor (every candidate of
-  *   a query lives in the same micro-batch as the query row itself, so
-  *   the grouped sort-take needs no cross-batch state — the processor is
-  *   a per-batch grouped map, not an accumulator).
+  * - per-query top-k: a `TwsOps` fold that keeps NO state (every
+  *   candidate of a query lives in the same micro-batch as the query row
+  *   itself, so the grouped sort-take needs no cross-batch state — the
+  *   fold is a per-batch grouped map, not an accumulator, and writes
+  *   nothing to the state store).
   *
   * Cosines are computed by the same [[graft.functions.VectorExprs]]
   * kernel as batch; the JVM centroid probe replicates its exact
@@ -52,16 +57,24 @@ object StreamingSimilarity {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Stateless per-batch grouped top-k (batch tie-break: cosine desc,
-    * then neighbor id asc). */
-  class TopKProcessor(k: Int) extends StatefulProcessor[Long, Cand, KnnHit] {
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = ()
+  /** Stateless per-batch grouped top-k: `rank` orders one query's
+    * candidates into hits, on a fold whose state is never set (its
+    * `Boolean` type is a placeholder). */
+  private def perQuery[C, H: Encoder](cands: Dataset[C], query: C => Long)(
+      rank: Seq[C] => Seq[H]): Dataset[H] = {
+    implicit val keyEnc = Encoders.scalaLong
+    implicit val stEnc = Encoders.scalaBoolean
+    TwsOps.foldByKey[Long, C, Boolean, H](cands, query, OutputMode.Append()) {
+      (_, rows, _) => (None, rank(rows.toSeq).iterator)
+    }
+  }
 
-    override def handleInputRows(key: Long, rows: Iterator[Cand],
-                                 timerValues: TimerValues): Iterator[KnnHit] =
-      rows.toSeq.sortBy(c => (-c.cosine, c.neighborId)).take(k).zipWithIndex
-        .map { case (c, i) => KnnHit(c.queryId, c.neighborId, i + 1, c.cosine) }
-        .iterator
+  /** Top-k by cosine (batch tie-break: cosine desc, then neighbor id asc). */
+  private def cosineTopK(cands: Dataset[Cand], k: Int): Dataset[KnnHit] = {
+    implicit val outEnc = Encoders.product[KnnHit]
+    perQuery(cands, (_: Cand).queryId)(
+      _.sortBy(c => (-c.cosine, c.neighborId)).take(k).zipWithIndex
+        .map { case (c, i) => KnnHit(c.queryId, c.neighborId, i + 1, c.cosine) })
   }
 
   /** Top-k neighbors per arriving query against `corpus` via `index`.
@@ -76,7 +89,6 @@ object StreamingSimilarity {
     val qvec = Option(vec).getOrElse(index.vec)
     val spark = queries.sparkSession
     import spark.implicits._
-    implicit val outEnc = Encoders.product[KnnHit]
     implicit val probeEnc = Encoders.product[Probe]
     implicit val candEnc = Encoders.product[Cand]
 
@@ -107,14 +119,12 @@ object StreamingSimilarity {
           .map { case (cell, _) => Probe(qId, qv, cell) }
       }
 
-    probes.toDF()
+    cosineTopK(probes.toDF()
       .join(indexed, "cell")
       .filter(col("queryId") =!= col("neighborId"))
       .withColumn("cosine", graft.functions.VectorExprs.cosineSim(col("qv"), col("cv")))
       .select(col("queryId"), col("neighborId"), col("cosine"))
-      .as[Cand]
-      .groupByKey(_.queryId)(Encoders.scalaLong)
-      .transformWithState(new TopKProcessor(k), TimeMode.None(), OutputMode.Append())
+      .as[Cand], k)
   }
 
   // ---- online IVF-PQ serving (streaming twin of Pq.ivfAdcTopK) ----
@@ -132,18 +142,6 @@ object StreamingSimilarity {
     var i = 0
     while (i < dsub) { val d = qv(s * dsub + i) - cent(i); acc += d * d; i += 1 }
     acc
-  }
-
-  /** Stateless per-batch grouped top-k on ADC distance (batch tie-break:
-    * dist asc, then neighbor id asc — `Pq.ivfAdcTopK`'s rank window). */
-  class DistTopKProcessor(k: Int) extends StatefulProcessor[Long, PqCand, AdcHit] {
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = ()
-
-    override def handleInputRows(key: Long, rows: Iterator[PqCand],
-                                 timerValues: TimerValues): Iterator[AdcHit] =
-      rows.toSeq.sortBy(c => (c.dist, c.neighborId)).take(k).zipWithIndex
-        .map { case (c, i) => AdcHit(c.queryId, c.neighborId, i + 1, c.dist) }
-        .iterator
   }
 
   /** ADC top-k for a LIVE stream of query embeddings against a static
@@ -201,14 +199,16 @@ object StreamingSimilarity {
           .map { case (cell, _) => PqProbe(qId, lutArr, cell) }
       }
 
-    probes.toDF()
+    val cands = probes.toDF()
       .join(cells, "cell")
       .filter(col("queryId") =!= col("neighborId"))
       .withColumn("dist", Pq.adcScore(m, col("lut"), col("codes")))
       .select(col("queryId"), col("neighborId"), col("dist"))
       .as[PqCand]
-      .groupByKey(_.queryId)(Encoders.scalaLong)
-      .transformWithState(new DistTopKProcessor(kNN), TimeMode.None(), OutputMode.Append())
+    // batch tie-break: dist asc, then neighbor id asc — Pq.ivfAdcTopK's rank window
+    perQuery(cands, (_: PqCand).queryId)(
+      _.sortBy(c => (c.dist, c.neighborId)).take(kNN).zipWithIndex
+        .map { case (c, i) => AdcHit(c.queryId, c.neighborId, i + 1, c.dist) })
   }
 
   /** Top-k for a LIVE query stream against a static SQ8-encoded corpus
@@ -226,22 +226,19 @@ object StreamingSimilarity {
               cId: String = "vec_id"): Dataset[KnnHit] = {
     val spark = queries.sparkSession
     import spark.implicits._
-    implicit val outEnc = Encoders.product[KnnHit]
     implicit val candEnc = Encoders.product[Cand]
     val dq = graft.util.Caching.barrier(
       encoded.select(col(cId).cast("long").as("neighborId"),
         Sq.dequant(col("codes"), col("vmin"), col("scale")).as("cv"),
         lit(1).as("__one")))
-    queries
+    cosineTopK(queries
       .select(col(qId).cast("long").as("queryId"),
         transform(col(qVec), x => x.cast("double")).as("qv"), lit(1).as("__one"))
       .join(dq, "__one")
       .filter(col("queryId") =!= col("neighborId"))
       .withColumn("cosine", graft.functions.VectorExprs.cosineSim(col("qv"), col("cv")))
       .select(col("queryId"), col("neighborId"), col("cosine"))
-      .as[Cand]
-      .groupByKey(_.queryId)(Encoders.scalaLong)
-      .transformWithState(new TopKProcessor(k), TimeMode.None(), OutputMode.Append())
+      .as[Cand], k)
   }
 
   // ---- online hamming near-dup over precomputed 64-bit signatures ----
@@ -252,12 +249,12 @@ object StreamingSimilarity {
   /** Emitted near-dup pair, schema-matching [[Dedup.sigPairs]]. */
   case class SigPair(id1: Long, id2: Long, dist: Int)
 
-  /** Per-bucket processor. Exactly-once across the multi-table banding:
+  /** Per-bucket fold. Exactly-once across the multi-table banding:
     * a pair sharing k band keys appears in k buckets; each bucket knows
     * its combo index and emits only when IT is the FIRST matching combo
     * for the two signatures (recomputed as pure bit arithmetic — no
-    * cross-bucket coordination). State = the bucket's stored members,
-    * capped at maxBucketSize (the batch capBuckets bound).
+    * cross-bucket coordination). State = the bucket's stored members
+    * (append-only), capped at maxBucketSize (the batch capBuckets bound).
     *
     * Redelivery: an arriving (id, sig) already present in the bucket's
     * state is a replay — it is skipped entirely (no re-check, no
@@ -273,17 +270,13 @@ object StreamingSimilarity {
     * within one bucket's view the rule stays pure bit arithmetic.
     * Overflow means a degenerate bucket (the same event batch capBuckets
     * guards against), so the loss surface matches the batch guard's. */
-  private class SigBucketProcessor(maxDist: Int, width: Int, combos: Seq[Seq[Int]],
-                                   maxBucketSize: Int)
-      extends StatefulProcessor[String, SigBandRow, SigPair] {
-    @transient private var members: ListState[SigMember] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[SigMember]("members",
-        Encoders.product[SigMember], TTLConfig.NONE)
-    private val mask = if (width >= 64) -1L else (1L << width) - 1
-    private def comboKey(c: Seq[Int], sig: Long): Long =
+  private def sigBucket(maxDist: Int, width: Int, combos: Seq[Seq[Int]], maxBucketSize: Int)(
+      key: String, rows: Iterator[SigBandRow],
+      members: Iterator[SigMember]): (Iterable[SigMember], Iterator[SigPair]) = {
+    val mask = if (width >= 64) -1L else (1L << width) - 1
+    def comboKey(c: Seq[Int], sig: Long): Long =
       c.foldLeft(0L)((acc, b) => (acc << width) | ((sig >>> (b * width)) & mask))
-    private def firstMatchingCombo(s1: Long, s2: Long): Int = {
+    def firstMatchingCombo(s1: Long, s2: Long): Int = {
       var i = 0
       while (i < combos.length) {
         if (comboKey(combos(i), s1) == comboKey(combos(i), s2)) return i
@@ -291,36 +284,31 @@ object StreamingSimilarity {
       }
       -1
     }
-    override def handleInputRows(key: String, rows: Iterator[SigBandRow],
-                                 timerValues: TimerValues): Iterator[SigPair] = {
-      val stored = scala.collection.mutable.ArrayBuffer.empty[SigMember]
-      members.get().foreach(stored += _)
-      val out = scala.collection.mutable.ArrayBuffer.empty[SigPair]
-      val fresh = scala.collection.mutable.ArrayBuffer.empty[SigMember]
-      // id order within the batch: same-batch pairs emit deterministically
-      rows.toSeq.sortBy(_.id).foreach { r =>
-        // replayed member (same id AND sig already stored): its pairs
-        // were emitted at first delivery — skip check and append both.
-        val replay = stored.exists(m => m.id == r.id && m.sig == r.sig)
-        if (!replay) {
-          stored.foreach { m =>
-            if (m.id != r.id) {
-              val dist = java.lang.Long.bitCount(m.sig ^ r.sig)
-              if (dist <= maxDist && firstMatchingCombo(m.sig, r.sig) == r.band) {
-                val (a, b) = if (m.id < r.id) (m.id, r.id) else (r.id, m.id)
-                out += SigPair(a, b, dist)
-              }
+    val stored = mutable.ArrayBuffer.from(members)
+    val out = mutable.ArrayBuffer.empty[SigPair]
+    val fresh = mutable.ArrayBuffer.empty[SigMember]
+    // id order within the batch: same-batch pairs emit deterministically
+    rows.toSeq.sortBy(_.id).foreach { r =>
+      // replayed member (same id AND sig already stored): its pairs
+      // were emitted at first delivery — skip check and append both.
+      val replay = stored.exists(m => m.id == r.id && m.sig == r.sig)
+      if (!replay) {
+        stored.foreach { m =>
+          if (m.id != r.id) {
+            val dist = java.lang.Long.bitCount(m.sig ^ r.sig)
+            if (dist <= maxDist && firstMatchingCombo(m.sig, r.sig) == r.band) {
+              val (a, b) = if (m.id < r.id) (m.id, r.id) else (r.id, m.id)
+              out += SigPair(a, b, dist)
             }
           }
-          if (stored.length < maxBucketSize) {
-            stored += SigMember(r.id, r.sig)
-            fresh += SigMember(r.id, r.sig)
-          }
+        }
+        if (stored.length < maxBucketSize) {
+          stored += SigMember(r.id, r.sig)
+          fresh += SigMember(r.id, r.sig)
         }
       }
-      if (fresh.nonEmpty) members.appendList(fresh.toArray)
-      out.iterator
     }
+    (fresh, out.iterator)
   }
 
   /** Arrival-time near-dup pairs over a STREAM of precomputed 64-bit
@@ -331,13 +319,14 @@ object StreamingSimilarity {
     * Every ≤ maxDist pair emits exactly once (first-matching-band
     * rule; replayed inputs are skipped), whether its ends share a
     * micro-batch or arrive epochs apart — except under bucket-cap
-    * overflow, where pairs can be lost (see the [[SigBucketProcessor]]
-    * divergence note). The only Exchange is the band-key state routing. */
+    * overflow, where pairs can be lost (see the `sigBucket` divergence
+    * note). The only Exchange is the band-key state routing. */
   def sigPairsOnline(sigs: DataFrame, idCol: String, sigCol: String,
                      maxDist: Int = 3, maxBucketSize: Int = 1000): Dataset[SigPair] = {
     val spark = sigs.sparkSession
     import spark.implicits._
     implicit val rowEnc = Encoders.product[SigBandRow]
+    implicit val memberEnc = Encoders.product[SigMember]
     implicit val outEnc = Encoders.product[SigPair]
     val (width, combos) = Dedup.simhashBanding(maxDist)
     val mask = if (width >= 64) -1L else (1L << width) - 1
@@ -351,8 +340,7 @@ object StreamingSimilarity {
           SigBandRow(s"$ci:$key", ci, id, sig)
         }
       }
-    banded.groupByKey(_.bandKey)(Encoders.STRING)
-      .transformWithState(new SigBucketProcessor(maxDist, width, combos, maxBucketSize),
-        TimeMode.None(), OutputMode.Append())
+    TwsOps.appendByKey(banded, (_: SigBandRow).bandKey)(
+      sigBucket(maxDist, width, combos, maxBucketSize))
   }
 }

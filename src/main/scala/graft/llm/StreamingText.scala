@@ -2,9 +2,11 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.streaming.OutputMode
 
 import scala.collection.mutable
+
+import graft.streaming.TwsOps
 
 /** Online twins of the round-10 text operators whose batch forms are
   * stateful: heavy-hitter tracking ([[HeavyHitters]]) and line-level
@@ -13,8 +15,9 @@ import scala.collection.mutable
   * [[NgramLm.score]] — run unchanged on a stream; StreamingRelevanceSpec
   * pins those.)
   *
-  * Both processors are `transformWithState` (RocksDB,
-  * checkpoint-recoverable) with bounded per-key state:
+  * Both are plain folds on the one streaming runtime (`TwsOps`:
+  * transformWithState, RocksDB, checkpoint-recoverable), each with one
+  * bounded per-key state value that a batch rewrites at most once:
   *   - [[mgTopTerms]] shards the term space into `bands` keys, each
   *     holding a Misra–Gries summary of capacity `m` — total state
   *     `bands · m` entries regardless of vocabulary size. The summary set
@@ -44,40 +47,28 @@ object StreamingText {
     * summary. */
   case class MgSnap(band: Int, gen: Long, term: String, mgCount: Long)
 
-  class MgProcessor(m: Int) extends StatefulProcessor[Int, BandTerm, MgSnap] {
-    @transient private var summary: MapState[String, Long] = _
-    @transient private var gen: ValueState[Long] = _
+  /** A band's Misra–Gries summary after `gen` micro-batch updates. */
+  private[llm] case class MgSummary(gen: Long, counts: Map[String, Long])
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      summary = getHandle.getMapState[String, Long]("summary",
-        Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
-      gen = getHandle.getValueState[Long]("gen", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Int, rows: Iterator[BandTerm],
-                                 timerValues: TimerValues): Iterator[MgSnap] = {
-      // fold the batch through an in-memory copy (MapState round-trips
-      // per op are the expensive path on RocksDB), write back once
-      val counts = mutable.HashMap.empty[String, Long]
-      summary.iterator().foreach { case (k, v) => counts(k) = v }
-      rows.foreach { r =>
-        if (counts.contains(r.term)) counts(r.term) += 1L
-        else if (counts.size < m) counts(r.term) = 1L
-        else {
-          val dead = mutable.ArrayBuffer.empty[String]
-          counts.keysIterator.foreach { k =>
-            val v = counts(k) - 1L
-            if (v == 0L) dead += k else counts(k) = v
-          }
-          dead.foreach(counts.remove)
+  /** Per-band fold: the batch runs through an in-memory copy of the
+    * summary, which is written back once. */
+  private def misraGries(m: Int)(band: Int, rows: Iterator[BandTerm],
+      prev: Option[MgSummary]): (Option[MgSummary], Iterator[MgSnap]) = {
+    val counts = mutable.HashMap.from(prev.fold(Map.empty[String, Long])(_.counts))
+    rows.foreach { r =>
+      if (counts.contains(r.term)) counts(r.term) += 1L
+      else if (counts.size < m) counts(r.term) = 1L
+      else {
+        val dead = mutable.ArrayBuffer.empty[String]
+        counts.keysIterator.foreach { k =>
+          val v = counts(k) - 1L
+          if (v == 0L) dead += k else counts(k) = v
         }
+        dead.foreach(counts.remove)
       }
-      summary.clear()
-      counts.foreach { case (t, c) => summary.updateValue(t, c) }
-      val g = (if (gen.exists()) gen.get() else 0L) + 1L
-      gen.update(g)
-      counts.iterator.map { case (t, c) => MgSnap(key, g, t, c) }.toSeq.iterator
     }
+    val g = prev.fold(0L)(_.gen) + 1L
+    (Some(MgSummary(g, counts.toMap)), counts.iterator.map { case (t, c) => MgSnap(band, g, t, c) })
   }
 
   /** Online Misra–Gries heavy-hitter tracking over an arriving text feed:
@@ -88,12 +79,13 @@ object StreamingText {
                  bands: Int = 16): Dataset[MgSnap] = {
     implicit val inEnc = Encoders.product[BandTerm]
     implicit val outEnc = Encoders.product[MgSnap]
-    docs
+    implicit val keyEnc = Encoders.scalaInt
+    implicit val stEnc = Encoders.product[MgSummary]
+    val terms = docs
       .select(explode(filter(split(col(textCol), " +"), t => t =!= lit(""))).as("term"))
       .select(pmod(hash(col("term")), lit(bands)).as("band"), col("term"))
       .as[BandTerm]
-      .groupByKey(_.band)(Encoders.scalaInt)
-      .transformWithState(new MgProcessor(m), TimeMode.None(), OutputMode.Append())
+    TwsOps.foldByKey(terms, (_: BandTerm).band, OutputMode.Append())(misraGries(m))
   }
 
   // ---- line dedup: arrival-time boilerplate flags ----
@@ -102,34 +94,27 @@ object StreamingText {
 
   private[llm] case class LineIn(line: String, docId: Long, pos: Long)
 
-  class LineProcessor(maxDocs: Int) extends StatefulProcessor[String, LineIn, LineFlag] {
-    // distinct doc ids seen, kept only below saturation; count saturates
-    // at maxDocs + 1 — state is O(maxDocs) per line regardless of how
-    // often boilerplate repeats
-    @transient private var seen: ListState[Long] = _
-    @transient private var saturated: ValueState[Boolean] = _
+  /** Distinct doc ids seen, kept only below saturation; the count
+    * saturates at maxDocs + 1 — state is O(maxDocs) per line regardless
+    * of how often boilerplate repeats. */
+  private[llm] case class LineSeen(saturated: Boolean, ids: Seq[Long])
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      seen = getHandle.getListState[Long]("seen", Encoders.scalaLong, TTLConfig.NONE)
-      saturated = getHandle.getValueState[Boolean]("sat", Encoders.scalaBoolean, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[LineIn],
-                                 timerValues: TimerValues): Iterator[LineFlag] = {
-      var sat = saturated.exists() && saturated.get()
-      val ids = if (sat) mutable.LinkedHashSet.empty[Long]
-                else mutable.LinkedHashSet(seen.get().toSeq: _*)
-      val out = rows.toSeq.sortBy(r => (r.docId, r.pos)).map { r =>
-        if (!sat) {
-          ids += r.docId
-          if (ids.size > maxDocs) { sat = true }
-        }
-        LineFlag(r.docId, r.pos, r.line, sat)
+  /** Per-line fold; a saturated line hands its state back untouched, so
+    * repeats of known boilerplate write nothing. */
+  private def lineSeen(maxDocs: Int)(line: String, rows: Iterator[LineIn],
+      prev: Option[LineSeen]): (Option[LineSeen], Iterator[LineFlag]) = {
+    val wasSaturated = prev.exists(_.saturated)
+    var sat = wasSaturated
+    val ids = mutable.LinkedHashSet.from(prev.fold(Seq.empty[Long])(_.ids))
+    val out = rows.toSeq.sortBy(r => (r.docId, r.pos)).map { r =>
+      if (!sat) {
+        ids += r.docId
+        if (ids.size > maxDocs) { sat = true }
       }
-      if (sat) { seen.clear(); saturated.update(true) }
-      else { seen.clear(); seen.appendList(ids.toArray); saturated.update(false) }
-      out.iterator
+      LineFlag(r.docId, r.pos, r.line, sat)
     }
+    val next = if (wasSaturated) prev else Some(LineSeen(sat, if (sat) Nil else ids.toSeq))
+    (next, out.iterator)
   }
 
   /** Arrival-time line-level boilerplate flags: a line is `boilerplate`
@@ -141,10 +126,10 @@ object StreamingText {
                 lineCol: String, maxDocs: Int): Dataset[LineFlag] = {
     implicit val inEnc = Encoders.product[LineIn]
     implicit val outEnc = Encoders.product[LineFlag]
-    lines.select(col(lineCol).as("line"), col(idCol).cast("long").as("docId"),
-        col(posCol).cast("long").as("pos"))
-      .as[LineIn]
-      .groupByKey(_.line)(Encoders.STRING)
-      .transformWithState(new LineProcessor(maxDocs), TimeMode.None(), OutputMode.Append())
+    implicit val keyEnc = Encoders.STRING
+    implicit val stEnc = Encoders.product[LineSeen]
+    val rows = lines.select(col(lineCol).as("line"), col(idCol).cast("long").as("docId"),
+        col(posCol).cast("long").as("pos")).as[LineIn]
+    TwsOps.foldByKey(rows, (_: LineIn).line, OutputMode.Append())(lineSeen(maxDocs))
   }
 }

@@ -10,8 +10,10 @@ import graft.streaming.StatefulOps.{EmaOut, EmaState, TickRow}
   * on for realtime (SURVEY §2.9 "TWS"): typed per-key state handles
   * (value/list/map), timers for csp-alarm semantics
   * (`csp.schedule_alarm`, reference `builtin_functions.py:286-303`), and
-  * idle-state timers for buffering policies. [[FoldProcessor]] carries
-  * every streaming twin's state; [[EmaProcessor]] stays beside it as the
+  * idle-state timers for buffering policies. Two runtime classes carry
+  * every streaming twin's state: [[FoldProcessor]] (one `ValueState` per
+  * key) and its append-only sibling [[AppendProcessor]] (one
+  * `ListState` per key). [[EmaProcessor]] stays beside them as the
   * benchmark's transformWithState arm.
   */
 object TwsOps {
@@ -48,8 +50,11 @@ object TwsOps {
     * RocksDB store. `fold(key, rows, state)` sees one micro-batch's rows
     * for the key and the state the previous batch left (None before the
     * key's first batch, or after a clear), and returns the next state
-    * with the rows to emit; a None state clears the key. Every streaming
-    * twin except the [[EmaProcessor]] benchmark arm and
+    * with the rows to emit; a None state clears the key. A fold that hands
+    * back the very `Option` it was given (`eq`) writes nothing, so a key
+    * with no state is never cleared, and a fold pays a state write only
+    * when its state changes. Every streaming twin except the
+    * [[AppendProcessor]] twins, the [[EmaProcessor]] benchmark arm and
     * [[TimeoutProcessor]]'s alarms runs on it.
     *
     * `idleTtlMs` arms a processing-time timer per key, re-armed on every
@@ -67,8 +72,9 @@ object TwsOps {
 
     override def handleInputRows(key: K, rows: Iterator[I],
                                  timerValues: TimerValues): Iterator[O] = {
-      val (next, out) = fold(key, rows, if (state.exists()) Some(state.get()) else None)
-      next match {
+      val prev = if (state.exists()) Some(state.get()) else None
+      val (next, out) = fold(key, rows, prev)
+      if (!(next eq prev)) next match {
         case Some(s) => state.update(s)
         case None => state.clear()
       }
@@ -95,6 +101,39 @@ object TwsOps {
       new FoldProcessor[K, I, S, O](implicitly[Encoder[S]], idleTtlMs, fold),
       if (idleTtlMs.isDefined) TimeMode.ProcessingTime() else TimeMode.None(), outputMode)
   }
+
+  /** The append-only sibling of [[FoldProcessor]], for twins whose state
+    * is a growing set of members (LSH buckets, kept representatives):
+    * one typed `ListState` per key in the RocksDB store. `fold(key, rows,
+    * members)` sees one micro-batch's rows for the key and every member
+    * stored so far (none before the key's first batch), and returns the
+    * members to append with the rows to emit; it reads the members before
+    * it returns. A batch costs one append of its new members, where a
+    * `ValueState` fold would rewrite the whole list; members are never
+    * rewritten or removed. */
+  class AppendProcessor[K, I, M, O](memberEnc: Encoder[M],
+                                    fold: (K, Iterator[I], Iterator[M]) => (Iterable[M], Iterator[O]))
+      extends StatefulProcessor[K, I, O] {
+    @transient private var members: ListState[M] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      members = getHandle.getListState[M]("members", memberEnc, TTLConfig.NONE)
+
+    override def handleInputRows(key: K, rows: Iterator[I],
+                                 timerValues: TimerValues): Iterator[O] = {
+      val (fresh, out) = fold(key, rows, members.get())
+      if (fresh.nonEmpty) members.appendList(fresh.toArray(memberEnc.clsTag))
+      out
+    }
+  }
+
+  /** Group `ds` by `key` and run `fold` per key on [[AppendProcessor]];
+    * the output is append-mode. */
+  def appendByKey[K: Encoder, I, M: Encoder, O: Encoder](ds: Dataset[I], key: I => K)(
+      fold: (K, Iterator[I], Iterator[M]) => (Iterable[M], Iterator[O])): Dataset[O] =
+    ds.groupByKey(key).transformWithState(
+      new AppendProcessor[K, I, M, O](implicitly[Encoder[M]], fold), TimeMode.None(),
+      OutputMode.Append())
 
   case class Heartbeat(key: String, deadlineMs: Long)
   case class TickEvt(key: String, eventTime: java.sql.Timestamp, seq: Long, value: Double)

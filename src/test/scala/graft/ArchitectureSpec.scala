@@ -44,16 +44,24 @@ class ArchitectureSpec extends AnyFunSuite {
       "emaStream must stay on flatMapGroupsWithState (the benchmark's reference arm)")
   }
 
-  test("graft.streaming has three StatefulProcessors: the fold, the EMA arm and the alarm demo") {
-    // the training-data operators in graft.llm keep their own processors;
-    // the csp twins all share TwsOps.FoldProcessor
+  test("src/main has four StatefulProcessors, all in TwsOps, and no state handle outside it") {
+    // every twin, graft.llm's training-data twins included, is a fold on
+    // FoldProcessor or its append-only sibling; the EMA arm and the alarm
+    // demo are the only other processors
     val header = "class (\\w+)(?:(?!class )[^{])*?extends StatefulProcessor".r
-    val found = mainSources.filter(_.toString.contains("/graft/streaming/")).flatMap { file =>
+    val found = mainSources.flatMap { file =>
       header.findAllMatchIn(lines(file).mkString("\n"))
         .map(m => s"${file.getFileName}:${m.group(1)}")
     }.toSet
-    assert(found == Set("TwsOps.scala:FoldProcessor", "TwsOps.scala:EmaProcessor",
-      "TwsOps.scala:TimeoutProcessor"), s"StatefulProcessor subclasses: $found")
+    assert(found == Set("TwsOps.scala:FoldProcessor", "TwsOps.scala:AppendProcessor",
+      "TwsOps.scala:EmaProcessor", "TwsOps.scala:TimeoutProcessor"),
+      s"StatefulProcessor subclasses: $found")
+    val handles = for {
+      file <- mainSources if file.getFileName.toString != "TwsOps.scala"
+      (line, i) <- lines(file).zipWithIndex
+      if "get(Value|List|Map)State".r.findFirstIn(line).isDefined
+    } yield s"$file:${i + 1}: ${line.trim}"
+    assert(handles.isEmpty, handles.mkString("state handle outside TwsOps:\n", "\n", ""))
   }
 
   test("streaming checkpoint settings live only in GraftSession.builder") {

@@ -30,13 +30,7 @@ object RestartParity {
                          onRestart: java.io.File => Unit = _ => ())(
       twin: Dataset[I] => Dataset[O]): Seq[O] = {
     implicit val sq = TestSpark.spark.sqlContext
-    val rnd = new scala.util.Random(seed)
-    val n = math.min(batches, rows.size)
-    require(kills < n, s"$kills kill points need more than $n batches")
-    val cuts = 0 +: rnd.shuffle((1 until rows.size).toList).take(n - 1).sorted :+ rows.size
-    val killAfter =
-      if (killAt.nonEmpty) killAt else rnd.shuffle((0 until n - 1).toList).take(kills).toSet
-    require(killAfter.forall(i => i >= 0 && i < n - 1), s"kill points $killAfter outside 0 until ${n - 1}")
+    val (cuts, killAfter) = plan(rows.size, seed, batches, kills, killAt)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-restart").toFile
     val emitted = mutable.TreeMap.empty[Long, Seq[O]]
     val mem = MemoryStream[I]
@@ -60,6 +54,22 @@ object RestartParity {
       org.apache.commons.io.FileUtils.deleteQuietly(ckpt)
     }
     emitted.synchronized(emitted.values.flatten.toList)
+  }
+
+  /** The cut points (row offsets, first 0 and last `size`) and the kill
+    * points (batch indices) that [[run]] uses for these arguments, so a
+    * spec can check what a kill separates: after a kill after batch `k`,
+    * the restarted query starts at row `cuts(k + 1)`. */
+  def plan(size: Int, seed: Long, batches: Int = 6, kills: Int = 2,
+           killAt: Set[Int] = Set.empty): (IndexedSeq[Int], Set[Int]) = {
+    val rnd = new scala.util.Random(seed)
+    val n = math.min(batches, size)
+    require(kills < n, s"$kills kill points need more than $n batches")
+    val cuts = (0 +: rnd.shuffle((1 until size).toList).take(n - 1).sorted :+ size).toIndexedSeq
+    val killAfter =
+      if (killAt.nonEmpty) killAt else rnd.shuffle((0 until n - 1).toList).take(kills).toSet
+    require(killAfter.forall(i => i >= 0 && i < n - 1), s"kill points $killAfter outside 0 until ${n - 1}")
+    (cuts, killAfter)
   }
 
   /** An Update-mode twin's answer: the last row emitted per key (or

@@ -14,13 +14,11 @@ case class SdDoc(docId: Long, text: String)
   * operators, fed the corpus as micro-batches in id order, must produce
   * exactly the batch [[Dedup]] answers (same fingerprint/minhash
   * expressions, first-seen == min-id under ordered arrival, no bucket at
-  * its cap). Runs on the transformWithState/RocksDB runtime including a
-  * mid-stream kill + checkpoint recovery.
+  * its cap). The stateful twins run through [[RestartParity]]: killed
+  * and resumed from their checkpoint where state must cross the kill.
   */
 class StreamingDedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  
 
   /** Deterministic corpus: base docs from a seeded RNG, planted exact
     * dups and near-dups (word-level edits) — the same shape as the
@@ -62,21 +60,21 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("streaming exact dedup == batch Dedup.exact under ordered arrival") {
     import org.apache.spark.sql.Encoders
     implicit val docEnc = Encoders.product[SdDoc]
-    implicit val sq = spark.sqlContext
     import spark.implicits._
 
     val df = spark.createDataset(corpus).toDF()
     val batch = Dedup.exact(df, "text", "docId").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-    val mem = MemoryStream[SdDoc]
-    val q = StreamingDedup.exactFlags(mem.toDF(), "text", "docId")
-      .writeStream.outputMode("append").format("memory").queryName("sd_exact")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    feed(mem, corpus.sortBy(_.docId), 5, q)
-    val stream = spark.table("sd_exact").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    q.stop()
+    val rows = corpus.sortBy(_.docId)
+    val (seed, batches, killAt) = (62L, 5, Set(1))
+    val (cuts, _) = RestartParity.plan(rows.size, seed, batches, killAt = killAt)
+    val resume = rows(cuts(killAt.head + 1)).docId
+    // a duplicate group straddles the kill: its first-seen id is in state
+    assert(rows.exists(d => d.docId >= resume && batch(d.docId) < resume))
+    val stream = RestartParity.run(rows, seed, batches = batches, killAt = killAt)(
+        ds => StreamingDedup.exactFlags(ds.toDF(), "text", "docId"))
+      .map(f => f.docId -> f.canonicalId).toMap
 
     assert(stream.size == corpus.size)
     assert(batch.size == corpus.size)
@@ -91,7 +89,6 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("streaming minhash pairs == batch Dedup.minhashPairs, exactly-once across bands") {
     import org.apache.spark.sql.Encoders
     implicit val docEnc = Encoders.product[SdDoc]
-    implicit val sq = spark.sqlContext
     import spark.implicits._
 
     val thr = 0.6
@@ -100,14 +97,15 @@ class StreamingDedupSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     graft.util.Caching.release()
 
-    val mem = MemoryStream[SdDoc]
-    val q = StreamingDedup.minhashPairs(mem.toDF(), "text", "docId", thr)
-      .writeStream.outputMode("append").format("memory").queryName("sd_minhash")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    feed(mem, corpus.sortBy(_.docId), 5, q)
-    val streamRows = spark.table("sd_minhash").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-    q.stop()
+    val rows = corpus.sortBy(_.docId)
+    val (seed, batches, killAt) = (99L, 5, Set(2))
+    val (cuts, _) = RestartParity.plan(rows.size, seed, batches, killAt = killAt)
+    val resume = rows(cuts(killAt.head + 1)).docId
+    // a planted pair straddles the kill: its first end is in bucket state
+    assert(batchPairs.keys.exists { case (a, b) => a < resume && b >= resume })
+    val streamRows = RestartParity.run(rows, seed, batches = batches, killAt = killAt)(
+        ds => StreamingDedup.minhashPairs(ds.toDF(), "text", "docId", thr))
+      .map(p => (p.id1, p.id2) -> p.jaccard)
 
     // first-matching-band emission: no pair appears twice in the RAW output
     assert(streamRows.length == streamRows.map(_._1).distinct.length,
@@ -279,49 +277,6 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(junk.forall(d => !stream.contains(d.docId)))
     assert(stream.size < corpus.size)
     assert(stream.exists { case (id, canon) => id != canon })
-  }
-
-  test("exact dedup state survives kill + checkpoint recovery") {
-    import org.apache.spark.sql.Encoders
-    implicit val docEnc = Encoders.product[SdDoc]
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-
-    val df = spark.createDataset(corpus).toDF()
-    val batch = Dedup.exact(df, "text", "docId").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    val ordered = corpus.sortBy(_.docId)
-    val (firstHalf, secondHalf) = ordered.splitAt(ordered.size / 2)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sd-ckpt").toString
-    val sink = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val mem = MemoryStream[SdDoc]
-    def start() =
-      StreamingDedup.exactFlags(mem.toDF(), "text", "docId")
-        .writeStream.outputMode("append")
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamingDedup.ExactFlag], _: Long) =>
-          val rows = b.collect().map(f => f.docId -> f.canonicalId)
-          sink.synchronized { sink ++= rows }; ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.ProcessingTime(0)).start()
-
-    val q1 = start()
-    mem.addData(firstHalf: _*)
-    q1.processAllAvailable()
-    q1.stop() // crash: exact-dup groups straddle the split
-
-    mem.addData(secondHalf: _*)
-    val q2 = start() // recovery: fingerprint → first-seen id from RocksDB
-    q2.processAllAvailable()
-    val recovered = sink.synchronized(sink.toMap)
-    q2.stop()
-
-    assert(recovered.size == corpus.size)
-    corpus.foreach { d =>
-      assert(recovered(d.docId) == batch(d.docId),
-        s"doc ${d.docId}: recovered ${recovered(d.docId)} vs batch ${batch(d.docId)}")
-    }
   }
 
   test("streaming bloom decontamination == batch verdict, stateless, even at fpp 0.5") {

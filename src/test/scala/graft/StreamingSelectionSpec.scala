@@ -22,7 +22,6 @@ class StreamingSelectionSpec extends AnyFunSuite {
   test("online semdedup over id-ordered micro-batches equals batch greedy flags") {
     import org.apache.spark.sql.Encoders
     implicit val vEnc = Encoders.product[StVec]
-    implicit val sq = spark.sqlContext
     val cents = Ivf.buildCentroids(fixtureEmb, k = 8, iters = 1)
     val batch = SemDedup.semDedupGreedy(fixtureEmb, cents, 0.35)
       .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getBoolean(2))).toMap
@@ -30,16 +29,16 @@ class StreamingSelectionSpec extends AnyFunSuite {
 
     val rows = fixtureEmb.select("vec_id", "embedding").collect()
       .map(r => StVec(r.getLong(0), r.getSeq[Float](1)))
-      .sortBy(_.vec_id)
-    val mem = MemoryStream[StVec]
-    val q = StreamingSelection.semDedupOnline(mem.toDF(), cents, 0.35)
-      .writeStream.outputMode("append").format("memory").queryName("st_sem")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    // three uneven micro-batches: state must carry kept reps across them
-    rows.grouped(17).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-    val online = spark.table("st_sem").collect()
-      .map(r => r.getLong(0) -> (r.getInt(1), r.getBoolean(2))).toMap
-    q.stop()
+      .sortBy(_.vec_id).toSeq
+    // uneven micro-batches and a kill: state must carry kept reps across
+    // both — a state reset would re-admit post-kill near-dups as kept
+    val (seed, batches, kills) = (127L, 4, 1)
+    val (cuts, killAt) = RestartParity.plan(rows.size, seed, batches, kills)
+    val resume = rows(cuts(killAt.head + 1)).vec_id
+    assert(rows.exists(v => v.vec_id >= resume && !batch(v.vec_id)._2))
+    val online = RestartParity.run(rows, seed, batches = batches, kills = kills)(
+        ds => StreamingSelection.semDedupOnline(ds.toDF(), cents, 0.35))
+      .map(f => f.vecId -> (f.cell, f.kept)).toMap
     assert(online == batch)
     assert(online.values.exists(!_._2)) // the stream actually dropped dups
   }
@@ -70,61 +69,22 @@ class StreamingSelectionSpec extends AnyFunSuite {
   test("online edit near-dup replay equals the batch LSH-gated pair set") {
     import org.apache.spark.sql.Encoders
     implicit val dEnc = Encoders.product[StDoc]
-    implicit val sq = spark.sqlContext
     val d = 20
     val batch = graft.llm.EditDedup.verifiedPairs(fixtureDocs, "text", "doc_id", d)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
     graft.util.Caching.release()
     val rows = fixtureDocs.select("doc_id", "text").collect()
-      .map(r => StDoc(r.getLong(0), r.getString(1))).sortBy(_.doc_id)
-    val mem = MemoryStream[StDoc]
-    val q = graft.llm.StreamingSelection.editPairsOnline(mem.toDF(), "text", "doc_id", d)
-      .writeStream.outputMode("append").format("memory").queryName("st_edit")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    rows.grouped(13).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-    val online = spark.table("st_edit").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
-    q.stop()
+      .map(r => StDoc(r.getLong(0), r.getString(1))).sortBy(_.doc_id).toSeq
+    val (seed, batches, killAt) = (175L, 6, Set(1))
+    val (cuts, _) = RestartParity.plan(rows.size, seed, batches, killAt = killAt)
+    val resume = rows(cuts(killAt.head + 1)).doc_id
+    // a planted pair straddles the kill: its first end is in bucket state
+    assert(batch.exists { case (a, b, _, _) => a < resume && b >= resume })
+    val online = RestartParity.run(rows, seed, batches = batches, killAt = killAt)(
+        ds => StreamingSelection.editPairsOnline(ds.toDF(), "text", "doc_id", d))
+      .map(p => (p.id1, p.id2, p.dist, p.sim)).toSet
     assert(online == batch)
     assert(batch.nonEmpty)
-  }
-
-  test("online semdedup kept-rep state survives kill + checkpoint recovery") {
-    import org.apache.spark.sql.Encoders
-    implicit val vEnc = Encoders.product[StVec]
-    implicit val sq = spark.sqlContext
-    val cents = Ivf.buildCentroids(fixtureEmb, k = 8, iters = 1)
-    val batch = SemDedup.semDedupGreedy(fixtureEmb, cents, 0.35)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-    val rows = fixtureEmb.select("vec_id", "embedding").collect()
-      .map(r => StVec(r.getLong(0), r.getSeq[Float](1))).sortBy(_.vec_id)
-    val (firstHalf, secondHalf) = rows.splitAt(rows.length / 2)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sem-ckpt").toString
-    val mem = MemoryStream[StVec]
-    val sink = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean)]
-    def start() =
-      graft.llm.StreamingSelection.semDedupOnline(mem.toDF(), cents, 0.35)
-        .writeStream.outputMode("append")
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.llm.StreamingSelection.SemFlag], _: Long) =>
-          val out = b.collect().map(f => (f.vecId, f.kept))
-          sink.synchronized { sink ++= out }; ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.ProcessingTime(0)).start()
-    val q1 = start()
-    mem.addData(firstHalf: _*)
-    q1.processAllAvailable()
-    q1.stop() // the crash — half the cells already hold kept reps
-    mem.addData(secondHalf: _*)
-    val q2 = start() // recovery: kept representatives come back from RocksDB
-    q2.processAllAvailable()
-    val online = sink.synchronized(sink.toMap)
-    q2.stop()
-    graft.util.Caching.release()
-    // a state reset would re-admit second-half near-dups as kept;
-    // recovered state must reproduce the batch greedy flags exactly
-    assert(online == batch)
-    assert(secondHalf.exists(v => !batch(v.vec_id))) // recovery half has real drops
   }
 
   test("online edit twin agrees with batch beyond ASCII (codepoint units)") {

@@ -22,7 +22,6 @@ class StreamingSimilaritySpec extends AnyFunSuite {
   test("streaming ivfTopK == batch Ivf.topK, bit-equal cosines") {
     import org.apache.spark.sql.Encoders
     implicit val qEnc = Encoders.product[SsQuery]
-    implicit val sq = spark.sqlContext
     import spark.implicits._
 
     // clustered corpus (4 tight clusters, 32-dim) — the IVF-friendly shape
@@ -43,14 +42,9 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     val batch = Ivf.topK(queriesDf, corpus, index, k = 5, nprobe = 2).collect()
       .map(r => (r.getLong(0), r.getInt(2)) -> (r.getLong(1), r.getDouble(3))).toMap
 
-    val mem = MemoryStream[SsQuery]
-    val q = StreamingSimilarity.ivfTopK(mem.toDF(), corpus, index, k = 5, nprobe = 2)
-      .writeStream.outputMode("append").format("memory").queryName("ss_knn")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    queryRows.grouped(7).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-    val stream = spark.table("ss_knn").collect()
-      .map(r => (r.getLong(0), r.getInt(2)) -> (r.getLong(1), r.getDouble(3))).toMap
-    q.stop()
+    val stream = RestartParity.run(queryRows, seed = 22, batches = 4, kills = 1)(
+        ds => StreamingSimilarity.ivfTopK(ds.toDF(), corpus, index, k = 5, nprobe = 2))
+      .map(h => (h.queryId, h.rk) -> (h.neighborId, h.cosine)).toMap
     graft.util.Caching.release()
 
     assert(stream.size == batch.size, s"stream ${stream.size} rows vs batch ${batch.size}")
@@ -84,14 +78,9 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     val batch = graft.llm.Pq.ivfAdcTopK(queriesDf, index, kNN = 5, nprobe = 2).collect()
       .map(r => (r.getLong(0), r.getInt(2)) -> (r.getLong(1), r.getDouble(3))).toMap
 
-    val mem = MemoryStream[SsQuery]
-    val q = StreamingSimilarity.ivfAdcTopK(mem.toDF(), index, kNN = 5, nprobe = 2)
-      .writeStream.outputMode("append").format("memory").queryName("ss_adc")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    queryRows.grouped(5).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-    val stream = spark.table("ss_adc").collect()
-      .map(r => (r.getLong(0), r.getInt(2)) -> (r.getLong(1), r.getDouble(3))).toMap
-    q.stop()
+    val stream = RestartParity.run(queryRows, seed = 65, batches = 4, kills = 1)(
+        ds => StreamingSimilarity.ivfAdcTopK(ds.toDF(), index, kNN = 5, nprobe = 2))
+      .map(h => (h.queryId, h.rk) -> (h.neighborId, h.dist)).toMap
 
     assert(stream.size == batch.size && stream.size == 18 * 5,
       s"stream ${stream.size} rows vs batch ${batch.size}")
@@ -121,7 +110,6 @@ class StreamingSimilaritySpec extends AnyFunSuite {
   test("streaming sq8TopK == batch Sq.topK, bit-equal cosines") {
     import org.apache.spark.sql.Encoders
     implicit val qEnc = Encoders.product[SsQuery]
-    implicit val sq = spark.sqlContext
     import spark.implicits._
 
     val rnd = new scala.util.Random(31)
@@ -140,14 +128,9 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     val batch = graft.llm.Sq.topK(queriesDf, enc, 4).collect()
       .map(r => (r.getLong(0), r.getInt(2)) -> (r.getLong(1), r.getDouble(3))).toMap
 
-    val mem = MemoryStream[SsQuery]
-    val q = StreamingSimilarity.sq8TopK(mem.toDF(), enc, 4)
-      .writeStream.outputMode("append").format("memory").queryName("ss_sq8")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    queryRows.grouped(5).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-    val stream = spark.table("ss_sq8").collect()
-      .map(r => (r.getLong(0), r.getInt(2)) -> (r.getLong(1), r.getDouble(3))).toMap
-    q.stop()
+    val stream = RestartParity.run(queryRows, seed = 121, batches = 3, kills = 1)(
+        ds => StreamingSimilarity.sq8TopK(ds.toDF(), enc, 4))
+      .map(h => (h.queryId, h.rk) -> (h.neighborId, h.cosine)).toMap
     graft.util.Caching.release()
 
     assert(stream.size == batch.size && stream.size == 12 * 4)
@@ -161,7 +144,6 @@ class StreamingSimilaritySpec extends AnyFunSuite {
   test("streaming sigPairsOnline == batch Dedup.sigPairs on the planted image fixture") {
     import org.apache.spark.sql.Encoders
     implicit val sEnc = Encoders.product[SsSig]
-    implicit val sq = spark.sqlContext
     import spark.implicits._
 
     // real perceptual fingerprints from the planted near-dup PNG fixture
@@ -169,22 +151,21 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     val sigRows = graft.llm.Multimodal.imageDHash(
         graft.llm.Multimodal.syntheticPng(ids, "doc_id", contentMod = 80L))
       .filter(org.apache.spark.sql.functions.col("decoded"))
-      .collect().map(r => SsSig(r.getLong(0), r.getLong(2)))
-    val sigDf = spark.createDataset(sigRows.toSeq).toDF("media_id", "dhash")
+      .collect().map(r => SsSig(r.getLong(0), r.getLong(2))).sortBy(_.media_id).toSeq
+    val sigDf = spark.createDataset(sigRows).toDF("media_id", "dhash")
     val batch = graft.llm.Dedup.sigPairs(sigDf, "media_id", "dhash", maxDist = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     graft.util.Caching.release()
 
-    val mem = MemoryStream[SsSig]
-    val q = StreamingSimilarity.sigPairsOnline(mem.toDF(), "media_id", "dhash", maxDist = 3)
-      .writeStream.outputMode("append").format("memory").queryName("ss_sigpairs")
-      .trigger(Trigger.ProcessingTime(0)).start()
     // uneven micro-batches: pairs must surface whether their ends share
-    // a batch or arrive epochs apart
-    sigRows.grouped(37).foreach { c => mem.addData(c.toSeq: _*); q.processAllAvailable() }
-    val stream = spark.table("ss_sigpairs").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    q.stop()
+    // a batch or arrive epochs apart — and across a kill
+    val (seed, batches, killAt) = (161L, 6, Set(1))
+    val (cuts, _) = RestartParity.plan(sigRows.size, seed, batches, killAt = killAt)
+    val resume = sigRows(cuts(killAt.head + 1)).media_id
+    assert(batch.exists { case (a, b, _) => a < resume && b >= resume })
+    val stream = RestartParity.run(sigRows, seed, batches = batches, killAt = killAt)(
+        ds => StreamingSimilarity.sigPairsOnline(ds.toDF(), "media_id", "dhash", maxDist = 3))
+      .map(p => (p.id1, p.id2, p.dist)).toSet
 
     assert(stream == batch, s"stream ${stream.size} pairs vs batch ${batch.size}")
     assert(batch.nonEmpty && batch.exists { case (a, b, _) => b - a == 80 || b - a == 160 },

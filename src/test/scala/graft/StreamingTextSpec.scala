@@ -24,7 +24,6 @@ class StreamingTextSpec extends AnyFunSuite {
   test("online Misra–Gries: final snapshots are a superset of heavy terms and recover the exact top-k") {
     import org.apache.spark.sql.Encoders
     implicit val dEnc = Encoders.product[StDoc]
-    implicit val sq = spark.sqlContext
     val rnd = new scala.util.Random(17)
     // zipf-ish: term_j drawn with weight 1/(j+1); clear top-5 margin
     val vocab = (0 until 60).map(j => s"t$j")
@@ -40,14 +39,10 @@ class StreamingTextSpec extends AnyFunSuite {
     val n = exact.values.sum
     val m = 64; val bands = 4
 
-    val mem = MemoryStream[StDoc]
-    val q = StreamingText.mgTopTerms(mem.toDF(), "text", m = m, bands = bands)
-      .writeStream.outputMode("append").format("memory").queryName("st_mg")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    docs.grouped(25).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-    val snaps = spark.table("st_mg").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getString(2), r.getLong(3)))
-    q.stop()
+    // the summaries cross two seeded kills
+    val snaps = RestartParity.run(docs, seed = 217, batches = 5)(
+        ds => StreamingText.mgTopTerms(ds.toDF(), "text", m = m, bands = bands))
+      .map(s => (s.band, s.gen, s.term, s.mgCount))
 
     // latest generation per band is the live summary
     val lastGen = snaps.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
@@ -94,52 +89,9 @@ class StreamingTextSpec extends AnyFunSuite {
     assert(live.getAs[Double]("mean_chars") == exact.getAs[Double]("mean_chars"))
   }
 
-  test("line-flag state survives kill + checkpoint recovery") {
-    import org.apache.spark.sql.Encoders
-    implicit val lEnc = Encoders.product[StLine]
-    implicit val sq = spark.sqlContext
-    val boiler = "all rights reserved"
-    val lines = (0L until 12L).flatMap(d => Seq(
-      StLine(d, 0L, s"unique lead $d"), StLine(d, 1L, boiler)))
-    val (firstHalf, secondHalf) = lines.splitAt(lines.size / 2)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-lines-ckpt").toString
-
-    val mem = MemoryStream[StLine]
-    val sink = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Boolean)]
-    def start() =
-      StreamingText.lineFlags(mem.toDF(), "doc_id", "pos", "line", maxDocs = 2)
-        .writeStream.outputMode("append")
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.llm.StreamingText.LineFlag], _: Long) =>
-          val rows = b.collect().map(f => (f.docId, f.line, f.boilerplate))
-          sink.synchronized { sink ++= rows }; ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.ProcessingTime(0)).start()
-
-    val q1 = start()
-    mem.addData(firstHalf: _*)
-    q1.processAllAvailable()
-    q1.stop() // the crash — boiler has crossed maxDocs already (3 docs in first half)
-
-    mem.addData(secondHalf: _*)
-    val q2 = start() // recovery: saturation flag + seen-ids from RocksDB
-    q2.processAllAvailable()
-    val out = sink.synchronized(sink.toList)
-    q2.stop()
-
-    assert(out.size == lines.size)
-    // every post-recovery boiler arrival is still flagged — the saturated
-    // marker survived the restart (a reset would re-admit maxDocs docs)
-    val postRecovery = out.filter { case (d, l, _) => l == boiler && d >= 6L }
-    assert(postRecovery.nonEmpty && postRecovery.forall(_._3))
-    // unique lines never flagged
-    assert(out.filter(_._2 != boiler).forall(!_._3))
-  }
-
   test("online line flags: monotone, and the flagged set == batch blocklist after replay") {
     import org.apache.spark.sql.Encoders
     implicit val lEnc = Encoders.product[StLine]
-    implicit val sq = spark.sqlContext
     val boiler = "all rights reserved"
     val lines =
       (0L until 20L).flatMap(d => Seq(
@@ -153,14 +105,16 @@ class StreamingTextSpec extends AnyFunSuite {
     val batchBlocked = linesDf.select("line").distinct()
       .collect().map(_.getString(0)).toSet -- batchKept
 
-    val mem = MemoryStream[StLine]
-    val q = StreamingText.lineFlags(mem.toDF(), "doc_id", "pos", "line", maxDocs = 2)
-      .writeStream.outputMode("append").format("memory").queryName("st_lines")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    lines.grouped(9).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-    val flags = spark.table("st_lines").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getBoolean(3)))
-    q.stop()
+    // kill after the boilerplate line saturates (its third doc, doc 4) and
+    // before its last arrival: the saturated state must survive the restart
+    val (seed, batches, killAt) = (332L, 7, Set(2))
+    val (cuts, _) = RestartParity.plan(lines.size, seed, batches, killAt = killAt)
+    val resume = cuts(killAt.head + 1)
+    assert(resume > lines.indexOf(StLine(4L, 1L, boiler)) &&
+      resume <= lines.lastIndexWhere(_.line == boiler))
+    val flags = RestartParity.run(lines, seed, batches = batches, killAt = killAt)(
+        ds => StreamingText.lineFlags(ds.toDF(), "doc_id", "pos", "line", maxDocs = 2))
+      .map(f => (f.docId, f.pos, f.line, f.boilerplate))
 
     assert(flags.length == lines.length) // one flag per arriving line
     // monotone per line: once boilerplate, every later arrival is too

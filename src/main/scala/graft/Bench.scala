@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ts.GraftSession
+import graft.ts.{GraftSession, Sources}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints per-query wall seconds as JSON.
@@ -276,7 +276,7 @@ object Bench {
       else rechunkFixtures(spark, rawSfDir)
     // warm the session (JVM + codegen paths) so per-query times measure the
     // queries, not first-use setup
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+    Sources.table(spark, sfDir, "lineitem").count()
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     // optional query-name filter (args), e.g. the sf-scaling harness
     // timing just the expensive queries — no args = the full suite

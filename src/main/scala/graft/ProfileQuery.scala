@@ -2,7 +2,8 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -15,6 +16,9 @@ import graft.ts.GraftSession
   * per-layer names where they measure the same quantity):
   *
   *  - `entry.build_s`: the builder call, eager fit/sizing jobs included;
+  *  - `entry.build_jobs`: the Spark jobs that started before the builder
+  *    returned, i.e. before the action (eager collects, iterative rounds,
+  *    source resolution);
   *  - `plan.analysis_s`, `plan.optimization_s`, `plan.planning_s`: the
   *    frame's own `QueryPlanningTracker` phases;
   *  - `exec.wall_s`: the action alone, on the already-planned frame;
@@ -74,6 +78,7 @@ object ProfileQuery {
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val buildS = (System.nanoTime() - t0) / 1e9
+      val builtAtMs = System.currentTimeMillis()
       val qe = df.queryExecution
       qe.executedPlan
       val p = Profiler.profile(df)
@@ -85,6 +90,7 @@ object ProfileQuery {
       val runS = all.map(_.runMs).sum / 1e3
       val fields = Seq(
         "entry.build_s" -> buildS,
+        "entry.build_jobs" -> stages.jobsStartedBy(builtAtMs).toDouble,
         "plan.analysis_s" -> phase("analysis"),
         "plan.optimization_s" -> phase("optimization"),
         "plan.planning_s" -> phase("planning"),
@@ -116,11 +122,16 @@ object ProfileQuery {
                                  shufReadBytes: Long, shufWriteBytes: Long,
                                  spillBytes: Long, taskMs: Seq[Long])
 
-  /** Completed stages with their task durations, as the listener bus
-    * delivers them. */
+  /** Completed stages with their task durations, and job start times, as
+    * the listener bus delivers them. */
   private final class StageListener extends SparkListener {
     private val stages = mutable.ArrayBuffer.empty[Stage]
     private val taskMs = mutable.Map.empty[(Int, Int), mutable.ArrayBuffer[Long]]
+    private val jobStartMs = mutable.ArrayBuffer.empty[Long]
+
+    override def onJobStart(ev: SparkListenerJobStart): Unit = synchronized {
+      jobStartMs += ev.time
+    }
 
     override def onTaskEnd(ev: SparkListenerTaskEnd): Unit = synchronized {
       taskMs.getOrElseUpdate((ev.stageId, ev.stageAttemptId), mutable.ArrayBuffer.empty) +=
@@ -139,6 +150,9 @@ object ProfileQuery {
     }
 
     def completed: Seq[Stage] = synchronized(stages.toList)
+
+    /** Jobs that started at or before `ms` (epoch millis). */
+    def jobsStartedBy(ms: Long): Int = synchronized(jobStartMs.count(_ <= ms))
   }
 
   def main(args: Array[String]): Unit = {

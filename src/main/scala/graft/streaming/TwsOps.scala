@@ -72,7 +72,9 @@ object TwsOps {
 
     override def handleInputRows(key: K, rows: Iterator[I],
                                  timerValues: TimerValues): Iterator[O] = {
-      val prev = if (state.exists()) Some(state.get()) else None
+      // one read: exists() is itself a get. get() is null when the key has
+      // no state; S is erased here, so an absent Long state is null, not 0
+      val prev = Option(state.get())
       val (next, out) = fold(key, rows, prev)
       if (!(next eq prev)) next match {
         case Some(s) => state.update(s)

@@ -2,6 +2,7 @@ package graft.ts
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,6 +15,15 @@ import org.apache.spark.sql.types._
   * DataFrame with `(key, ts, seq, value…)` columns — batch replay of
   * history IS the simulation mode, Catalyst replaces the hand-rolled
   * scheduler.
+  *
+  * Parquet sources ([[events]], [[table]], [[parquet]]) are resolved once
+  * per `SparkSession`: the first read of a path lists its files, resolves
+  * the data source and runs Parquet's schema-inference job; later reads
+  * in the same session get the same resolved DataFrame back and start no
+  * Spark job. A change to the path's file listing (names, sizes, mtimes)
+  * or to the session's SQL conf resolves the path again, so a rewritten
+  * table is never served with its old schema. The check is one Hadoop
+  * `FileSystem` listing, the same for every path scheme.
   */
 object Sources {
 
@@ -134,7 +144,7 @@ object Sources {
     */
   def events(spark: SparkSession, sfDir: String): TickStream = {
     val path = s"$sfDir/events.parquet"
-    val inferred = spark.read.parquet(path)
+    val inferred = resolve(spark, path)
     // tz-less fixtures infer as NTZ when inferTimestampNTZ is on (i.e.
     // outside GraftSession's conf). A cast NTZ→LTZ would re-interpret the
     // wall clock in the SESSION timezone, diverging from the conf path
@@ -146,7 +156,7 @@ object Sources {
       case TimestampNTZType =>
         val forced = StructType(inferred.schema.map(f =>
           if (f.name == "ts") f.copy(dataType = TimestampType) else f))
-        spark.read.schema(forced).parquet(path)
+        resolve(spark, path, Some(forced))
       case _ => inferred
     }
     val tsCol = raw.schema("ts").dataType match {
@@ -191,11 +201,59 @@ object Sources {
     * (`csp/adapters/parquet.py:109-357`). */
   def parquet(spark: SparkSession, path: String, symbolColumn: String,
               timeColumn: String, seqColumn: Option[String] = None): TickStream =
-    fromDataFrame(spark.read.parquet(path), symbolColumn, timeColumn, seqColumn)
+    fromDataFrame(resolve(spark, path), symbolColumn, timeColumn, seqColumn)
 
   /** Load a driver TPC-H-ish table as a plain DataFrame. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    resolve(spark, s"$sfDir/$name.parquet")
+
+  /** A path's resolved relation and what it was resolved under: the
+    * sorted (file, size, mtime) listing and the session's SQL conf. */
+  private final case class Resolved(listing: Seq[(String, Long, Long)],
+                                    conf: Map[String, String], df: DataFrame)
+
+  /** Resolved relations by (session, path, user schema), least recently
+    * used first; at most [[MaxResolved]] of them across all sessions. */
+  private val MaxResolved = 64
+  private val resolved =
+    new java.util.LinkedHashMap[(SparkSession, String, Option[StructType]), Resolved](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(SparkSession, String, Option[StructType]), Resolved]): Boolean =
+        size() > MaxResolved
+    }
+
+  /** The one Parquet reader of the sources: the session's relation for
+    * `path` (read with `schema` if given), resolved again only when the
+    * path's file listing or the session's SQL conf has changed since.
+    * Entries of stopped sessions are dropped; a read that throws leaves
+    * nothing behind. */
+  private def resolve(spark: SparkSession, path: String,
+                      schema: Option[StructType] = None): DataFrame = {
+    val key = (spark, path, schema)
+    // listed before the read: a change that lands during it shows as a
+    // stale listing on the next call, never as a stale relation
+    val listing = fileListing(spark, path)
+    val conf = spark.conf.getAll
+    resolved.synchronized {
+      resolved.keySet.removeIf(_._1.sparkContext.isStopped)
+      Option(resolved.get(key)).filter(r => r.listing == listing && r.conf == conf)
+    }.map(_.df).getOrElse {
+      val df = schema.fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
+      resolved.synchronized(resolved.put(key, Resolved(listing, conf, df)))
+      df
+    }
+  }
+
+  /** (file, size, mtime) of every file under `path` (a glob is expanded),
+    * sorted; empty when nothing matches. */
+  private def fileListing(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(st: FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    Option(fs.globStatus(p)).toSeq.flatten.flatMap(files).sorted
+  }
 
   // ---- seeded random sources (reference csp/random.py:18,70,135) ------
   // Deterministic across runs AND partitions: randomness derives from a

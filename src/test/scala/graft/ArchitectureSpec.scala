@@ -101,4 +101,27 @@ class ArchitectureSpec extends AnyFunSuite {
     assert(mains == Set("Bench", "Demo", "GenScaleData", "PlanAudit", "ProfileQuery",
       "Verify", "WatchProfile"), s"objects with a main: $mains")
   }
+
+  test("Parquet is read through Sources' resolver, outside a short allowlist") {
+    // a builder that read Parquet itself would list, resolve and infer its
+    // source again on every build; the allowlist is the fixture re-chunker,
+    // the tick-store round trip and the live store's versions
+    val read = "\\bread(\\.\\w+\\([^)]*\\))*\\.parquet\\(".r
+    val member = "^  (?:(?:private|override|final|protected)(?:\\[\\w+\\])? )*def (\\w+)".r
+    val allowed = Set("Sources.scala:resolve", "Bench.scala:rechunkFixtures",
+      "Sinks.scala:readParquet", "DurableVersionedStore.scala:*")
+    val hits = mainSources.flatMap { file =>
+      val ls = lines(file)
+      ls.indices.filter(i => read.findFirstIn(ls(i)).isDefined).map { i =>
+        val owner = (i to 0 by -1).iterator.flatMap(j => member.findFirstMatchIn(ls(j)))
+          .map(_.group(1)).nextOption().getOrElse("?")
+        (s"${file.getFileName}:$owner", s"$file:${i + 1}: ${ls(i).trim}")
+      }
+    }
+    val offending = hits.filterNot { case (site, _) =>
+      allowed(site) || allowed(site.takeWhile(_ != ':') + ":*")
+    }
+    assert(offending.isEmpty, offending.map(_._2).mkString("Parquet read outside Sources:\n", "\n", ""))
+    assert(hits.exists(_._1 == "Sources.scala:resolve"), "Sources' resolver no longer reads Parquet")
+  }
 }

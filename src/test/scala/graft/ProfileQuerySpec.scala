@@ -17,7 +17,7 @@ class ProfileQuerySpec extends AnyFunSuite {
   test("record carries the planning, stage and census fields") {
     val r = profileOnce()
     assert(r.err.isEmpty, r.err)
-    assert(r.fields.map(_._1) == Seq("entry.build_s", "plan.analysis_s",
+    assert(r.fields.map(_._1) == Seq("entry.build_s", "entry.build_jobs", "plan.analysis_s",
       "plan.optimization_s", "plan.planning_s", "exec.wall_s", "exec.stages", "exec.tasks",
       "exec.cpu_s", "exec.run_s", "exec.parallelism", "exec.shuffle_read_bytes",
       "exec.shuffle_write_bytes", "exec.spill_bytes", "exec.task_skew", "census.exchanges"))
@@ -36,6 +36,19 @@ class ProfileQuerySpec extends AnyFunSuite {
     val b = profileOnce()
     assert(a("exec.stages") == b("exec.stages"))
     assert(a("census.exchanges") == b("census.exchanges"))
+  }
+
+  test("entry.build_jobs counts the jobs a builder starts, not the action's") {
+    // the warm run has resolved the query's sources, so the measured
+    // build of the query itself starts none; an eager collect is one
+    val eager: (SparkSession, String) => DataFrame = { (s, dir) =>
+      s.range(5).collect()
+      SparkEntry.queries(q)(s, dir)
+    }
+    val rs = ProfileQuery.profile(spark, Seq(q -> SparkEntry.queries(q), "z_eager" -> eager),
+      TestSpark.sf)
+    assert(rs.map(_("entry.build_jobs")) == Seq(0.0, 1.0))
+    assert(rs.forall(_("exec.stages") >= 1))
   }
 
   test("a throwing builder yields an err record and the next query is still profiled") {

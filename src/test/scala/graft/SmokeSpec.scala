@@ -7,7 +7,13 @@ import graft.ts.{GraftSession, Sources}
 
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = GraftSession.builder(master = "local[4]", shufflePartitions = 4).getOrCreate()
+    val s = GraftSession.builder(master = "local[4]", shufflePartitions = 4)
+      // RocksDB snapshots are uploaded by the state store's background
+      // maintenance, every 60 s by default; a spec that waits for one
+      // (TwsSpec's restart past the snapshot interval) waits seconds, not a
+      // minute
+      .config("spark.sql.streaming.stateStore.maintenanceInterval", "2s")
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

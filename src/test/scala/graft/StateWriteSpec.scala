@@ -2,15 +2,17 @@ package graft
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{StateOperatorProgress, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StateOperatorProgress, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.{StreamingDedup, StreamingSimilarity}
 
-/** The shared fold runtime writes state only when a twin's state changes.
-  * Spark's state variables count every update and every removal
-  * (`numUpdatedStateRows`, `numRemovedStateRows`), and each micro-batch's
-  * progress reports them as `numRowsUpdated` and `numRowsRemoved`. */
+/** The shared fold runtime writes state only when a twin's state changes,
+  * and reads a key's state once per batch. Spark's state variables count
+  * every update and every removal (`numUpdatedStateRows`,
+  * `numRemovedStateRows`), and each micro-batch's progress reports them as
+  * `numRowsUpdated` and `numRowsRemoved`; the RocksDB store reports its
+  * gets as the custom metric `rocksdbGetCount`. */
 class StateWriteSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -65,5 +67,25 @@ class StateWriteSpec extends AnyFunSuite {
       ds => StreamingDedup.exactFlags(ds.toDF(), "text", "docId"))
     assert(progress.map(_.numRowsUpdated) == newFps)
     assert(progress.forall(_.numRowsRemoved == 0))
+  }
+
+  test("a key with state costs one state read per batch, plus the store's row count on a write") {
+    // the second batch revisits every key: one get of its state, and one
+    // get by the store itself, which counts rows on every put. Reading the
+    // state through ValueState.exists() (itself a get) and then get()
+    // would cost three gets per key
+    import spark.implicits._
+    val keys = 8
+    val batch = (0 until keys).map(k => (s"k$k", 1L))
+    val progress = stateProgress(Seq(batch, batch))(ds =>
+      graft.streaming.TwsOps.foldByKey[String, (String, Long), Long, (String, Long)](
+          ds, _._1, OutputMode.Append()) { (k, rows, prev) =>
+        // an absent Long state reads None, never a zero
+        require(prev.forall(_ >= 1L), s"$k: state $prev")
+        val next = prev.getOrElse(0L) + rows.map(_._2).sum
+        (Some(next), Iterator(k -> next))
+      })
+    assert(progress.map(_.numRowsUpdated) == Seq(keys, keys))
+    assert(progress(1).customMetrics.get("rocksdbGetCount").longValue == 2L * keys)
   }
 }

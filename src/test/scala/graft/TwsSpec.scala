@@ -68,8 +68,8 @@ class TwsSpec extends AnyFunSuite {
 
   test("restart past the snapshot interval: recovery loads a RocksDB snapshot, then replays changelogs") {
     // with changelog checkpointing RocksDB snapshots every 10 versions
-    // (minDeltasForSnapshot) and background maintenance (every 60 s by
-    // default) uploads the snapshot. The kill comes after 13 committed
+    // (minDeltasForSnapshot) and background maintenance (every 2 s in
+    // TestSpark, 60 s by default) uploads the snapshot. The kill comes after 13 committed
     // batches and the restart waits for the version-11 upload, so recovery
     // loads that snapshot and replays the changelogs after it through the
     // checkpoint manager, rather than replaying from the first version

@@ -9,15 +9,17 @@ import org.apache.spark.sql.functions._
   * much arrived per slice, how duplicated is it, is the shape drifting".
   *
   * Design (the [[graft.streaming.BehaviorStream.RfmLive]] shape — no
-  * per-row streaming state at all): each micro-batch computes ONE
-  * map-side-combined grouped aggregate of MERGEABLE partials per key —
-  * doc count, token sum, char sum, max ingest micros (all exact), plus
-  * an HLL sketch of content fingerprints (`hll_sketch_agg`, the
-  * fixed-size register array) — then folds them into the running
-  * per-key table (sums / max / `hll_union_agg` are associative and
-  * commutative) and publishes the derived snapshot. At 1000 executors
-  * the per-trigger network is O(keys · sketch bytes): the corpus text
-  * never shuffles and nothing is retained per document.
+  * per-row streaming state at all): [[partials]] is ONE map-side-combined
+  * grouped aggregate of MERGEABLE partials per key — doc count, token
+  * sum, char sum, max ingest micros (all exact), plus an HLL sketch of
+  * content fingerprints (`hll_sketch_agg`, the fixed-size register
+  * array) — run as a `complete`-mode streaming aggregation. Spark's
+  * state store carries the running per-key partials (sums / max /
+  * sketch union are associative and commutative), and the query
+  * checkpoint gives them durability, replay and retention like every
+  * other twin; the sink [[foreachBatch]] publishes the derived snapshot.
+  * At 1000 executors the per-trigger network is O(keys · sketch bytes):
+  * the corpus text never shuffles and nothing is retained per document.
   *
   * Parity contract (spec-pinned): the exact columns (docs,
   * total_tokens, total_chars, last_micros) are BIT-IDENTICAL to one
@@ -30,32 +32,23 @@ import org.apache.spark.sql.functions._
   * error (~1.04/√2^lgConfigK rel. std. error) of the batch count —
   * the spec checks that bound, not bits. `dup_rate_est` divides the two.
   *
-  * Durability: pass `storePath=` and the per-key table lives as
-  * versioned parquet under the shared
-  * [[graft.util.DurableVersionedStore]] `_COMMITTED`-marker protocol
-  * (crash-safe commit, idempotent batchId replay, keepVersions
-  * retention + crash-debris vacuum, single-writer per path — see the
-  * store's scaladoc for the full contract). Without it the table rides
-  * an eager local checkpoint, exactly like RfmLive's in-memory arm.
-  *
-  * Wire into `docs.writeStream.foreachBatch(live.foreachBatch _)`; read
-  * the latest snapshot from [[snapshot]]. */
+  * Wiring:
+  * {{{
+  *   live.partials(docs).writeStream.outputMode("complete")
+  *     .option("checkpointLocation", c).foreachBatch(live.foreachBatch _)
+  * }}}
+  * then read the latest snapshot from [[snapshot]]. */
 final class CorpusStatsLive(keyCol: String, textCol: String, tsCol: String,
-                            storePath: Option[String] = None,
-                            keepVersions: Int = 3,
                             lgConfigK: Int = 12) {
   require(lgConfigK >= 4 && lgConfigK <= 21,
     s"lgConfigK $lgConfigK outside the HLL sketch's supported [4, 21]")
 
-  private val durable: Option[graft.util.DurableVersionedStore] =
-    storePath.map(p => new graft.util.DurableVersionedStore(p, keepVersions))
-
-  // (k, __docs, __toks, __chars, __mx, __fp) — the mergeable state row
-  @volatile private var store: DataFrame = null
   @volatile private var latest: DataFrame = null
 
-  private def partials(batch: DataFrame): DataFrame =
-    batch.groupBy(col(keyCol).as("k")).agg(
+  /** The per-key partials (k, __docs, __toks, __chars, __mx, __fp) of
+    * `docs`, on a batch DataFrame or a stream. */
+  def partials(docs: DataFrame): DataFrame =
+    docs.groupBy(col(keyCol).as("k")).agg(
       count(lit(1)).as("__docs"),
       sum(TextAnalysis.tokenCount(col(textCol))).cast("long").as("__toks"),
       sum(length(col(textCol)).cast("long")).as("__chars"),
@@ -63,8 +56,7 @@ final class CorpusStatsLive(keyCol: String, textCol: String, tsCol: String,
       hll_sketch_agg(TextAnalysis.fingerprint(col(textCol)),
         lit(lgConfigK)).as("__fp"))
 
-  private def publish(next: DataFrame): Unit = {
-    store = next
+  private def publish(next: DataFrame): Unit =
     latest = next.select(col("k").as(keyCol),
       col("__docs").as("docs"),
       col("__toks").as("total_tokens"),
@@ -76,44 +68,19 @@ final class CorpusStatsLive(keyCol: String, textCol: String, tsCol: String,
       greatest(lit(0.0), lit(1.0) -
         hll_sketch_estimate(col("__fp")).cast("double") /
           col("__docs")).as("dup_rate_est"))
-  }
 
-  def foreachBatch(batch: DataFrame, batchId: Long): Unit = synchronized {
-    val spark = batch.sparkSession
-    // replay guard FIRST (a committed version at or past this batchId
-    // means the merge already landed — re-publish, never re-merge)
-    durable.foreach { d =>
-      d.replayedSnapshot(spark, batchId).foreach { committed =>
-        publish(committed)
-        return
-      }
-    }
-    val part = partials(batch)
-    val prev = durable match {
-      case Some(d) => d.latestCommitted(spark)
-      case None => Option(store)
-    }
-    val merged = prev match {
-      case None => part
-      case Some(st) => st.unionByName(part).groupBy("k").agg(
-        sum(col("__docs")).as("__docs"),
-        sum(col("__toks")).as("__toks"),
-        sum(col("__chars")).as("__chars"),
-        max(col("__mx")).as("__mx"),
-        hll_union_agg(col("__fp")).as("__fp"))
-    }
-    val next = durable match {
-      case Some(d) => d.commit(merged, batchId)
-      case None => merged.localCheckpoint(true)
-    }
-    publish(next)
+  /** Sink over the `complete` output of [[partials]]: `table` is the
+    * whole per-key table as of this batch. */
+  def foreachBatch(table: DataFrame, batchId: Long): Unit = synchronized {
+    // complete output is live only inside its batch: materialize it
+    publish(table.localCheckpoint(true))
   }
 
   /** The per-key dashboard as of the last completed batch: (keyCol,
     * docs, total_tokens, total_chars, last_micros, distinct_fps,
-    * mean_tokens, mean_chars, dup_rate_est). Same validity windows as
-    * RfmLive's snapshot (in-memory: consume within one batch; durable:
-    * within keepVersions − 1 batches). */
+    * mean_tokens, mean_chars, dup_rate_est). Same validity window as
+    * RfmLive's snapshot: consume it within one batch, or `.collect()`
+    * it. */
   def snapshot: DataFrame = {
     val l = latest
     require(l != null, "CorpusStatsLive: no batch processed yet")

@@ -38,9 +38,6 @@ object Dedup {
   def minhashSignatureFromBase(baseHashes: Column, numHashes: Int): Column =
     graft.functions.VectorExprs.minhashSig(baseHashes, numHashes)
 
-  def minhashSignature(text: Column, numHashes: Int, shingleN: Int = 3): Column =
-    minhashSignatureFromBase(Shingles.hashedShingles(text, shingleN), numHashes)
-
   /** LSH banding: explode the signature into `bands` band-hashes.
     * Docs sharing any band-hash are candidates. Output: (id, band, bucket).
     * Shingle hashing is materialized as its own projection so the k

@@ -367,7 +367,8 @@ object Behavior {
 
   /** Band-scoring core of [[rfm]], shared with the live runner
     * ([[graft.streaming.BehaviorStream.RfmLive]] re-resolves the same
-    * boundaries per micro-batch): `per` is the (u, recency_days,
+    * boundaries on each micro-batch's complete per-unit table, the
+    * output of its streaming aggregation): `per` is the (u, recency_days,
     * frequency, monetary) per-unit table with `n` exact rows,
     * MATERIALIZED by the caller (persist barrier or local checkpoint —
     * [[Selection.orderStatistics]] scans it several times). Output is

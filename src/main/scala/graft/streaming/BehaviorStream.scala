@@ -56,78 +56,53 @@ object BehaviorStream {
   /** Live RFM leaderboard — the streaming boundary refresh for the
     * selection-backed banding family (VERDICT r15 #5): rfm / gains /
     * timeToConvert resolve a handful of boundary LITERALS, so a live
-    * twin needs no per-row streaming state for the banding at all —
-    * each micro-batch folds its per-unit partial aggregates into a
-    * running per-unit table (all three aggregates are mergeable: max
-    * event micros, count, exact DECIMAL spend), then re-resolves the
-    * 3·(q−1) boundaries on the refreshed table and publishes the full
-    * banded snapshot. Boundaries ride [[graft.operators.Selection]]'s
-    * aggregate-only scans (broadcast-refresh shape — a few literals,
-    * no state store), so a 100 TB live leaderboard re-resolves bands
-    * with O(kB·rounds) network per trigger.
+    * twin needs no per-row streaming state for the banding at all. The
+    * per-unit partials (max event micros, count, exact DECIMAL spend —
+    * all mergeable) are ONE grouped aggregate, [[partials]], run as a
+    * `complete`-mode streaming aggregation: Spark's state store carries
+    * the running per-unit table, and the query checkpoint gives it
+    * durability, replay and retention like every other twin. Each
+    * micro-batch's sink, [[foreachBatch]], re-resolves the 3·(q−1)
+    * boundaries on the refreshed table and publishes the full banded
+    * snapshot. Boundaries ride [[graft.operators.Selection]]'s
+    * aggregate-only scans (broadcast-refresh shape — a few literals),
+    * so a 100 TB live leaderboard re-resolves bands with O(kB·rounds)
+    * network per trigger.
     *
-    * Wire into `events.writeStream.foreachBatch(live.foreachBatch _)`;
-    * read the latest banded table from [[RfmLive.snapshot]]. The
-    * running per-unit table is local-checkpointed each batch (lineage
-    * truncation + the materialization [[Selection.orderStatistics]]
-    * needs). When the unit universe outgrows one cluster's cache (or
-    * the leaderboard must survive a restart), pass `storePath=`: the
-    * per-unit table then lives as versioned parquet under that path.
+    * Wiring:
+    * {{{
+    *   live.partials(events).writeStream.outputMode("complete")
+    *     .option("checkpointLocation", c).foreachBatch(live.foreachBatch _)
+    * }}}
+    * then read the latest banded table from [[RfmLive.snapshot]].
     *
-    * Durable-arm commit protocol (VERDICT r17 #1 — object-store-real,
-    * all I/O through the Hadoop `FileSystem` API resolved from the
-    * batch session's configuration, so `file:`/`hdfs:`/`s3a:` URIs
-    * all work): each batch reads the LATEST COMMITTED version, merges
-    * its partials, writes `v{batchId}`, then creates the single-file
-    * `_COMMITTED` marker inside it — the marker create is the commit
-    * point (no rename-overwrite, which is neither atomic nor portable
-    * on object stores; no pointer file a crash window could lose). A
-    * crash before the marker leaves the previous version committed
-    * and the batch replays; a crash AFTER the marker but before the
-    * streaming offset log advances makes Spark re-run the same
-    * batchId — the marker makes that re-run a NO-OP (the merge is
-    * skipped; the committed snapshot is re-published), so replays can
-    * never double-count (ADVICE r17). Retention: after each commit
-    * the `keepVersions` highest committed versions are kept and every
-    * older version dir (committed or crash debris) is deleted, so a
-    * long-running leaderboard holds O(keepVersions) copies, not one
-    * per batch.
-    *
-    * SINGLE-WRITER assumption: exactly one streaming query (one
-    * checkpointed writer) owns a store path — the protocol does not
-    * arbitrate concurrent writers. Restart-resume requires the
-    * batchIds to continue monotonically across restarts (i.e. the
-    * query runs with a checkpointLocation, Spark's normal
-    * foreachBatch contract); a fresh query whose batchIds restart at
-    * 0 must use a fresh store path.
-    *
-    * Parity contract (spec-pinned): because the merged per-unit
-    * aggregates are exactly the batch aggregates (decimal addition is
-    * exact and associative; max/count trivially so) and
-    * [[graft.operators.Behavior.rfmScores]] is a pure projection over
-    * the boundary literals, the snapshot after the last batch is
-    * BIT-IDENTICAL to `Behavior.rfm` over the same events. */
+    * Parity contract (spec-pinned): the per-unit aggregates are exactly
+    * the batch aggregates (decimal addition is exact and associative;
+    * max/count trivially so) and [[graft.operators.Behavior.rfmScores]]
+    * is a pure projection over the boundary literals, so the snapshot
+    * after the last batch is BIT-IDENTICAL to `Behavior.rfm` over the
+    * same events. */
   final class RfmLive(userCol: String, tsCol: String, typeCol: String,
                       valueCol: String, convType: String,
-                      nowMicros: Long, q: Int,
-                      storePath: Option[String] = None,
-                      keepVersions: Int = 3) {
+                      nowMicros: Long, q: Int) {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
 
-    // the version/commit/replay/vacuum machinery lives in the shared
-    // util (VERDICT r18 #7 — extracted when CorpusStatsLive became its
-    // second consumer); the keepVersions >= 2 floor (ADVICE r18) is
-    // enforced there
-    private val durable: Option[graft.util.DurableVersionedStore] =
-      storePath.map(p => new graft.util.DurableVersionedStore(p, keepVersions))
-
-    @volatile private var store: DataFrame = null // (u, __mx, __cnt, __sm)
     @volatile private var latest: DataFrame = null
 
-    /** Refresh the published snapshot off the new per-unit table. */
+    /** The per-unit partials (u, __mx, __cnt, __sm) of `events`, on a
+      * batch DataFrame or a stream. `__sm` is sum(decimal(18,2)), i.e.
+      * decimal(28,2) — the exact type batch rfm produces — so the live
+      * total saturates at the SAME bound as the batch arm. */
+    def partials(events: DataFrame): DataFrame =
+      events.filter(col(typeCol) === convType)
+        .groupBy(col(userCol).as("u"))
+        .agg(max(unix_micros(col(tsCol))).as("__mx"),
+          count(lit(1)).as("__cnt"),
+          sum(col(valueCol).cast("decimal(18,2)")).as("__sm"))
+
+    /** Refresh the published snapshot off the per-unit table. */
     private def publish(next: DataFrame): Unit = {
-      store = next
       val per = next.select(col("u"),
         floor((lit(nowMicros) - col("__mx")) / lit(86400000000.0)).as("recency_days"),
         col("__cnt").as("frequency"), col("__sm").cast("double").as("monetary"))
@@ -141,81 +116,22 @@ object BehaviorStream {
       graft.util.Caching.release()
     }
 
-    def foreachBatch(batch: DataFrame, batchId: Long): Unit = synchronized {
-      val spark = batch.sparkSession
-      // durable arm: replay detection FIRST — a committed version at
-      // or past this batchId means Spark is re-running a batch whose
-      // merge already committed (crash between the marker create and
-      // the offset-log advance); merging again would double-count
-      // __cnt/__sm, so re-publish the committed snapshot and stop
-      durable.foreach { d =>
-        d.replayedSnapshot(spark, batchId).foreach { committed =>
-          publish(committed)
-          return
-        }
-      }
-      val part = batch.filter(col(typeCol) === convType)
-        .groupBy(col(userCol).as("u"))
-        .agg(max(unix_micros(col(tsCol))).as("__mx"),
-          count(lit(1)).as("__cnt"),
-          sum(col(valueCol).cast("decimal(18,2)")).as("__sm"))
-      // __sm is carried at decimal(28,2) — the exact type batch rfm's
-      // sum(decimal(18,2)) produces — so the live total saturates at
-      // the SAME bound as the batch arm (a (18,2) re-cast here would
-      // null a >10^16 spend the batch arm still represents)
-      val widened = part.withColumn("__sm", col("__sm").cast("decimal(28,2)"))
-      val prev = durable match {
-        case Some(d) => d.latestCommitted(spark).map(_.select(col("u"),
-          col("__mx"), col("__cnt"),
-          col("__sm").cast("decimal(28,2)").as("__sm")))
-        case None => Option(store)
-      }
-      val merged = prev match {
-        case None => widened
-        case Some(st) => st.unionByName(widened).groupBy("u")
-          .agg(max(col("__mx")).as("__mx"), sum(col("__cnt")).as("__cnt"),
-            sum(col("__sm")).cast("decimal(28,2)").as("__sm"))
-      }
-      val next = durable match {
-        case Some(d) =>
-          // durable keyed upsert: version write + _COMMITTED marker +
-          // vacuum, all in the shared store; the returned frame reads
-          // the committed files, so cluster cache holds nothing
-          // between batches
-          d.commit(merged, batchId)
-        case None =>
-          // eager local checkpoint: truncates cross-batch lineage AND
-          // materializes the table orderStatistics scans several times;
-          // dropping the previous store reference lets the
-          // ContextCleaner evict its checkpoint blocks (no manual
-          // unpersist — a reader may still hold the previous snapshot
-          // for one batch)
-          merged.localCheckpoint(true)
-      }
-      publish(next)
+    /** Sink over the `complete` output of [[partials]]: `table` is the
+      * whole per-unit table as of this batch. */
+    def foreachBatch(table: DataFrame, batchId: Long): Unit = synchronized {
+      // complete output is live only inside its batch: the eager local
+      // checkpoint materializes it for the snapshot and for the several
+      // scans orderStatistics makes
+      publish(table.localCheckpoint(true))
     }
 
     /** The banded table as of the last completed batch.
       *
-      * Validity window (in-memory arm): the returned frame reads the
-      * CURRENT store checkpoint, and the store reference drops one
-      * batch later — so a snapshot held across TWO OR MORE subsequent
-      * batches may lose its checkpoint blocks to the ContextCleaner
-      * (ADVICE r16). Consume it within one batch, `.collect()` it, or
-      * construct the leaderboard with `storePath=`.
-      *
-      * Validity window (durable arm): the snapshot lazily reads the
-      * version committed by the last batch, and retention keeps only
-      * the `keepVersions` highest committed versions — so a held
-      * snapshot expires after `keepVersions - 1` further batches
-      * commit (its backing dir is vacuumed). Consume within that
-      * window, or materialize first (`.collect()` /
-      * `.localCheckpoint(true)`) for an unbounded hold.
-      *
-      * The durable `_COMMITTED`-marker protocol lives in the shared
-      * [[graft.util.DurableVersionedStore]] (extracted per VERDICT r18
-      * #7 when [[graft.llm.CorpusStatsLive]] became its second
-      * consumer). */
+      * Validity window: the returned frame reads the local checkpoint
+      * of the batch that published it, and a later batch replaces it —
+      * so a snapshot held across TWO OR MORE subsequent batches may lose
+      * its checkpoint blocks to the ContextCleaner (ADVICE r16). Consume
+      * it within one batch, or `.collect()` it. */
     def snapshot: DataFrame = {
       val l = latest
       require(l != null, "RfmLive: no batch processed yet")

@@ -453,13 +453,6 @@ object StatefulOps {
         } else (s, None))
   }
 
-  /** Tag + union two tick streams for the two-input scan runners. */
-  def tagUnion(ref: Dataset[TickRow], primary: Dataset[TickRow]): Dataset[TickRow2] = {
-    implicit val enc = Encoders.product[TickRow2]
-    ref.withColumn("src", lit(0)).as[TickRow2]
-      .unionByName(primary.withColumn("src", lit(1)).as[TickRow2])
-  }
-
   case class VecOut(key: String, tsMicros: Long, seq: Long, values: Seq[Double])
 
   /** csp.struct_fromts (`baselib.py:684-701`) as an N-input scan — twin of

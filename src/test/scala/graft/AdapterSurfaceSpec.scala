@@ -35,6 +35,57 @@ class AdapterSurfaceSpec extends AnyFunSuite {
     assert(back.agg(sum(col(Tick.VALUE))).head().getDouble(0) == 10.0)
   }
 
+  test("streaming rotated parquet lands the batch publish's layout and reads back equal") {
+    implicit val sq = spark.sqlContext
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val (batchDir, streamDir, ckpt) = (tmp("graft_rot_b"), tmp("graft_rot_s"), tmp("graft_rot_c"))
+    Sinks.writeParquetRotated(hours3, batchDir, rotatePeriodSec = 3600)
+    val rows = hours3.df.as[(String, java.sql.Timestamp, Long, Double)].collect().toSeq
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(String, java.sql.Timestamp, Long, Double)]
+    val ticks = mem.toDF().toDF(Tick.KEY, Tick.TS, Tick.SEQ, Tick.VALUE)
+    val q = Sinks.streamParquetRotated(ticks, streamDir, ckpt, rotatePeriodSec = 3600).start()
+    // two micro-batches, the 00:00 window's two ticks split across them
+    try Seq(rows.take(1), rows.drop(1)).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
+    finally q.stop()
+    def rotations(dir: String) = new java.io.File(dir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("rotation=")).map(_.getName).sorted.toSeq
+    assert(rotations(streamDir) == rotations(batchDir))
+    def back(dir: String) = spark.read.parquet(dir)
+      .select(Tick.KEY, Tick.TS, Tick.SEQ, Tick.VALUE, "rotation")
+      .collect().map(_.toSeq).sortBy(_(2).asInstanceOf[Long]).toSeq
+    assert(back(streamDir).size == 4 && back(streamDir) == back(batchDir))
+  }
+
+  test("printTicks shows the first n ticks in time order (csp.print)") {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Sinks.printTicks(hours3, n = 2))
+    val shown = out.toString("UTF-8")
+    assert(shown.contains("2024-01-01 00:10:00") && shown.contains("2024-01-01 00:50:00"), shown)
+    assert(!shown.contains("01:10:00") && shown.contains("only showing top 2 rows"), shown)
+  }
+
+  test("logTicks logs every tick under its tag, in time order within the key (csp.log)") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val tag = "graft.spec.logTicks"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("logTicksSpec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(tag).asInstanceOf[Logger]
+    logger.addAppender(appender)
+    logger.setLevel(Level.INFO)
+    try Sinks.logTicks(hours3, tag)
+    finally { logger.removeAppender(appender); appender.stop() }
+    val logged = seen.toArray.map(_.toString).toSeq
+    assert(logged.map(_.split(" \\| ").last.toDouble) == Seq(1.0, 2.0, 3.0, 4.0), logged)
+    assert(logged.forall(_.startsWith("k | 2024-01-01 ")), logged)
+  }
+
   test("bucketed tick store: co-located key joins run with NO shuffle exchange") {
     val ev = Sources.events(spark, TestSpark.sf).df.select("key", "ts", "seq", "value")
     val d1 = java.nio.file.Files.createTempDirectory("graft_bk1").toString

@@ -104,12 +104,12 @@ class ArchitectureSpec extends AnyFunSuite {
 
   test("Parquet is read through Sources' resolver, outside a short allowlist") {
     // a builder that read Parquet itself would list, resolve and infer its
-    // source again on every build; the allowlist is the fixture re-chunker,
-    // the tick-store round trip and the live store's versions
+    // source again on every build; the allowlist is the fixture re-chunker
+    // and the tick-store round trip
     val read = "\\bread(\\.\\w+\\([^)]*\\))*\\.parquet\\(".r
     val member = "^  (?:(?:private|override|final|protected)(?:\\[\\w+\\])? )*def (\\w+)".r
     val allowed = Set("Sources.scala:resolve", "Bench.scala:rechunkFixtures",
-      "Sinks.scala:readParquet", "DurableVersionedStore.scala:*")
+      "Sinks.scala:readParquet")
     val hits = mainSources.flatMap { file =>
       val ls = lines(file)
       ls.indices.filter(i => read.findFirstIn(ls(i)).isDefined).map { i =>

@@ -1,17 +1,20 @@
 package graft
 
+import java.sql.Timestamp
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The durable versioned store's SECOND consumer (VERDICT r18 #7 — the
-  * extraction trigger): CorpusStatsLive's per-key mergeable aggregates
-  * must replay one batch aggregate bit-for-bit on the exact columns,
-  * survive a restart from the committed store, and no-op on a replayed
-  * batchId — the same contract RfmLive pins, now through the shared
-  * `util.DurableVersionedStore`. Plus direct unit coverage of the
-  * store's own API (virgin reads, commit/replay semantics, retention
-  * with crash debris). */
+case class LiveDoc(doc_id: Long, lang: String, text: String, ts: Timestamp)
+
+/** CorpusStatsLive's per-key mergeable partials, run as a `complete`-mode
+  * streaming aggregation, must replay one batch aggregate bit-for-bit on
+  * the exact columns and keep the HLL estimate within the sketch's
+  * error — across micro-batches, and across a kill with a replayed
+  * batch, where the query checkpoint is the only carry-over. */
 class CorpusStatsLiveSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -36,25 +39,12 @@ class CorpusStatsLiveSpec extends AnyFunSuite {
         "last_micros")
       .collect().map(_.toSeq.toVector).sortBy(_.head.toString).toVector
 
-  test("in-memory arm: merged per-key aggregates == one batch aggregate; " +
-    "HLL distinct within the sketch's error of exact") {
-    val d = docs
-    val expected = batchExact(d)
+  /** HLL distinct within the sketch's error of the exact distinct count. */
+  private def assertHll(live: graft.llm.CorpusStatsLive, d: DataFrame): Unit = {
     val exactFp = d.groupBy(col("lang"))
       .agg(countDistinct(graft.llm.TextAnalysis.fingerprint(col("text")))
         .as("fp"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    val live = new graft.llm.CorpusStatsLive("lang", "text", "ts")
-    // three micro-batches by doc_id ranges (disjoint cover)
-    val n = d.count()
-    val cuts = Seq(0L -> n / 3, n / 3 -> 2 * n / 3, 2 * n / 3 -> (n + 1))
-    cuts.zipWithIndex.foreach { case ((lo, hi), i) =>
-      live.foreachBatch(d.filter(col("doc_id") >= lo && col("doc_id") < hi),
-        i.toLong)
-    }
-    assert(snapExact(live) == expected,
-      "exact columns must replay the one-shot batch aggregate bit-for-bit")
     // lgConfigK=12 → relative std error ~1.04/√4096 ≈ 1.6%; check 3σ
     live.snapshot.select("lang", "distinct_fps", "docs", "dup_rate_est")
       .collect().foreach { r =>
@@ -67,72 +57,54 @@ class CorpusStatsLiveSpec extends AnyFunSuite {
       }
   }
 
-  test("durable arm: restart resumes from the committed store; a replayed " +
-    "batchId never re-merges") {
-    val d = docs
-    val expected = batchExact(d)
-    val store = "file:" +
-      java.nio.file.Files.createTempDirectory("corpus_live").toString
-    val n = d.count()
-    val half1 = d.filter(col("doc_id") < n / 2)
-    val half2 = d.filter(col("doc_id") >= n / 2)
-
-    val live1 = new graft.llm.CorpusStatsLive("lang", "text", "ts",
-      storePath = Some(store))
-    live1.foreachBatch(half1, 0L)
-    // writer 1 discarded; writer 2 resumes off the committed version
-    val live2 = new graft.llm.CorpusStatsLive("lang", "text", "ts",
-      storePath = Some(store))
-    live2.foreachBatch(half2, 1L)
-    assert(snapExact(live2) == expected,
-      "resumed durable store + merged partials must replay the batch " +
-        "aggregate exactly")
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$store/v1/_COMMITTED")))
-    // idempotent replay: same batchId again must be a no-op merge
-    live2.foreachBatch(half2, 1L)
-    assert(snapExact(live2) == expected,
-      "a replayed batchId must re-publish, never re-merge")
+  private def liveDocs(d: DataFrame): Seq[LiveDoc] = {
+    import spark.implicits._
+    d.select("doc_id", "lang", "text", "ts").as[LiveDoc].collect().sortBy(_.doc_id).toSeq
   }
 
-  test("DurableVersionedStore API: virgin reads, commit/replay, retention " +
-    "vacuums crash debris") {
+  test("in-memory arm: merged per-key aggregates == one batch aggregate; " +
+    "HLL distinct within the sketch's error of exact") {
     import spark.implicits._
-    val path = "file:" +
-      java.nio.file.Files.createTempDirectory("dvs_unit").toString
-    val s = new graft.util.DurableVersionedStore(path, keepVersions = 2)
-    assert(s.latestCommitted(spark).isEmpty && s.committedVersions(spark).isEmpty)
-    assert(s.replayedSnapshot(spark, 0L).isEmpty)
+    implicit val sq = spark.sqlContext
+    val d = docs
+    val expected = batchExact(d)
+    val rows = liveDocs(d)
 
-    s.commit(Seq((1L, "a")).toDF("id", "v"), 0L)
-    assert(s.committedVersions(spark) == Seq(0L))
-    // replay guard fires for an already-committed id, not a future one
-    assert(s.replayedSnapshot(spark, 0L).map(_.count()) == Some(1L))
-    assert(s.replayedSnapshot(spark, 1L).isEmpty)
+    val live = new graft.llm.CorpusStatsLive("lang", "text", "ts")
+    val mem = MemoryStream[LiveDoc]
+    val ckpt = java.nio.file.Files.createTempDirectory("corpus_live").toFile
+    val q = live.partials(mem.toDF()).writeStream.outputMode("complete")
+      .option("checkpointLocation", ckpt.toString)
+      .foreachBatch(live.foreachBatch _)
+      .trigger(Trigger.ProcessingTime(0)).start()
+    // three micro-batches by doc_id ranges (disjoint cover)
+    val n = rows.size
+    try Seq(0 -> n / 3, n / 3 -> 2 * n / 3, 2 * n / 3 -> n).foreach { case (lo, hi) =>
+      mem.addData(rows.slice(lo, hi): _*); q.processAllAvailable()
+    } finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(ckpt)
+    }
+    assert(snapExact(live) == expected,
+      "exact columns must replay the one-shot batch aggregate bit-for-bit")
+    assertHll(live, d)
+  }
 
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // an uncommitted half-written version (markerless): invisible to
-    // reads now, vacuumed by the next commit whose batchId passes it
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/v50"))
-    assert(s.latestCommitted(spark).map(_.count()) == Some(1L))
-
-    (101L to 103L).foreach(b => s.commit(Seq((b, "x")).toDF("id", "v"), b))
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .map(_.getPath.getName).filter(_.startsWith("v")).sorted.toSeq
-    assert(dirs == Seq("v102", "v103"),
-      s"retention must keep exactly keepVersions=2 committed versions " +
-        s"and vacuum the v50 debris, got $dirs")
-
-    val e = intercept[IllegalArgumentException](
-      new graft.util.DurableVersionedStore(path, keepVersions = 1))
-    assert(e.getMessage.contains("at least 2"), e.getMessage)
-
-    // committing an already-committed batchId is a protocol violation
-    // (the consumer skipped the replay guard), not a silent overwrite
-    val e2 = intercept[IllegalArgumentException](
-      s.commit(Seq((9L, "y")).toDF("id", "v"), 103L))
-    assert(e2.getMessage.contains("replayedSnapshot"), e2.getMessage)
+  test("restart parity: complete-mode partials killed, replayed and resumed == " +
+    "one batch aggregate; HLL within the sketch's error") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val d = docs
+    val expected = batchExact(d)
+    val live = new graft.llm.CorpusStatsLive("lang", "text", "ts")
+    val out = RestartParity.run(liveDocs(d), seed = 81, outputMode = "complete")(
+      ds => live.partials(ds.toDF()))
+    // the last complete table holds every key: publish it through the sink
+    val last = RestartParity.lastPer(out)(_.getString(0)).values.toList
+    live.foreachBatch(spark.createDataFrame(last.asJava, out.head.schema), 0L)
+    assert(snapExact(live) == expected,
+      "partials carried through a kill and a replayed batch must replay the " +
+        "one-shot batch aggregate bit-for-bit")
+    assertHll(live, d)
   }
 }

@@ -12,19 +12,25 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * that promise: [[run]] feeds a twin its input in micro-batches cut at
   * seeded positions, stops the query at seeded kill points, restarts it
   * from its checkpoint (committed offsets + RocksDB state) and returns
-  * everything it emitted, for the caller to compare with the batch arm. */
+  * everything it emitted, for the caller to compare with the batch arm.
+  * At the first kill it also drops the newest commit, so the restarted
+  * query replays that batch as it would after a crash between the
+  * batch's state commit and its commit-log entry. */
 object RestartParity {
 
   /** Run `twin` over `rows` — already in the twin's fold order — as
     * `batches` micro-batches whose cut points are drawn from `seed`.
     * After `kills` seeded batches (never the last) the query stops, the
     * next batch is added while it is down, and a new query resumes from
-    * the same checkpoint. Returns every emitted row, batch by batch in
-    * emission order; a batch that a restart replays replaces its first
-    * delivery, as an idempotent sink keyed by batch id would.
-    * `killAt` names the kill points (batch indices) instead of drawing
-    * them; `onRestart` runs on the checkpoint directory while the query is
-    * down, before it resumes. */
+    * the same checkpoint. At the first kill the newest `commits/<n>` is
+    * deleted, so the resumed query runs batch n again before the new
+    * data; the run fails unless some batch id was delivered twice.
+    * Returns every emitted row, batch by batch in emission order; a
+    * batch that a restart replays replaces its first delivery, as an
+    * idempotent sink keyed by batch id would. `killAt` names the kill
+    * points (batch indices) instead of drawing them; `onRestart` runs on
+    * the checkpoint directory while the query is down, after the commit
+    * is dropped and before the query resumes. */
   def run[I: Encoder, O](rows: Seq[I], seed: Long, outputMode: String = "append",
                          batches: Int = 6, kills: Int = 2, killAt: Set[Int] = Set.empty,
                          onRestart: java.io.File => Unit = _ => ())(
@@ -33,11 +39,12 @@ object RestartParity {
     val (cuts, killAfter) = plan(rows.size, seed, batches, kills, killAt)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-restart").toFile
     val emitted = mutable.TreeMap.empty[Long, Seq[O]]
+    val deliveries = mutable.Map.empty[Long, Int].withDefaultValue(0)
     val mem = MemoryStream[I]
     def start(): StreamingQuery = twin(mem.toDS()).writeStream.outputMode(outputMode)
       .foreachBatch { (ds: Dataset[O], id: Long) =>
         val got = ds.collect().toSeq
-        emitted.synchronized { emitted(id) = got }; ()
+        emitted.synchronized { emitted(id) = got; deliveries(id) += 1 }; ()
       }
       .option("checkpointLocation", ckpt.toString)
       .trigger(Trigger.ProcessingTime(0)).start()
@@ -47,13 +54,29 @@ object RestartParity {
         mem.addData(rows.slice(lo, hi): _*)
         if (q == null) q = start() // resume from the checkpoint
         q.processAllAvailable()
-        if (killAfter(i)) { q.stop(); q = null; onRestart(ckpt) }
+        if (killAfter(i)) {
+          q.stop(); q = null
+          if (i == killAfter.min) dropNewestCommit(ckpt)
+          onRestart(ckpt)
+        }
       }
     } finally {
       if (q != null) q.stop()
       org.apache.commons.io.FileUtils.deleteQuietly(ckpt)
     }
-    emitted.synchronized(emitted.values.flatten.toList)
+    emitted.synchronized {
+      assert(deliveries.values.exists(_ > 1),
+        s"no batch was replayed: deliveries per batch id ${deliveries.toSeq.sorted}")
+      emitted.values.flatten.toList
+    }
+  }
+
+  /** Delete the newest `commits/<n>` (and a checksum sibling beside it),
+    * so a query resumed from `ckpt` runs batch n again. */
+  private def dropNewestCommit(ckpt: java.io.File): Unit = {
+    val dir = new java.io.File(ckpt, "commits")
+    val newest = dir.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    Seq(s"$newest", s".$newest.crc").foreach(f => new java.io.File(dir, f).delete())
   }
 
   /** The cut points (row offsets, first 0 and last `size`) and the kill

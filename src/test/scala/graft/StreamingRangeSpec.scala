@@ -90,122 +90,78 @@ class StreamingRangeSpec extends AnyFunSuite {
     }
   }
 
-  test("RfmLive boundary refresh: streamed snapshot == batch Behavior.rfm, bit-identical") {
+  /** Run `body` against a live `complete`-mode query over `live`'s
+    * partials whose sink is `live.foreachBatch`; `body`'s argument adds
+    * one micro-batch and waits for it. */
+  private def withRfmQuery(live: graft.streaming.BehaviorStream.RfmLive)(
+      body: (Seq[RfmRow] => Unit) => Unit): Unit = {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val evd = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    val now = 1706745600000000L
-    def canon(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(_.toSeq.toVector).sortBy(_.head.asInstanceOf[Long]).toVector
-    val batch = canon(graft.operators.Behavior
+    val mem = MemoryStream[RfmRow]
+    val ckpt = java.nio.file.Files.createTempDirectory("rfm_live").toFile
+    val q = live.partials(mem.toDF()).writeStream.outputMode("complete")
+      .option("checkpointLocation", ckpt.toString)
+      .foreachBatch(live.foreachBatch _)
+      .trigger(Trigger.ProcessingTime(0)).start()
+    try body { c => mem.addData(c: _*); q.processAllAvailable() }
+    finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(ckpt)
+    }
+  }
+
+  private def rfmBatch(evd: org.apache.spark.sql.DataFrame, now: Long) = {
+    val batch = canonRfm(graft.operators.Behavior
       .rfm(evd, "user_id", "ts", "event_type", "value", "purchase", now, 5).collect())
     graft.util.Caching.release()
+    batch
+  }
 
-    // same events in ts order, three micro-batches: each batch folds its
-    // per-unit partials into the running store and re-resolves the band
-    // boundaries (a handful of literals - no streaming state)
+  private def canonRfm(rows: Array[org.apache.spark.sql.Row]) =
+    rows.map(_.toSeq.toVector).sortBy(_.head.asInstanceOf[Long]).toVector
+
+  test("RfmLive boundary refresh: streamed snapshot == batch Behavior.rfm, bit-identical") {
+    import spark.implicits._
+    val evd = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val now = 1706745600000000L
+    val batch = rfmBatch(evd, now)
+
+    // same events in ts order, three micro-batches: the state store
+    // carries the per-unit partials and each batch's sink re-resolves
+    // the band boundaries (a handful of literals)
     val rows = evd.select("user_id", "ts", "event_type", "value")
       .as[RfmRow].collect().sortBy(_.ts.getTime)
     val live = new graft.streaming.BehaviorStream.RfmLive(
       "user_id", "ts", "event_type", "value", "purchase", now, 5)
-    val mem = MemoryStream[RfmRow]
-    val q = mem.toDF().writeStream.foreachBatch(live.foreachBatch _)
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      rows.grouped(rows.length / 3 + 1).foreach { c =>
-        mem.addData(c.toIndexedSeq: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    assert(canon(live.snapshot.collect()) == batch,
+    withRfmQuery(live)(feed => rows.grouped(rows.length / 3 + 1).foreach(c => feed(c.toSeq)))
+    assert(canonRfm(live.snapshot.collect()) == batch,
       "merged per-unit aggregates + re-resolved boundaries must replay batch rfm exactly")
     graft.util.Caching.release()
   }
 
-  test("RfmLive durable arm: parquet store replays the in-memory arm and survives a restart") {
+  test("RfmLive restart parity: complete-mode partials killed, replayed and resumed " +
+    "== batch Behavior.rfm, bit-identical") {
     import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val evd = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    import scala.jdk.CollectionConverters._
+    val evd = spark.read.parquet(s"${TestSpark.sf}/events.parquet")
     val now = 1706745600000000L
-    def canon(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(_.toSeq.toVector).sortBy(_.head.asInstanceOf[Long]).toVector
-    val batch = canon(graft.operators.Behavior
-      .rfm(evd, "user_id", "ts", "event_type", "value", "purchase", now, 5).collect())
-    graft.util.Caching.release()
+    val batch = rfmBatch(evd, now)
 
-    // a file: URI exercised THROUGH the Hadoop FileSystem API — the
-    // same code path an hdfs:/s3a: store takes (VERDICT r17 #1)
-    val store = "file:" +
-      java.nio.file.Files.createTempDirectory("rfm_store").toString
     val rows = evd.select("user_id", "ts", "event_type", "value")
-      .as[RfmRow].collect().sortBy(_.ts.getTime)
-    val halves = rows.grouped(rows.length / 2 + 1).toSeq
-    def asDf(c: Seq[RfmRow]) = c.toDF()
-
-    // writer 1 commits batch 0, then is DISCARDED — the committed
-    // version under the store is the only carry-over; writer 2 resumes
-    // with the NEXT batchId (monotone ids across restarts: the
-    // checkpointed-query contract the scaladoc states)
-    val live1 = new graft.streaming.BehaviorStream.RfmLive(
-      "user_id", "ts", "event_type", "value", "purchase", now, 5,
-      storePath = Some(store))
-    live1.foreachBatch(asDf(halves.head), 0L)
-    val live2 = new graft.streaming.BehaviorStream.RfmLive(
-      "user_id", "ts", "event_type", "value", "purchase", now, 5,
-      storePath = Some(store))
-    live2.foreachBatch(asDf(halves(1)), 1L)
-
-    assert(canon(live2.snapshot.collect()) == batch,
-      "resumed durable store + merged partials must replay batch rfm exactly")
-    // the committed store is versioned parquet with a _COMMITTED marker
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$store/v1/_COMMITTED")))
-    assert(spark.read.parquet(s"$store/v1").count() > 0)
-
-    // idempotent replay (ADVICE r17): re-running an already-committed
-    // batchId must NOT merge again — counts stay put, snapshot intact
-    live2.foreachBatch(asDf(halves(1)), 1L)
-    assert(canon(live2.snapshot.collect()) == batch,
-      "a replayed batchId must be a no-op merge, not a double-count")
-    graft.util.Caching.release()
-  }
-
-  test("RfmLive durable arm: retention keeps K versions; crash debris is vacuumed") {
-    import spark.implicits._
-    val store = "file:" +
-      java.nio.file.Files.createTempDirectory("rfm_ret").toString
+      .as[RfmRow].collect().sortBy(_.ts.getTime).toSeq
     val live = new graft.streaming.BehaviorStream.RfmLive(
-      "user_id", "ts", "event_type", "value", "buy", 1706745600000000L, 5,
-      storePath = Some(store), keepVersions = 2)
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    (0 until 8).foreach { b =>
-      // an UNCOMMITTED half-written version must never be read as the
-      // store and must be vacuumed by the next commit
-      if (b == 4) fs.mkdirs(new org.apache.hadoop.fs.Path(s"$store/v3999"))
-      val df = Seq(RfmRow(b.toLong % 3, new Timestamp(1700000000000L + b), "buy", 2.0))
-        .toDF()
-      live.foreachBatch(df, 4000L + b)
-    }
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-      .map(_.getPath.getName).filter(_.startsWith("v")).sorted.toSeq
-    assert(dirs == Seq("v4006", "v4007"),
-      s"retention must keep exactly keepVersions=2 committed versions, got $dirs")
-    // every event landed exactly once despite the vacuuming
-    assert(live.snapshot.agg(sum(col("frequency"))).head.getLong(0) == 8L)
+      "user_id", "ts", "event_type", "value", "purchase", now, 5)
+    val out = RestartParity.run(rows, seed = 124, outputMode = "complete")(
+      ds => live.partials(ds.toDF()))
+    // the last complete table holds every unit: publish it through the sink
+    val last = RestartParity.lastPer(out)(_.getLong(0)).values.toList
+    live.foreachBatch(spark.createDataFrame(last.asJava, out.head.schema), 0L)
+    assert(canonRfm(live.snapshot.collect()) == batch,
+      "partials carried through a kill and a replayed batch must replay batch rfm exactly")
     graft.util.Caching.release()
-    // keepVersions = 1 would let the NEXT batch's vacuum delete the
-    // version the published snapshot lazily reads (ADVICE r18) — floor 2
-    val e = intercept[IllegalArgumentException](
-      new graft.streaming.BehaviorStream.RfmLive(
-        "user_id", "ts", "event_type", "value", "buy", 0L, 5,
-        storePath = Some(store), keepVersions = 1))
-    assert(e.getMessage.contains("at least 2"), e.getMessage)
   }
 
   test("RfmLive: boundary re-resolve releases its stream-thread barriers") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
     // enough DISTINCT units that the second batch's per-unit table
     // passes orderStatistics' fast path (200k) and the local rank arm
     // registers persist barriers ON THE STREAM THREAD — the leak class
@@ -216,18 +172,15 @@ class StreamingRangeSpec extends AnyFunSuite {
       RfmRow(i.toLong, new Timestamp(1700000000000L + i), "buy", 1.0))
     val live = new graft.streaming.BehaviorStream.RfmLive(
       "user_id", "ts", "event_type", "value", "buy", 1706745600000000L, 5)
-    val mem = MemoryStream[RfmRow]
-    val q = mem.toDF().writeStream.foreachBatch(live.foreachBatch _)
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      mem.addData(wave(0, 105000).toIndexedSeq: _*); q.processAllAvailable()
+    withRfmQuery(live) { feed =>
+      feed(wave(0, 105000))
       val after1 = spark.sparkContext.getPersistentRDDs.size
-      mem.addData(wave(105000, 210000).toIndexedSeq: _*); q.processAllAvailable()
+      feed(wave(105000, 210000))
       val after2 = spark.sparkContext.getPersistentRDDs.size
       assert(after2 - after1 <= 2,
         s"RfmLive grew persistent RDDs $after1 -> $after2 in one rank-arm batch")
       assert(live.snapshot.count() == 210000L)
-    } finally q.stop()
+    }
   }
 
   test("session_window streaming == batch Sessionize on fixture events") {
